@@ -29,6 +29,12 @@ def md5_long_sql(expr: str) -> str:
     return f"CAST('0x' || SUBSTR(MD5({expr}), 1, 15) AS BIGINT)"
 
 
+def md5_long_spark_sql(expr: str) -> str:
+    """Spark SQL rendering of md5_long over an expression string, for
+    plans built from one parsed SQL string instead of chained Columns."""
+    return f"CAST(CONV(SUBSTR(MD5({expr}), 1, 15), 16, 10) AS BIGINT)"
+
+
 def _perm_constants(n_perm: int, seed: int = 42) -> list[tuple[int, int]]:
     """Fixed (a, b) pairs < p for the permutation family. Deterministic:
     generated by iterating a splitmix-style LCG from the seed (no runtime

@@ -15,11 +15,7 @@ the hot path, so every stage is Catalyst-optimized and shuffle-explicit):
                 has guaranteed recall), then exact hamming filter.
 
 All hashes derive from md5 (functions/hashing.py) so a SQL oracle can
-reproduce results bit-for-bit. When oracle parity is not needed, pass
-`production_hash=True` (where offered) to hash shingles with Spark's
-native xxhash64 instead — identical pair sets (hash choice only affects
-bucketing, and 60-64-bit collisions are negligible at corpus scale;
-equality pinned by test) at a fraction of the hashing cost.
+reproduce results bit-for-bit.
 """
 
 from __future__ import annotations
@@ -32,6 +28,7 @@ from dsacord_spark.functions.hashing import (
     SCRAMBLE_MULT as _BAND_SCRAMBLE_MULT,
     _perm_constants,
     md5_long,
+    md5_long_spark_sql,
     perm_hash,
 )
 from dsacord_spark.functions.text import tokens, word_ngrams
@@ -150,13 +147,7 @@ def _exploded_ngrams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataF
     )
 
 
-def _shingle_frame(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    production_hash: bool = False,
-) -> DataFrame:
+def _shingle_frame(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(doc, hg): the inverted shingle index with 60-bit hashed shingles,
     unpersisted (see _shingle_index / build_shingle_index for the two
     materialization forms).
@@ -171,25 +162,18 @@ def _shingle_frame(
     ngrams = F.array_distinct(
         F.transform(offsets, lambda i: F.concat_ws(" ", F.slice(F.col("t"), i, n)))
     )
-    hasher = F.xxhash64 if production_hash else md5_long
     return (
         tk.select("doc", F.explode(ngrams).alias("ng"))
-        .select("doc", hasher(F.col("ng")).alias("hg"))
+        .select("doc", md5_long(F.col("ng")).alias("hg"))
     )
 
 
-def _shingle_index(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    production_hash: bool = False,
-) -> DataFrame:
+def _shingle_index(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """The session-cache form of the shingle index: persisted — it is
     reused 2-3x per pair query (sizes + both join sides), and joining on
     a long beats joining on the shingle string ~2x. At 100 TB use
     build_shingle_index instead (write once, bucketed by hg)."""
-    return _shingle_frame(df, id_col, text_col, n, production_hash).persist()
+    return _shingle_frame(df, id_col, text_col, n).persist()
 
 
 def build_shingle_index(
@@ -200,7 +184,6 @@ def build_shingle_index(
     table_name: str,
     path: str | None = None,
     buckets: int = 16,
-    production_hash: bool = False,
 ) -> None:
     """Materialize the shingle index as an hg-bucketed, hg-sorted table —
     the write-once production form of _shingle_index's session cache.
@@ -211,7 +194,7 @@ def build_shingle_index(
     pre-sorted buckets: ZERO Exchange below the join, at any corpus size.
     Build once per corpus snapshot, amortize across every pair query."""
     writer = (
-        _shingle_frame(df, id_col, text_col, n, production_hash)
+        _shingle_frame(df, id_col, text_col, n)
         .write.mode("overwrite")
         .format("parquet")
         .bucketBy(buckets, "hg")
@@ -238,7 +221,6 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.5,
-    production_hash: bool = False,
 ) -> DataFrame:
     """EXACT n-gram Jaccard pairs at >= threshold, via prefix filtering
     (the All-Pairs family, Bayardo et al., WWW'07): only each doc's
@@ -264,7 +246,7 @@ def ngram_jaccard_pairs(
     exact, so the route never changes the answer. The MinHash variant
     below stays the preferred path when even exact verification is too
     much."""
-    ngr = _shingle_index(df, id_col, text_col, n, production_hash=production_hash)
+    ngr = _shingle_index(df, id_col, text_col, n)
     dfreq = ngr.groupBy("hg").agg(F.count(F.lit(1)).alias("dfreq"))
     stats = dfreq.agg(
         F.sum(F.col("dfreq") * F.col("dfreq")).alias("exp2"),
@@ -405,28 +387,35 @@ def minhash_bands(sig: DataFrame, n_perm: int, bands: int) -> DataFrame:
     reports-layer calibration / bucket-load entries all call it, and the
     oracle SQL mirrors it via _minhash_band_rows_sql interpolation
     (plans/reports.py); a second copy would silently break lockstep."""
+    return sig.select(
+        F.col("doc"),
+        F.explode(F.expr(_minhash_band_structs_sql(n_perm, bands))).alias("b"),
+    ).select("doc", "b.band_idx", "b.band_hash")
+
+
+def _minhash_band_structs_sql(n_perm: int, bands: int) -> str:
+    """The band-struct array of minhash_bands as ONE SQL expression
+    string (r13 driver-side cost fix, guide §7.3 — ~1 py4j call instead
+    of ~12 per band). Each struct is the md5_long of the same
+    concat_ws(',', band_idx, m...) the historical Column form built:
+    integer args to concat_ws implicitly render to the same decimal
+    strings on both paths, so band hashes — and the
+    _minhash_band_rows_sql oracle lockstep — are bit-identical."""
     rows_per_band = n_perm // bands
-    # One SQL expression string for the whole band-struct array (r13
-    # driver-side cost fix, guide §7.3 — ~1 py4j call instead of
-    # ~12 per band). Each struct is the md5_long of the same
-    # concat_ws(',', band_idx, m...) the historical Column form built:
-    # integer args to concat_ws implicitly render to the same decimal
-    # strings on both paths, and CONV(SUBSTR(MD5 .. is md5_long's own
-    # definition (functions/hashing.py header), so band hashes — and
-    # the _minhash_band_rows_sql oracle lockstep — are bit-identical.
     band_structs = ", ".join(
         f"struct({j} AS band_idx, "
-        "CAST(CONV(SUBSTR(MD5(concat_ws(',', "
-        + ", ".join(
-            [str(j)]
-            + [f"m{j * rows_per_band + r}" for r in range(rows_per_band)]
+        + md5_long_spark_sql(
+            "concat_ws(',', "
+            + ", ".join(
+                [str(j)]
+                + [f"m{j * rows_per_band + r}" for r in range(rows_per_band)]
+            )
+            + ")"
         )
-        + ")), 1, 15), 16, 10) AS BIGINT) AS band_hash)"
+        + " AS band_hash)"
         for j in range(bands)
     )
-    return sig.select(
-        F.col("doc"), F.explode(F.expr(f"array({band_structs})")).alias("b")
-    ).select("doc", "b.band_idx", "b.band_hash")
+    return f"array({band_structs})"
 
 
 def _jaccard_verify(
@@ -653,40 +642,30 @@ def simhash_pairs(
     )
 
 
-def duplicate_components(
-    pairs: DataFrame, max_iter: int = 30, algorithm: str = "auto"
-) -> DataFrame:
+def duplicate_components(pairs: DataFrame) -> DataFrame:
     """Connected components over an undirected duplicate-pair edge list
     (doc_a, doc_b) -> one row per node: (doc_id, cluster_id) where
     cluster_id is the smallest doc id in the node's component. This is the
     step that turns pairwise near-dup evidence into dedup decisions (keep
     one canonical doc per cluster).
 
-    Algorithm (`algorithm="auto"`, the default): min-label propagation to
-    a fixpoint — each round every node takes the min of its own label and
-    its neighbors' labels (one shuffle join + one partial-aggregated
-    groupBy per round), converging in O(component diameter) rounds.
-    Near-dup components are dense and shallow (they come from banded/
-    bucketed candidate generation), so the diameter is small in practice
-    and propagation is the cheapest loop (one join per round);
-    `localCheckpoint` truncates the lineage each round so the plan stays
-    flat. At 100 TB the same loop runs with the edge list bucketed by
-    src. When the diameter budget runs out anyway — an adversarial chain
-    graph where each doc is a near-dup of only the next — "auto" falls
-    back to large-star/small-star (Kiveris et al., "Connected Components
-    in MapReduce and Beyond", 2014), which contracts components in
-    O(log n) rounds regardless of diameter, so a 1M-link chain costs ~20
-    rounds instead of an impossible 1M. `algorithm="star"` skips the
-    propagation attempt and runs large-star/small-star directly;
-    `algorithm="propagate"` keeps the historical raise-on-budget
-    behavior (RuntimeError rather than a wrong answer)."""
-    if algorithm not in ("auto", "propagate", "star"):
-        # fail at the call, not 30 rounds later: an unrecognized string
-        # would otherwise silently run the propagate path (r7 review)
-        raise ValueError(
-            f"unknown algorithm {algorithm!r}; use 'auto', 'propagate' "
-            "or 'star'"
-        )
+    The route is picked from the measured edge count. Up to 200k
+    symmetric edges, union-find on the driver. Above that, min-label
+    propagation to a fixpoint — each round every node takes the min of
+    its own label and its neighbors' labels (one shuffle join + one
+    partial-aggregated groupBy per round), converging in O(component
+    diameter) rounds. Near-dup components are dense and shallow (they
+    come from banded/bucketed candidate generation), so the diameter is
+    small in practice and propagation is the cheapest loop (one join per
+    round; measured 2-4x faster than star contraction on shallow graphs
+    above the cap); `localCheckpoint` truncates the lineage each round so
+    the plan stays flat. At 100 TB the same loop runs with the edge list
+    bucketed by src. When the 30-round diameter budget runs out anyway —
+    an adversarial chain graph where each doc is a near-dup of only the
+    next — the loop falls back to large-star/small-star (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", 2014), which
+    contracts components in O(log n) rounds regardless of diameter, so a
+    1M-link chain costs ~20 rounds instead of an impossible 1M."""
     # persist the DIRECTED edges before symmetrizing: union(e, swap(e))
     # evaluates its input twice, and the input here is the whole pair-
     # generation pipeline (measured ~2x the query without this persist)
@@ -723,25 +702,19 @@ def duplicate_components(
     loop_parts = max(1, min(int(prev_parts), n_edges // 500_000 + 1))
     spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
     try:
-        return _distributed_components(sym, max_iter, algorithm)
+        return _distributed_components(sym)
     finally:
         sym.unpersist()
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
-def _distributed_components(
-    sym: DataFrame, max_iter: int, algorithm: str
-) -> DataFrame:
-    """Dispatch the distributed loop: propagation first under "auto"
-    (cheapest on the dense/shallow graphs banded candidates produce),
-    large-star/small-star on budget exhaustion or by request."""
-    if algorithm == "star":
-        return _large_small_star(sym)
+def _distributed_components(sym: DataFrame) -> DataFrame:
+    """The distributed loop: propagation first (cheapest on the dense/
+    shallow graphs banded candidates produce), large-star/small-star when
+    the propagation budget runs out."""
     try:
-        return _propagate_min_labels(sym, max_iter)
+        return _propagate_min_labels(sym, max_iter=30)
     except RuntimeError:
-        if algorithm != "auto":
-            raise
         # diameter exceeded the propagation budget: an adversarial
         # chain-like graph. sym is still persisted (the propagation
         # loop no longer unpersists — see its docstring), so the
@@ -1231,7 +1204,6 @@ def hash_cluster_assignments(
     radius: int = 3,
     hash_bits: int = 64,
     bucket_cap: int | None = None,
-    max_iter: int = 30,
 ) -> DataFrame:
     """CLUSTER-MODE output for fingerprint dedup: one row PER ITEM —
     (media_id, cluster_id, canonical_id) — instead of the C(K,2)
@@ -1250,8 +1222,9 @@ def hash_cluster_assignments(
       1. DISTINCT hashes -> banded_hash_pairs: HASH-level near-dup
          pairs (bounded by distinct-hash candidates, same knobs as the
          pair path: n_bands/radius/hash_bits/bucket_cap);
-      2. duplicate_components over those HASH pairs (auto propagation
-         with the large-star/small-star fallback) — components of the
+      2. duplicate_components over those HASH pairs (its edge-count
+         route: driver union-find, or distributed propagation with the
+         large-star/small-star fallback) — components of the
          hash graph expand to exactly the member-level components,
          because every hash node carries >= 1 member and equal-hash
          members share a node;
@@ -1284,8 +1257,7 @@ def hash_cluster_assignments(
     uniq = hmin.select("_h")
     hpairs = banded_hash_pairs(uniq, "_h", n_bands, radius, hash_bits, bucket_cap)
     hcomp = duplicate_components(
-        hpairs.select(F.col("_ha").alias("doc_a"), F.col("_hb").alias("doc_b")),
-        max_iter,
+        hpairs.select(F.col("_ha").alias("doc_a"), F.col("_hb").alias("doc_b"))
     ).select(F.col("doc_id").alias("_h"), F.col("cluster_id").alias("_hlab"))
     hlab = hmin.join(hcomp, "_h", "left").select(
         "_h", "_hm", F.coalesce(F.col("_hlab"), F.col("_h")).alias("_hlab")

@@ -188,9 +188,10 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Connected-components duplicate clustering: pairwise near-dup evidence
 # (trigram-Jaccard >= 0.5, same edge set as dedup_ngram_jaccard) collapsed
-# into clusters; cluster_id = min doc id of the component. Spark runs a
-# converging min-label-propagation join loop (see operators/dedup.py);
-# the oracle computes the same fixpoint with a recursive CTE. This is the
+# into clusters; cluster_id = min doc id of the component. Spark picks
+# driver union-find or a distributed min-label-propagation loop by edge
+# count (see operators/dedup.py::duplicate_components); the oracle
+# computes the same fixpoint with a recursive CTE. This is the
 # step a real pipeline runs between "find near-dup pairs" and "keep one
 # canonical document per cluster".
 # ---------------------------------------------------------------------------

@@ -69,7 +69,7 @@ def register(name: str, sql: str | None, doc: str = ""):
             # @register and its intended function shows up as a wrong
             # arity here (shipped once in round 2: the registered entry
             # silently became a 1-arg centroid helper). Optional knobs
-            # with defaults (production_hash=...) and *args wrappers are
+            # with defaults (threshold=...) and *args wrappers are
             # valid registrants and must not trip the guard.
             raise ValueError(
                 f"{name!r} must register a (spark, sf_dir) callable; "

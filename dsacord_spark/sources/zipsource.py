@@ -14,11 +14,12 @@ design instead:
   per inner file — streaming per entry, never holding the whole expansion
   (Q7 divergence: we keep only one entry's bytes at a time).
 - CSV parsing happens in the same pass, Arrow-native: pyarrow's CSV
-  reader emits record batches straight to the JVM (S5 semantics: ragged
-  rows tolerated, missing columns -> '', utils.go:161,167-191, via
-  pandas/row-parser fallback tiers), with the 36 wire columns as
-  strings. Typed decoding stays in Spark columns (transform.py) so F1-F5
-  remain Catalyst expressions.
+  reader emits record batches straight to the JVM, with the 36 wire
+  columns as strings. Members it rejects (ragged rows, invalid UTF-8)
+  or whose header repeats a name go to one row parser with the
+  reference's S5 semantics (ragged rows tolerated, blank lines skipped,
+  missing columns -> '', utils.go:161,167-191). Typed decoding stays in
+  Spark columns (transform.py) so F1-F5 remain Catalyst expressions.
 
 At 100 TB: binaryFile scan over dt=YYYY-MM-DD partitions gives partition
 pruning by date; maxFilesPerTrigger bounds a streaming backfill; one task
@@ -34,16 +35,19 @@ import tempfile
 import zipfile
 from collections.abc import Iterator
 
-import pandas as pd
-
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyarrow import csv as pa_csv
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from dsacord_spark.schema import CSV_COLUMNS
 
 # wire schema for the extraction output: all strings + provenance
 EXTRACT_SCHEMA = (
     ", ".join(f"{c} string" for c in CSV_COLUMNS) + ", _source_file string"
+)
+WIRE_SCHEMA = pa.schema(
+    [pa.field(c, pa.string()) for c in CSV_COLUMNS + ["_source_file"]]
 )
 
 
@@ -83,101 +87,54 @@ def _iter_csv_members(data: bytes, name: str) -> Iterator[tuple[str, bytes]]:
                 yield f"{name}!{info.filename}", zf.read(info)
 
 
-def _parse_csv_rows(raw: bytes, source: str) -> Iterator[dict]:
-    """Row-at-a-time fallback parse for ragged files (utils.go:159-191
-    semantics: FieldsPerRecord=-1 — rows longer than the header are legal):
-    missing column or short row -> '' exactly like the reference's get
-    closure (utils.go:185-191); extra columns ignored."""
-    text = raw.decode("utf-8", errors="replace")
-    reader = csv.reader(io.StringIO(text))
-    try:
-        header = next(reader)
-    except StopIteration:
-        return
+def _wire_table(columns: list, n: int, source: str) -> pa.Table:
+    """Wire-schema table from one array-like per CSV_COLUMNS entry (None
+    for a column the member lacks -> '' like the get closure)."""
+
+    def const(value: str):
+        return pc.fill_null(pa.nulls(n, pa.string()), value)
+
+    arrays = [const("") if c is None else c for c in columns]
+    arrays.append(const(source))
+    return pa.Table.from_arrays(arrays, schema=WIRE_SCHEMA)
+
+
+def _parse_csv_rows(raw: bytes, source: str) -> pa.Table | None:
+    """Row-at-a-time parse with the reference's reader semantics
+    (utils.go:159-191: encoding/csv with FieldsPerRecord=-1 — rows longer
+    than the header are legal — and blank lines skipped): a header map
+    built last-wins over duplicate names, missing column or short row ->
+    '' exactly like the get closure (utils.go:185-191), extra fields
+    ignored. Invalid UTF-8 decodes with U+FFFD replacement. Returns None
+    for a member with no data rows."""
+    reader = csv.reader(io.StringIO(raw.decode("utf-8-sig", errors="replace")))
+    header = next(reader, None)
+    if header is None:
+        return None
     index = {name: i for i, name in enumerate(header)}
-    for rec in reader:
-        row = {}
-        for col in CSV_COLUMNS:
-            i = index.get(col)
-            row[col] = rec[i] if i is not None and i < len(rec) else ""
-        row["_source_file"] = source
-        yield row
-
-
-def _parse_csv_frame(raw: bytes, source: str) -> pd.DataFrame:
-    """Vectorized header-mapped parse, three tiers by speed: pyarrow's
-    multithreaded CSV reader (measured 1.5x pandas' C engine on the wire
-    shape: 173ms vs 260ms per 50k-row member, identical output), then
-    pandas' C engine, then the row-at-a-time parser. The faster tiers
-    reject ragged rows (wider than the header), which the reference
-    tolerates (FieldsPerRecord=-1, utils.go:161), so each parse error
-    falls through to the next tier. Semantics match the get-closure
-    (utils.go:185-191) exactly: present-but-empty cell, short row, and
-    absent column all -> ''; extra columns ignored."""
-    import pyarrow as pa
-    from pyarrow import csv as pa_csv
-
-    try:
-        t = pa_csv.read_csv(
-            io.BytesIO(raw),
-            convert_options=pa_csv.ConvertOptions(
-                column_types={c: pa.string() for c in CSV_COLUMNS}
-            ),
-            parse_options=pa_csv.ParseOptions(newlines_in_values=True),
-        )
-        pdf = t.to_pandas()
-    except pa.ArrowException:
-        try:
-            pdf = pd.read_csv(
-                io.BytesIO(raw),
-                dtype=str,
-                keep_default_na=False,
-                na_values=[],
-                encoding="utf-8",
-                encoding_errors="replace",
+    recs = [rec for rec in reader if rec]
+    if not recs:
+        return None
+    columns = []
+    for c in CSV_COLUMNS:
+        i = index.get(c)
+        columns.append(
+            None
+            if i is None
+            else pa.array(
+                [rec[i] if i < len(rec) else "" for rec in recs], pa.string()
             )
-        except (pd.errors.ParserError, pd.errors.EmptyDataError, ValueError):
-            return pd.DataFrame(
-                list(_parse_csv_rows(raw, source)),
-                columns=CSV_COLUMNS + ["_source_file"],
-            )
-    if not pdf.columns.is_unique:
-        # duplicate header names: reindex would raise; the row parser's
-        # first-wins header map handles them (matching the reference's
-        # name->index map, utils.go:167-170)
-        return pd.DataFrame(
-            list(_parse_csv_rows(raw, source)),
-            columns=CSV_COLUMNS + ["_source_file"],
         )
-    pdf = pdf.reindex(columns=CSV_COLUMNS).fillna("")
-    pdf["_source_file"] = source
-    return pdf
+    return _wire_table(columns, len(recs), source)
 
 
-def _member_arrow_table(csv_bytes: bytes, source: str):
-    """Arrow-native member parse: pyarrow CSV straight to a wire-schema
-    pa.Table, no pandas object strings in the hot tier (the pandas
-    round-trip — Arrow -> object dtype -> Arrow — was measured as the
-    dominant map-side cost at sf0.1: ~3.4s wall vs ~0.5s of actual
-    parse). Falls back to the pandas tiers (_parse_csv_frame) for
-    ragged/duplicate-header/corrupt members, then converts once."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    from pyarrow import csv as pa_csv
-
-    target = pa.schema(
-        [pa.field(c, pa.string()) for c in CSV_COLUMNS]
-        + [pa.field("_source_file", pa.string())]
-    )
-
-    def _fallback():
-        pdf = _parse_csv_frame(csv_bytes, source)
-        if pdf.empty:
-            return None
-        return pa.Table.from_pandas(
-            pdf, schema=target, preserve_index=False
-        )
-
+def _member_arrow_table(csv_bytes: bytes, source: str) -> pa.Table | None:
+    """Arrow-native member parse: pyarrow's multithreaded CSV reader
+    straight to a wire-schema pa.Table. Members pyarrow rejects but the
+    reference's reader accepts (ragged rows, invalid UTF-8), and members
+    whose header repeats a name, go to the row parser (_parse_csv_rows),
+    which has the reference's semantics. Returns None for a member with
+    no data rows."""
     try:
         t = pa_csv.read_csv(
             io.BytesIO(csv_bytes),
@@ -187,23 +144,19 @@ def _member_arrow_table(csv_bytes: bytes, source: str):
             parse_options=pa_csv.ParseOptions(newlines_in_values=True),
         )
     except pa.ArrowException:
-        return _fallback()
+        return _parse_csv_rows(csv_bytes, source)
     names = t.column_names
     if len(set(names)) != len(names):
-        return _fallback()  # duplicate headers: row parser's first-wins map
-    n = len(t)
-    if n == 0:
+        return _parse_csv_rows(csv_bytes, source)  # last-wins header map
+    if len(t) == 0:
         return None
-    arrays = []
-    for c in CSV_COLUMNS:
-        if c in names:
-            # absent cell / null -> '' exactly like the reference's get
-            # closure (utils.go:185-191)
-            arrays.append(pc.fill_null(t.column(c), ""))
-        else:
-            arrays.append(pc.fill_null(pa.nulls(n, pa.string()), ""))
-    arrays.append(pc.fill_null(pa.nulls(n, pa.string()), source))
-    return pa.Table.from_arrays(arrays, schema=target)
+    # absent cell / null -> '' exactly like the reference's get closure
+    # (utils.go:185-191)
+    return _wire_table(
+        [pc.fill_null(t.column(c), "") if c in names else None for c in CSV_COLUMNS],
+        len(t),
+        source,
+    )
 
 
 def _members_safe(content: bytes, path: str) -> Iterator[tuple[str, bytes]]:
@@ -266,27 +219,3 @@ def read_staged_zips(
     )
     return binary.mapInArrow(extract_zip_arrow, schema=EXTRACT_SCHEMA)
 
-
-def read_staged_csvs(spark: SparkSession, landing_dir: str) -> DataFrame:
-    """S5 fast path: if the stager (or a pre-step) already unzipped to raw
-    CSVs, use Spark's native reader — vectorized, splittable, pushdown-
-    friendly — instead of the Python extraction UDF."""
-    df = (
-        spark.read.option("header", True)
-        .option("multiLine", True)
-        .option("escape", '"')
-        .option("mode", "PERMISSIVE")
-        .option("recursiveFileLookup", "true")
-        .csv(landing_dir)
-    )
-    present = set(df.columns)
-    # Spark's CSV reader yields NULL for empty cells and for columns a
-    # particular file lacks; the reference's get closure yields '' for
-    # every such case (utils.go:185-191) — coalesce restores that
-    cols = [
-        F.coalesce(F.col(c).cast("string"), F.lit("")).alias(c)
-        if c in present
-        else F.lit("").alias(c)
-        for c in CSV_COLUMNS
-    ]
-    return df.select(*cols, F.input_file_name().alias("_source_file"))

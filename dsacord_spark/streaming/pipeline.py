@@ -175,118 +175,6 @@ def sessionize_events(
     )
 
 
-def sessionize_events_tws(
-    events: DataFrame,
-    gap_s: int = 14400,
-    watermark: str = "1 hour",
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """The same gap-sessionizer on the transformWithStateInPandas API
-    (Spark 4 arbitrary stateful processing v2: StatefulProcessor with
-    typed value state and event-time timers; requires the RocksDB state
-    store provider). Output and semantics are identical to
-    `sessionize_events` — one operator, both stateful APIs, one oracle.
-
-    v2 differences that matter here: state is accessed through typed
-    handles (getValueState with a schema) instead of one opaque tuple;
-    timers are explicit objects (registerTimer/deleteTimer per key,
-    several allowed) rather than a single per-key timeout; and the
-    processor is a class whose init runs once per partition, so
-    per-batch Python setup cost is amortized across keys."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_us = gap_s * 1_000_000
-
-    def _emit_frame(key: str, closed: list) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "user_id": [key] * len(closed),
-                "session_start": [pd.Timestamp(s, unit="us") for s, _, _ in closed],
-                "session_end": [pd.Timestamp(e, unit="us") for _, e, _ in closed],
-                "n_events": [n for _, _, n in closed],
-            }
-        )
-
-    class _SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._cur = handle.getValueState("cur", _SESSION_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            chunks = [
-                (pdf[["ts"]].astype("int64").to_numpy().ravel() // 1000)
-                for pdf in rows
-            ]
-            arr = (
-                np.sort(np.concatenate(chunks)) if chunks else np.array([], "int64")
-            )
-            if arr.size == 0:
-                return
-            cuts = np.flatnonzero(np.diff(arr) >= gap_us) + 1
-            islands = np.split(arr, cuts)
-            closed: list = []
-            cur = self._cur.get() if self._cur.exists() else None
-            if cur is not None:
-                cur = tuple(cur)
-                if int(arr[0]) - cur[1] < gap_us:
-                    first = islands[0]
-                    cur = (cur[0], max(cur[1], int(first[-1])), cur[2] + len(first))
-                    islands = islands[1:]
-                    if islands:
-                        closed.append(cur)
-                        cur = None
-                else:
-                    closed.append(cur)
-                    cur = None
-            for i, isl in enumerate(islands):
-                sess = (int(isl[0]), int(isl[-1]), int(isl.size))
-                if i < len(islands) - 1:
-                    closed.append(sess)
-                else:
-                    cur = sess
-            self._cur.update(cur)
-            # one live timer per key: re-arm at session end + gap (above
-            # the current watermark, or registration is rejected)
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-            self._handle.registerTimer(
-                max(
-                    cur[1] // 1000 + gap_s * 1000,
-                    timer_values.getCurrentWatermarkInMs() + 1,
-                )
-            )
-            if closed:
-                yield _emit_frame(key[0], closed)
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            if self._cur.exists():
-                closed = [tuple(self._cur.get())]
-                self._cur.clear()
-                yield _emit_frame(key[0], closed)
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark(ts_col, watermark)
-        .select(F.col(key_col).alias("user_id"), F.col(ts_col).alias("ts"))
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            _SessionProcessor(),
-            SESSION_OUTPUT_SCHEMA,
-            "append",
-            "eventTime",
-        )
-    )
-
-
 def sessionize_bounded(
     spark: SparkSession,
     events: DataFrame,
@@ -294,16 +182,10 @@ def sessionize_bounded(
     key_col: str = "user_id",
     ts_col: str = "ts",
     state_partitions: int | None = None,
-    api: str = "classic",
 ) -> DataFrame:
-    """Run the stateful sessionizer over a BOUNDED events DataFrame and
-    return the complete closed-session set as a batch DataFrame.
-
-    `api` selects the stateful engine: "classic" =
-    applyInPandasWithState (sessionize_events), "tws" =
-    transformWithStateInPandas (sessionize_events_tws; the run is
-    wrapped in the RocksDB state store provider that API requires,
-    restored afterwards).
+    """Run the stateful sessionizer (sessionize_events) over a BOUNDED
+    events DataFrame and return the complete closed-session set as a
+    batch DataFrame.
 
     Mechanics: stage the events to a temp dir, append one sentinel row
     PER KEY whose timestamp sits past every possible open-session
@@ -339,7 +221,6 @@ def sessionize_bounded(
     out = os.path.join(work, "out")
     ckpt = os.path.join(work, "ckpt")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_provider = None
     try:
         staged = events.select(
             F.col(key_col).cast("string").alias("user_id"),
@@ -429,23 +310,7 @@ def sessionize_bounded(
 
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
         stream = spark.readStream.schema("user_id string, ts timestamp").parquet(src)
-        if api == "tws":
-            prev_provider = spark.conf.get(
-                "spark.sql.streaming.stateStore.providerClass", None
-            )
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-            sessions = sessionize_events_tws(
-                stream, gap_s=gap_s, watermark="0 seconds"
-            )
-        else:
-            prev_provider = None
-            sessions = sessionize_events(
-                stream, gap_s=gap_s, watermark="0 seconds"
-            )
+        sessions = sessionize_events(stream, gap_s=gap_s, watermark="0 seconds")
 
         # native parquet file sink, not foreachBatch: the python callback
         # costs a driver round-trip per micro-batch (incl. the no-data
@@ -474,15 +339,6 @@ def sessionize_bounded(
         return spark.read.schema(SESSION_OUTPUT_SCHEMA).parquet(keep)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        try:
-            if prev_provider is not None:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev_provider
-                )
-            elif api == "tws":
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        except Exception:
-            pass
         shutil.rmtree(work, ignore_errors=True)
 
 

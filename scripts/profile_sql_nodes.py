@@ -13,11 +13,19 @@ import os
 import sys
 import time
 import urllib.request
+from datetime import datetime, timezone
 
 
 def _api(base: str, path: str):
     with urllib.request.urlopen(base + path) as r:
         return json.loads(r.read())
+
+
+def _submitted_s(execution: dict) -> float:
+    """Epoch seconds of an execution's submissionTime (the REST API's
+    yyyy-MM-dd'T'HH:mm:ss.SSS'GMT' form)."""
+    ts = datetime.strptime(execution["submissionTime"], "%Y-%m-%dT%H:%M:%S.%fGMT")
+    return ts.replace(tzinfo=timezone.utc).timestamp()
 
 
 def main() -> None:
@@ -38,13 +46,14 @@ def main() -> None:
     reg = specs()
     for rep in range(reps):
         spark.catalog.clearCache()
+        last_rep_start = time.time()
         t0 = time.perf_counter()
         reg[name].fn(spark, sf_dir).count()
         print(f"rep {rep}: {time.perf_counter()-t0:.2f}s", flush=True)
     execs = _api(base, "/sql?length=1000")
     # the last rep spans possibly several executions (persist jobs etc.);
-    # dump every execution whose submission happened after rep start
-    for e in execs[-8:]:
+    # dump every execution whose submission happened after its start
+    for e in (e for e in execs if _submitted_s(e) >= last_rep_start):
         print(f"\n== execution {e['id']}: {e.get('duration')}ms "
               f"{e.get('description','')[:80]}")
         detail = _api(base, f"/sql/{e['id']}?details=true&planDescription=false")

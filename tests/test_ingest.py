@@ -204,31 +204,51 @@ def test_compact_partitions_merges_small_files(spark, tmp_path):
     }
 
 
-def test_csv_fastpath_matches_get_closure_semantics(spark, tmp_path):
-    """S5 fast path (native CSV reader on pre-unzipped files): empty cell,
-    per-file-absent column, and globally-absent column all surface as ''
-    exactly like the zip path and the reference's get closure."""
-    from dsacord_spark.sources.zipsource import read_staged_csvs
-
-    d = tmp_path / "csvs" / "dt=2025-01-01"
+def _zip_landing(tmp_path, members: dict[str, str]) -> str:
+    """landing/dt=2025-01-01/day.zip holding the given CSV members."""
+    d = tmp_path / "landing" / "dt=2025-01-01"
     d.mkdir(parents=True)
-    (d / "a.csv").write_text(
-        "uuid,category,platform_uid\n"
-        '"fast-1","CAT","123-9-user"\n'
-        '"fast-2","",""\n'          # present-but-empty cells
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        for name, text in members.items():
+            zf.writestr(name, text)
+    (d / "day.zip").write_bytes(buf.getvalue())
+    return str(tmp_path / "landing")
+
+
+def test_zip_path_matches_get_closure_semantics(spark, tmp_path):
+    """Empty cell, per-member-absent column, and globally-absent column
+    all surface as '' exactly like the reference's get closure."""
+    landing = _zip_landing(
+        tmp_path,
+        {
+            "a.csv": "uuid,category,platform_uid\n"
+            '"fast-1","CAT","123-9-user"\n'
+            '"fast-2","",""\n',  # present-but-empty cells
+            "b.csv": 'uuid\n"fast-3"\n',  # header-subset member
+        },
     )
-    (d / "b.csv").write_text(
-        "uuid\n"                     # header-subset file
-        '"fast-3"\n'
-    )
-    wire = read_staged_csvs(spark, str(tmp_path / "csvs"))
-    rows = {r["uuid"]: r for r in wire.collect()}
+    rows = {r["uuid"]: r for r in read_staged_zips(spark, landing).collect()}
     assert set(rows) == {"fast-1", "fast-2", "fast-3"}
     assert rows["fast-1"]["category"] == "CAT"
     assert rows["fast-2"]["category"] == ""          # empty cell -> ''
     assert rows["fast-3"]["category"] == ""          # absent column -> ''
     assert rows["fast-3"]["decision_ground"] == ""   # globally absent -> ''
-    assert rows["fast-1"]["_source_file"].endswith("a.csv")
+
+
+def test_ragged_first_row_keeps_uuids(spark, tmp_path):
+    """A member whose FIRST data row has one extra field is legal for the
+    reference's reader (FieldsPerRecord=-1): every row keeps its own
+    uuid and the extra field is ignored — no column shift."""
+    landing = _zip_landing(
+        tmp_path,
+        {"r.csv": 'uuid,category\n"r-1","C1","EXTRA"\n"r-2","C2"\n'},
+    )
+    rows = read_staged_zips(spark, landing).collect()
+    assert sorted((r["uuid"], r["category"]) for r in rows) == [
+        ("r-1", "C1"),
+        ("r-2", "C2"),
+    ]
 
 
 def test_dq_metrics_observed_in_one_pass(spark):
@@ -438,20 +458,17 @@ def test_corrupt_archive_isolated_not_fatal(spark, tmp_path):
     assert {"u1", "u2"}.issubset(set(got))
 
 
-def test_arrow_member_parse_matches_pandas_tiers():
-    """The Arrow-native member parse (_member_arrow_table fast path) and
-    the pandas fallback tiers (_parse_csv_frame) must produce identical
-    wire rows for every CSV shape either can handle: normal, empty
-    cells, header-subset, extra columns, quoted embedded newlines,
-    ragged rows (wider than the header — Arrow tier rejects, falls back
-    to the row parser), duplicate headers (first-wins map), and an
-    empty file."""
-    import pyarrow as pa
-
-    from dsacord_spark.schema import CSV_COLUMNS
+def test_arrow_member_parse_matches_row_parser():
+    """The Arrow fast path (_member_arrow_table) and the row parser
+    (_parse_csv_rows) must produce identical wire tables for every CSV
+    shape: normal, empty cells, header-subset, extra columns, quoted
+    embedded newlines, CRLF, a UTF-8 BOM, blank lines, an empty file.
+    Shapes the fast path rejects or routes away — ragged rows (first row
+    included), invalid UTF-8, duplicate header names — must reach the
+    row parser, whose values are pinned first."""
     from dsacord_spark.sources.zipsource import (
         _member_arrow_table,
-        _parse_csv_frame,
+        _parse_csv_rows,
     )
 
     c0, c1, c2 = CSV_COLUMNS[0], CSV_COLUMNS[1], CSV_COLUMNS[2]
@@ -460,29 +477,45 @@ def test_arrow_member_parse_matches_pandas_tiers():
         "empty_cells": f'{c0},{c1}\n"a",""\n"",""\n',
         "subset_plus_extra": f'{c0},zzz_not_wire\n"a","ignored"\n',
         "quoted_newline": f'{c0},{c1}\n"a","line1\nline2"\n',
-        "ragged_wide": f'{c0},{c1}\na,b,EXTRA,MORE\nc,d\n',
+        "crlf": f"{c0},{c1}\r\na,b\r\nc,d\r\n",
+        "bom": f"\ufeff{c0},{c1}\na,b\n",
+        "blank_lines": f"{c0},{c1}\na,b\n\nc,d\n\n",
+        "ragged_wide": f"{c0},{c1}\na,b,EXTRA,MORE\nc,d\n",
+        "ragged_first_row": f"{c0},{c1}\na,b,EXTRA\nc,d\n",
+        "ragged_blank_lines": f"{c0},{c1}\na,b\nc,d,EXTRA\n\ne,f\n",
         "dup_header": f"{c0},{c0},{c1}\nfirst,second,x\n",
         "empty_file": "",
         "header_only": f"{c0},{c1}\n",
     }
-    for name, text in cases.items():
-        raw = text.encode()
+    raws = {name: text.encode() for name, text in cases.items()}
+    raws["invalid_utf8"] = f"{c0},{c1}\na,b".encode() + b"\xff\n"
+
+    def col(name, c):
+        return _member_arrow_table(raws[name], "src").column(c).to_pylist()
+
+    # ragged first row: no column shift, extra field ignored
+    assert col("ragged_first_row", c0) == ["a", "c"]
+    assert col("ragged_first_row", c1) == ["b", "d"]
+    # blank records are skipped, never a phantom all-'' row
+    assert col("ragged_blank_lines", c0) == ["a", "c", "e"]
+    assert col("blank_lines", c0) == ["a", "c"]
+    assert col("invalid_utf8", c1) == ["b\ufffd"]
+    # the header map is last-wins over duplicate names, like the
+    # reference's name->index map (utils.go:167-170)
+    assert col("dup_header", c0) == ["second"]
+    assert col("dup_header", c1) == ["x"]
+
+    for name, raw in raws.items():
         t = _member_arrow_table(raw, "src")
-        pdf = _parse_csv_frame(raw, "src")
+        rows = _parse_csv_rows(raw, "src")
         if t is None:
-            assert pdf.empty, name
+            assert rows is None, name
             continue
-        want = pa.Table.from_pandas(
-            pdf, schema=t.schema, preserve_index=False
-        )
-        assert t.equals(want), (
-            name,
-            t.to_pydict(),
-            want.to_pydict(),
-        )
-        # get-closure semantics spot checks on the arrow table itself
+        assert t.equals(rows), (name, t.to_pydict(), rows.to_pydict())
+        # absent column -> '' (get-closure semantics), provenance stamped
         cols = t.to_pydict()
-        assert all(v is not None for v in cols[c2]), name  # absent -> ''
+        assert cols[c2] == [""] * len(t), name
+        assert cols["_source_file"] == ["src"] * len(t), name
 
 
 def test_nested_zip_larger_than_spool_spills_not_oom(monkeypatch):

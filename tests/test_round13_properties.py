@@ -11,6 +11,8 @@ settle helper.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Window as W, functions as F
 
 # ---------------------------------------------------------------------------
@@ -150,6 +152,37 @@ def test_rfm_melt_matches_builtin_ntile(spark):
 # ---------------------------------------------------------------------------
 
 
+def _signature_aggregates(plan, seen: set) -> int:
+    """Count the MinHash signature aggregates (final-mode min() over the
+    permutation hashes) that a plan evaluates: live Aggregate nodes, plus
+    those inside each distinct cached relation counted once — a cached
+    relation read by both join branches is computed once. Walks through
+    adaptive plans and their query stages, which hide their subtrees
+    from children()."""
+    name = plan.nodeName()
+    if name == "InMemoryRelation":
+        key = plan.cachedPlan().toString()
+        if key in seen:
+            return 0
+        seen.add(key)
+        return _signature_aggregates(plan.cachedPlan(), seen)
+    if name == "InMemoryTableScan":
+        return _signature_aggregates(plan.relation(), seen)
+    if name == "AdaptiveSparkPlan":
+        return _signature_aggregates(plan.executedPlan(), seen)
+    if name.endswith("QueryStage"):
+        return _signature_aggregates(plan.plan(), seen)
+    n = int(
+        "Aggregate" in name
+        and re.search(r"(?<!\w)min\(", plan.simpleString(1000)) is not None
+    )
+    children = plan.children()
+    return n + sum(
+        _signature_aggregates(children.apply(i), seen)
+        for i in range(children.size())
+    )
+
+
 def test_minhash_lsh_bands_persisted_single_signature(spark):
     from dsacord_spark.operators.dedup import minhash_lsh_pairs
 
@@ -165,10 +198,10 @@ def test_minhash_lsh_bands_persisted_single_signature(spark):
     got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
     # 1 and 4 are identical docs; 2 shares most shingles with both
     assert (1, 4) in got and (1, 2) in got
-    plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+    plan = pairs._jdf.queryExecution().optimizedPlan()
     # both band branches must read the SAME cached bands relation: the
-    # signature aggregate appears under InMemoryRelation, not twice live
-    assert plan.count("InMemoryRelation") >= 1
+    # signature aggregate is evaluated once, not once per branch
+    assert _signature_aggregates(plan, set()) == 1
     spark.catalog.clearCache()
 
 
@@ -330,3 +363,26 @@ def test_minhash_sql_form_matches_column_form(spark):
         F.col("doc"), F.explode(F.array(*structs)).alias("b")
     ).select("doc", "b.band_idx", "b.band_hash").collect()}
     assert got_b == ref_b and got_b
+
+
+def test_minhash_band_sql_pinned(spark):
+    """minhash_bands parses one SQL string whose md5 part comes from
+    md5_long_spark_sql. The rendered string is pinned byte-for-byte so
+    the band plan cannot drift, and the renderer must agree with the
+    md5_long Column form on values."""
+    from dsacord_spark.functions.hashing import md5_long, md5_long_spark_sql
+    from dsacord_spark.operators.dedup import _minhash_band_structs_sql
+
+    assert _minhash_band_structs_sql(4, 2) == (
+        "array("
+        "struct(0 AS band_idx, CAST(CONV(SUBSTR(MD5(concat_ws(',', 0, m0, m1"
+        ")), 1, 15), 16, 10) AS BIGINT) AS band_hash), "
+        "struct(1 AS band_idx, CAST(CONV(SUBSTR(MD5(concat_ws(',', 1, m2, m3"
+        ")), 1, 15), 16, 10) AS BIGINT) AS band_hash))"
+    )
+    df = spark.createDataFrame([("",), ("a",), ("0,1,2",), ("日本",)], "s string")
+    rows = df.select(
+        md5_long(F.col("s")).alias("col"),
+        F.expr(md5_long_spark_sql("s")).alias("sql"),
+    ).collect()
+    assert all(r["col"] == r["sql"] for r in rows)

@@ -181,9 +181,9 @@ def test_duplicate_components_distributed_chain_auto_fallback(spark):
     """END-TO-END pin of the adversarial path the unit tests reach only
     through private helpers: a 210k-edge chain (past the 200k driver
     union-find cap -> the DISTRIBUTED branch) whose diameter no 30-round
-    propagation can cover. duplicate_components(algorithm='auto') must
-    return the exact one-component labeling via the star fallback —
-    before r7 this input was a guaranteed RuntimeError at scale."""
+    propagation can cover. duplicate_components must return the exact
+    one-component labeling via the star fallback — before r7 this input
+    was a guaranteed RuntimeError at scale."""
     from pyspark.sql import functions as F
 
     from dsacord_spark.operators.dedup import duplicate_components
@@ -193,7 +193,7 @@ def test_duplicate_components_distributed_chain_auto_fallback(spark):
         spark.range(1, n)
         .select(F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b"))
     )
-    out = duplicate_components(pairs, max_iter=30, algorithm="auto")
+    out = duplicate_components(pairs)
     agg = out.agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("cluster_id").alias("n_clusters"),

@@ -297,12 +297,11 @@ def test_kmeans_small_and_empty_corpus(spark):
 
 def test_csv_duplicate_header_tolerated(spark):
     """Regression: a zip-member CSV with a duplicated header name parses
-    through the row-parser tier (last occurrence wins, matching the
-    reference's name->index map) instead of crashing the pyarrow tier's
-    reindex."""
-    from dsacord_spark.sources.zipsource import _parse_csv_frame
+    through the row parser (last occurrence wins, matching the reference's
+    name->index map) instead of crashing the pyarrow fast path's reindex."""
+    from dsacord_spark.sources.zipsource import _member_arrow_table
 
-    pdf = _parse_csv_frame(b"uuid,uuid,category\na,b,c\n", "m")
-    assert len(pdf) == 1
-    assert pdf.iloc[0]["uuid"] == "b"
-    assert pdf.iloc[0]["category"] == "c"
+    t = _member_arrow_table(b"uuid,uuid,category\na,b,c\n", "m")
+    assert t.num_rows == 1
+    assert t.column("uuid").to_pylist() == ["b"]
+    assert t.column("category").to_pylist() == ["c"]

@@ -4,8 +4,6 @@ backfill), checkpointed resume, and epoch-level dedup."""
 
 from __future__ import annotations
 
-import pytest
-
 from dsacord_spark.schema import CSV_COLUMNS
 from dsacord_spark.streaming.pipeline import start_decisions_stream
 
@@ -346,46 +344,6 @@ def test_streaming_lake_rollup_stays_consistent(spark, tmp_path):
     assert spark.read.parquet(lake).filter(F.col("uuid") == "u3").count() == 1
     # day-1 rollup partition untouched by an epoch that only added day 3
     assert os.path.getmtime(d1_file) == d1_mtime
-
-
-def _have_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _have_protobuf(),
-    reason="transformWithStateInPandas needs python protobuf (its "
-    "Python<->JVM state protocol); not installed in this container",
-)
-def test_sessionize_tws_matches_classic(spark):
-    """The transformWithStateInPandas sessionizer must emit exactly the
-    classic applyInPandasWithState sessions (one operator, both stateful
-    APIs)."""
-    import datetime
-
-    from dsacord_spark.streaming.pipeline import sessionize_bounded
-
-    rows = [
-        ("A", datetime.datetime(2025, 1, 1, 10, 0, 0)),
-        ("A", datetime.datetime(2025, 1, 1, 10, 10, 0)),
-        ("A", datetime.datetime(2025, 1, 1, 20, 0, 0)),
-        ("B", datetime.datetime(2025, 1, 1, 11, 0, 0)),
-    ]
-    df = spark.createDataFrame(rows, "user_id string, ts timestamp")
-
-    def run(api):
-        return sorted(
-            (r["user_id"], str(r["session_start"]), str(r["session_end"]),
-             r["n_events"])
-            for r in sessionize_bounded(spark, df, gap_s=14400, api=api).collect()
-        )
-
-    assert run("tws") == run("classic")
 
 
 def test_sessionize_bounded_timezone_safe():
