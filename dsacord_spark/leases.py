@@ -1,14 +1,12 @@
 """In-process lease registry coordinating index MAINTENANCE with live
 streaming probes (r10 verdict item 4 / PLANS.md backlog).
 
-The streaming probes (stream_probe_hamming_index / _minhash_index)
-re-read their index tables lazily: between snapshot refreshes the data
-lives in localCheckpoint blocks (file-independent), but at every refresh
-boundary — or every micro-batch under the refresh=None policy — the
-probe resolves the CURRENT table files and reads them. compact_index
-rewrites those files; run concurrently from another thread it can
-delete files an in-flight probe plan still references. The registry
-makes that interleaving explicit:
+The streaming probes (stream_probe_hamming_index / _minhash_index /
+_ivf_index) run the batch probe on every micro-batch, which resolves
+the CURRENT index files and reads them. compact_index rewrites those
+files; run concurrently from another thread it can delete files an
+in-flight probe plan still references. The registry makes that
+interleaving explicit:
 
 - a stream probe holds a lease on its index base name for the stream's
   lifetime;

@@ -1652,6 +1652,18 @@ def probe_hamming_index(
     per Hamming cluster, disjoint from the prior corpus) — use the
     member-level incremental_hamming_matches(exclude_self=True) when
     probing arbitrary overlapping corpora."""
+    return _hamming_index_prober(spark, table_name, prune)(
+        batch, id_col, hash_col, radius, bucket_cap, exclude_self
+    )
+
+
+def _hamming_index_prober(spark, table_name: str, prune: bool | None = None):
+    """probe_hamming_index in two steps. This call is the once-per-index
+    step: it reads the meta row and makes the auto-prune decision from
+    the tables' bytes. It returns the per-batch step, which builds the
+    probe plan and resolves the index tables at each call, so an append
+    made between calls is seen. A stream probe runs the first step once
+    and the second per micro-batch."""
     meta = _read_index_meta(
         spark, table_name, ("n_bands", "hash_bits"), "Hamming"
     )
@@ -1661,29 +1673,34 @@ def probe_hamming_index(
             _table_location_bytes(spark, f"{table_name}_bands")
             + _table_location_bytes(spark, f"{table_name}_summary")
         ) >= _PRUNE_AUTO_MIN_BYTES
-    ib = spark.table(f"{table_name}_bands")
-    if prune:
-        rows = _with_band_key(
-            _band_rows(
-                batch.select(F.col(hash_col).alias("_h")).distinct(),
-                "_h", n_bands, hash_bits,
-            ),
-            n_bands, hash_bits,
-        ).select("band_key").distinct().take(_PROBE_PRUNE_LIMIT + 1)
-        if len(rows) <= _PROBE_PRUNE_LIMIT:
-            vals = [r[0] for r in rows]
-            # empty batch: no band can match (isin() rejects empty)
-            ib = ib.filter(
-                _in_literals("band_key", vals)
-            )
-    return _hamming_probe_tail(
-        batch, id_col, hash_col,
-        spark.table(f"{table_name}_summary"),
-        ib,
-        n_bands, radius, hash_bits, bucket_cap,
-        corpus_prune_limit=_PROBE_PRUNE_LIMIT if prune else None,
-        exclude_self=exclude_self,
-    )
+
+    def probe(batch: DataFrame, id_col: str, hash_col: str, radius: int,
+              bucket_cap: int | None, exclude_self: bool = False):
+        ib = spark.table(f"{table_name}_bands")
+        if prune:
+            rows = _with_band_key(
+                _band_rows(
+                    batch.select(F.col(hash_col).alias("_h")).distinct(),
+                    "_h", n_bands, hash_bits,
+                ),
+                n_bands, hash_bits,
+            ).select("band_key").distinct().take(_PROBE_PRUNE_LIMIT + 1)
+            if len(rows) <= _PROBE_PRUNE_LIMIT:
+                vals = [r[0] for r in rows]
+                # empty batch: no band can match (isin() rejects empty)
+                ib = ib.filter(
+                    _in_literals("band_key", vals)
+                )
+        return _hamming_probe_tail(
+            batch, id_col, hash_col,
+            spark.table(f"{table_name}_summary"),
+            ib,
+            n_bands, radius, hash_bits, bucket_cap,
+            corpus_prune_limit=_PROBE_PRUNE_LIMIT if prune else None,
+            exclude_self=exclude_self,
+        )
+
+    return probe
 
 
 def _read_index_meta(spark, table_name: str, expected: tuple, kind: str):
@@ -2037,10 +2054,9 @@ def compact_index(spark, table_name: str, force: bool = False) -> dict:
     compact_partitions.
 
     Interlock with streaming probes (r10 verdict item 4): a live
-    stream_probe_* lazily re-reads these tables at snapshot-refresh
-    boundaries (or every micro-batch under refresh=None), and a rewrite
-    racing an in-flight probe plan can delete files that plan still
-    references. While any stream in THIS process holds a lease on the
+    stream_probe_* re-reads these tables every micro-batch, and a
+    rewrite racing an in-flight probe plan can delete files that plan
+    still references. While any stream in THIS process holds a lease on the
     index and is mid-batch, this call raises instead of rewriting.
     The supported mid-stream pattern is to compact from the stream's
     own `on_batch_start` hook — a batch boundary, where no probe plan
@@ -2159,6 +2175,18 @@ def probe_minhash_index(
     non-candidate doc cannot survive the verify's inner join, and
     capped admission ranks within a band bucket, which the filter keeps
     or drops whole."""
+    return _minhash_index_prober(spark, table_name, prune)(
+        batch, id_col, text_col, threshold, bucket_cap, exclude_self
+    )[0]
+
+
+def _minhash_index_prober(spark, table_name: str, prune: bool | None = None):
+    """probe_minhash_index in two steps, as _hamming_index_prober: this
+    call reads the meta row and makes the auto-prune decision once; the
+    returned per-batch step builds the plan over the index tables as
+    they are at each call. The step returns (matches, bngr): bngr is
+    the persisted batch shingle frame the plan reads, for a caller that
+    releases it once the matches are written."""
     meta = _read_index_meta(
         spark, table_name, ("n", "n_perm", "bands"), "MinHash"
     )
@@ -2168,71 +2196,80 @@ def probe_minhash_index(
             _table_location_bytes(spark, f"{table_name}_bands")
             + _table_location_bytes(spark, f"{table_name}_shingles")
         ) >= _PRUNE_AUTO_MIN_BYTES
-    # the batch shingle frame serves both the signature aggregate and
-    # the verify's batch-side arrays (_shingle_index persists it, so the
-    # plan-identical reads share one cache entry)
-    bngr = _shingle_index(batch, id_col, text_col, n)
-    b_sig = _minhash_sig_from_ngr(bngr, n_perm)
-    bb = minhash_bands(b_sig, n_perm, bands)
-    ib = spark.table(f"{table_name}_bands")
-    if prune:
-        # bb feeds both the band-hash collect here and the candidate
-        # join; checkpoint so the signature aggregate runs once
-        bb = bb.localCheckpoint(eager=False)
-        rows = bb.select("band_hash").distinct().take(
-            _PROBE_PRUNE_LIMIT + 1
-        )
-        if len(rows) <= _PROBE_PRUNE_LIMIT:
-            vals = [r[0] for r in rows]
-            ib = ib.filter(
-                _in_literals("band_hash", vals)
+
+    def probe(batch: DataFrame, id_col: str, text_col: str,
+              threshold: float, bucket_cap: int | None,
+              exclude_self: bool = False):
+        # the batch shingle frame serves both the signature aggregate
+        # and the verify's batch-side arrays (_shingle_index persists it,
+        # so the plan-identical reads share one cache entry)
+        bngr = _shingle_index(batch, id_col, text_col, n)
+        b_sig = _minhash_sig_from_ngr(bngr, n_perm)
+        bb = minhash_bands(b_sig, n_perm, bands)
+        ib = spark.table(f"{table_name}_bands")
+        if prune:
+            # bb feeds both the band-hash collect here and the candidate
+            # join; checkpoint so the signature aggregate runs once
+            bb = bb.localCheckpoint(eager=False)
+            rows = bb.select("band_hash").distinct().take(
+                _PROBE_PRUNE_LIMIT + 1
+            )
+            if len(rows) <= _PROBE_PRUNE_LIMIT:
+                vals = [r[0] for r in rows]
+                ib = ib.filter(
+                    _in_literals("band_hash", vals)
+                )
+
+        def verify(cand: DataFrame) -> DataFrame:
+            ab = spark.table(f"{table_name}_shingles")
+            if prune:
+                # the verify's corpus side is the shingle-set table —
+                # the other corpus-sized scan. The one bounded collect
+                # returns the candidate PAIRS (r12, r11 verdict item 5):
+                # the doc ids for the shingle IN-filter derive
+                # driver-side from the pairs, and cand is rebuilt as a
+                # LOCAL relation, so the final wave plans entirely
+                # against literals — no block-manager traffic between
+                # the waves. When the PAIR count overflows but the
+                # DISTINCT ids still fit (a batch of near-dups crowding
+                # one index cluster — the r11 shape), fall back to the
+                # id-only collect over the checkpointed cand: the
+                # shingle scan stays pruned and the band join still ran
+                # once (the lazy checkpoint below is materialized by
+                # whichever collect runs first and reused by the verify
+                # join). Only when ids overflow too does the probe take
+                # the full bucketed shingle scan — candidate-dominated
+                # by then. Value-identical in all three tiers
+                # (non-candidate docs cannot survive the verify's inner
+                # join).
+                cand = cand.localCheckpoint(eager=False)
+                pairs = cand.take(_PROBE_PRUNE_LIMIT + 1)
+                if len(pairs) <= _PROBE_PRUNE_LIMIT:
+                    ids = sorted({r["idoc"] for r in pairs})
+                    cand = spark.createDataFrame(pairs, cand.schema)
+                    ab = ab.filter(_in_literals("doc", ids))
+                else:
+                    ids = cand.select("idoc").distinct().take(
+                        _PROBE_PRUNE_LIMIT + 1
+                    )
+                    if len(ids) <= _PROBE_PRUNE_LIMIT:
+                        ab = ab.filter(
+                            _in_literals("doc", [r[0] for r in ids])
+                        )
+            return _jaccard_verify_arrays(
+                cand, "bdoc", "idoc", _doc_shingle_arrays(bngr), ab,
+                threshold,
             )
 
-    def verify(cand: DataFrame) -> DataFrame:
-        ab = spark.table(f"{table_name}_shingles")
-        if prune:
-            # the verify's corpus side is the shingle-set table — the
-            # other corpus-sized scan. The one bounded collect returns
-            # the candidate PAIRS (r12, r11 verdict item 5): the doc
-            # ids for the shingle IN-filter derive driver-side from
-            # the pairs, and cand is rebuilt as a LOCAL relation, so
-            # the final wave plans entirely against literals — no
-            # block-manager traffic between the waves. When the PAIR
-            # count overflows but the DISTINCT ids still fit (a batch
-            # of near-dups crowding one index cluster — the r11 shape),
-            # fall back to the id-only collect over the checkpointed
-            # cand: the shingle scan stays pruned and the band join
-            # still ran once (the lazy checkpoint below is materialized
-            # by whichever collect runs first and reused by the verify
-            # join). Only when ids overflow too does the probe take the
-            # full bucketed shingle scan — candidate-dominated by then.
-            # Value-identical in all three tiers (non-candidate docs
-            # cannot survive the verify's inner join).
-            cand = cand.localCheckpoint(eager=False)
-            pairs = cand.take(_PROBE_PRUNE_LIMIT + 1)
-            if len(pairs) <= _PROBE_PRUNE_LIMIT:
-                ids = sorted({r["idoc"] for r in pairs})
-                cand = spark.createDataFrame(pairs, cand.schema)
-                ab = ab.filter(_in_literals("doc", ids))
-            else:
-                ids = cand.select("idoc").distinct().take(
-                    _PROBE_PRUNE_LIMIT + 1
-                )
-                if len(ids) <= _PROBE_PRUNE_LIMIT:
-                    ab = ab.filter(
-                        _in_literals("doc", [r[0] for r in ids])
-                    )
-        return _jaccard_verify_arrays(
-            cand, "bdoc", "idoc", _doc_shingle_arrays(bngr), ab, threshold
-        )
+        return _minhash_probe_tail(
+            batch,
+            id_col,
+            bb,
+            ib,
+            threshold,
+            bucket_cap,
+            verify=verify,
+            exclude_self=exclude_self,
+        ), bngr
 
-    return _minhash_probe_tail(
-        batch,
-        id_col,
-        bb,
-        ib,
-        threshold,
-        bucket_cap,
-        verify=verify,
-        exclude_self=exclude_self,
-    )
+    return probe

@@ -1124,10 +1124,6 @@ def append_ivf_index(
 
         import os
 
-        from dsacord_spark.streaming.pipeline import (
-            _release_local_checkpoint,
-        )
-
         jvm = spark._jvm
         fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
             spark._jsc.hadoopConfiguration()
@@ -1186,7 +1182,12 @@ def append_ivf_index(
             fs.delete(jvm.org.apache.hadoop.fs.Path(marker), True)
             return appended
         finally:
-            _release_local_checkpoint(survivors)
+            # a localCheckpoint is not in the CacheManager: unpersist
+            # its backing RDD (the analyzed plan's LogicalRDD) now
+            # rather than waiting for the async ContextCleaner
+            survivors._jdf.queryExecution().analyzed().rdd().unpersist(
+                False
+            )
 
 
 def ivf_index_stats(spark, path: str) -> DataFrame:

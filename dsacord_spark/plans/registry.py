@@ -132,7 +132,7 @@ def register(name: str, sql: str | None, doc: str = ""):
 # entry's plan build with its name so table() can consult the set.
 # Anything outside the registry (CLI, streaming helpers, operators
 # called directly) never fans out.
-_FANOUT_MAX_BYTES = int(os.environ.get("SPARK_GRAFT_FANOUT_MAX_BYTES", 256 << 20))
+_FANOUT_MAX_BYTES = 256 << 20
 _FANOUT_MIN_BYTES = 64 << 10  # dim tables (nation/region/supplier) stay 1-task
 
 _FANOUT_ENTRIES = frozenset({

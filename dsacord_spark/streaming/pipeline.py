@@ -326,7 +326,7 @@ def sessionize_bounded(
         q.awaitTermination(600)
         # hand the OUTPUT DIR over to a process-lifetime location instead
         # of eagerly re-reading it into the block manager: the former
-        # localCheckpoint(eager=True) added a full extra read+materialize
+        # eager localCheckpoint added a full extra read+materialize
         # (~0.3-0.4s at sf0.1) before the consumer's own action
         keep = tempfile.mkdtemp(prefix="dsacord-sessions-")
         os.rmdir(keep)
@@ -430,10 +430,9 @@ def _shape_empty_drain(
     source listing came up empty). `drain_transform`, when given, wins —
     it must build the per-batch output schema side-effect-free (r11
     ADVICE: the index probes' per-batch path fires the on_batch_start
-    maintenance hook and eagerly localCheckpoints both index tables,
-    neither of which belongs to a batch that never ran). Otherwise the
-    per-batch transform shapes it, honoring the 2-arg contract (r11
-    review: the 1-arg call died with TypeError under
+    maintenance hook, which does not belong to a batch that never ran).
+    Otherwise the per-batch transform shapes it, honoring the 2-arg
+    contract (r11 review: the 1-arg call died with TypeError under
     pass_batch_id=True)."""
     empty = spark.createDataFrame([], schema)
     if drain_transform is not None:
@@ -461,8 +460,8 @@ def run_bounded_stream(
     """Run a streaming transform over a BOUNDED frame and return its
     complete output as a batch DataFrame: stage the input to a temp
     parquet dir, apply `transform` to the file-source stream, drain with
-    availableNow through a parquet foreachBatch sink, and materialize
-    the result (localCheckpoint) before the temp dir is removed.
+    availableNow through a parquet foreachBatch sink, and move the sink
+    dir to a process-lifetime location before the temp dir is removed.
 
     This is how the catalog gives REAL streaming operators (stream-stream
     joins, watermarked dedup) a full value check against the batch SQL
@@ -489,8 +488,7 @@ def run_bounded_stream(
     zero-micro-batch drain instead of `batch_transform(empty, 0)` —
     for transforms whose per-batch path has side effects that must not
     fire for a batch that never ran (the index probes' on_batch_start
-    maintenance hook could trigger a compaction, and their snapshot
-    build eagerly localCheckpoints both index tables; r11 ADVICE). It
+    maintenance hook could trigger a compaction; r11 ADVICE). It
     receives the empty post-`transform` frame and must return a frame
     with the same schema the per-batch path produces, built
     side-effect-free."""
@@ -558,29 +556,57 @@ def run_bounded_stream(
         shutil.rmtree(work, ignore_errors=True)
 
 
-def _release_local_checkpoint(df: DataFrame | None) -> None:
-    """Deterministically unpersist a RETIRED localCheckpoint snapshot's
-    backing blocks. Dropping the Python reference and waiting for the
-    ContextCleaner is how these were released through r10 — but that
-    reclamation is ASYNC and lags nondeterministically (measured on this
-    JVM: sometimes <6s, sometimes minutes, independent of gc.collect/
-    System.gc), which (a) holds up to one full extra index snapshot in
-    executor memory between refreshes of a long-running stream and
-    (b) made the persistent-RDD census test pass or fail on GC luck.
-    The checkpointed Dataset's analyzed plan is the LogicalRDD wrapping
-    the persisted RDD; unpersist it directly (non-blocking). Only call
-    on snapshots with NO remaining consumer — a retired generation after
-    the refresh boundary, or any generation after the stream drained
-    (every micro-batch's output is already materialized by the sink).
-    Spark logs an expected 'lineage has been truncated' WARN: the
-    snapshot is dead, it will never be recomputed. Best-effort: on any
-    reflection mismatch the ContextCleaner path still applies."""
-    if df is None:
-        return
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
+def _stream_index_probe(
+    spark: SparkSession,
+    lease_name: str,
+    stream_df: DataFrame,
+    probe: Callable[[DataFrame], DataFrame],
+    reader_options: dict[str, str] | None,
+    on_batch_start: Callable[[int], None] | None,
+    release: Callable[[], None] | None = None,
+    drain: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame:
+    """The one driver behind every stream_probe_*: `stream_df` is
+    drained in micro-batches (one staged file each unless
+    `reader_options` say otherwise) and `probe`, the batch probe over a
+    persisted index, runs on each micro-batch inside foreachBatch.
+
+    The stream holds a lease on `lease_name` for its lifetime, so index
+    maintenance refuses while a probe plan is in flight.
+    `on_batch_start(i)` fires with the engine's batch id before each
+    batch's probe is built: the batch boundary, where the lease is
+    marked non-blocking and maintenance invoked synchronously from the
+    hook (compact_index, an index append) completes before the batch
+    plans, so that batch already sees it. `release()` runs after each
+    batch's write to free what the probe pinned. A drain that produced
+    zero micro-batches is shaped by `drain` (default: `probe`) over the
+    empty frame, then released: no hook fires for a batch that never
+    ran."""
+
+    def shape_drain(empty: DataFrame) -> DataFrame:
+        out = (drain or probe)(empty)
+        if release is not None:
+            release()
+        return out
+
+    with leases.stream_lease(lease_name) as lease:
+
+        def per_batch(b: DataFrame, batch_id: int) -> DataFrame:
+            if on_batch_start is not None:
+                with leases.at_boundary(lease):
+                    on_batch_start(batch_id)
+            return probe(b)
+
+        return run_bounded_stream(
+            spark,
+            stream_df,
+            lambda s: s,
+            reader_options=reader_options or {"maxFilesPerTrigger": "1"},
+            batch_transform=per_batch,
+            batch_cleanup=release,
+            pass_batch_id=True,
+            drain_transform=shape_drain,
+        )
 
 
 def stream_probe_hamming_index(
@@ -592,132 +618,30 @@ def stream_probe_hamming_index(
     radius: int = 3,
     bucket_cap: int | None = None,
     reader_options: dict[str, str] | None = None,
-    refresh_every_n_batches: int | None = None,
     on_batch_start: Callable[[int], None] | None = None,
 ) -> DataFrame:
     """The true daily-production incremental-dedup shape (r8 verdict ask
     #6): the corpus index lives ON DISK as a build_hamming_index table
     set, and the new batch arrives as a STREAM whose every micro-batch
-    is probed against those bucketed tables inside foreachBatch —
-    stream_incremental_dedup's in-memory persisted frames replaced by
-    the persisted index. Per-doc matches are independent of batching, so
-    the drained output equals the batch probe_hamming_index over the
-    same batch (parity pinned in tests/test_round9_properties.py).
+    is the batch probe_hamming_index run inside foreachBatch. Per-doc
+    matches are independent of batching, so the drained output equals
+    probe_hamming_index over the same batch (parity pinned in
+    tests/test_streaming.py).
 
-    Band parameters come from the index's meta table, read ONCE here
-    (not per micro-batch); each micro-batch pays only its own banding
-    plus the bucketed band/summary table reads — probe cost tracks the
-    micro-batch, never the corpus.
+    The index meta and the auto-prune decision are read ONCE per
+    stream; each micro-batch re-reads the index tables (an index append
+    from `on_batch_start` is seen by that batch and every later one) and
+    pays only its own banding plus the bucketed band/summary reads —
+    probe cost tracks the micro-batch, never the corpus. The lease and
+    hook contract is _stream_index_probe's."""
+    from dsacord_spark.operators.dedup import _hamming_index_prober
 
-    `refresh_every_n_batches` is the SNAPSHOT POLICY (r9 verdict item 5)
-    for long-running streams: None (default) re-reads the index tables
-    every micro-batch (maximum freshness — a concurrent index append is
-    visible immediately); N >= 1 persists a snapshot of the index frames
-    and re-reads them only every N micro-batches, so N-1 of every N
-    batches probe cached blocks instead of re-scanning the table files —
-    an index append lands at the NEXT refresh boundary (pinned in
-    tests/test_round10_properties.py). Snapshot references are dropped
-    when the stream drains (blocks reclaimed by the ContextCleaner).
-    `on_batch_start(i)` is an optional hook
-    fired with the 0-based micro-batch number before each batch's
-    refresh check — the coordination point for index maintenance in
-    tests and operational tooling."""
-    from dsacord_spark.operators.dedup import (
-        _hamming_probe_tail, _read_index_meta,
+    probe = _hamming_index_prober(spark, table_name)
+    return _stream_index_probe(
+        spark, table_name, batch_df,
+        lambda b: probe(b, id_col, hash_col, radius, bucket_cap),
+        reader_options, on_batch_start,
     )
-
-    if refresh_every_n_batches is not None and refresh_every_n_batches < 1:
-        # the docstring's N >= 1 contract, enforced (r10 ADVICE: 0 used
-        # to reach the modulo and die with a ZeroDivisionError at the
-        # first micro-batch, deep inside foreachBatch)
-        raise ValueError(
-            f"refresh_every_n_batches must be >= 1 or None, got "
-            f"{refresh_every_n_batches}"
-        )
-    meta = _read_index_meta(
-        spark, table_name, ("n_bands", "hash_bits"), "Hamming"
-    )
-    n_bands, hash_bits = int(meta["n_bands"]), int(meta["hash_bits"])
-    state: dict = {"gen": None, "idx": None, "ib": None}
-
-    def _frames(batch_id: int) -> tuple[DataFrame, DataFrame]:
-        if refresh_every_n_batches is None:
-            return (
-                spark.table(f"{table_name}_summary"),
-                spark.table(f"{table_name}_bands"),
-            )
-        # keyed on the engine's batch id, not an attempt counter: a
-        # foreachBatch RETRY re-enters with the same id and lands in the
-        # same generation, so refresh boundaries never shift (r10 ADVICE)
-        gen = batch_id // refresh_every_n_batches
-        if state["gen"] != gen or state["idx"] is None:
-            # localCheckpoint, NOT persist: a persisted table frame is
-            # re-cached by Spark the moment anything writes to the table
-            # (CacheManager.recacheByPath), which silently turns the
-            # snapshot back into fresh-per-append reads; checkpointed
-            # blocks have no table lineage, so the snapshot holds until
-            # the NEXT boundary by construction. The RETIRED generation
-            # is released eagerly (the prior batch's write completed
-            # synchronously, so it has no consumer) — see
-            # _release_local_checkpoint for why GC-driven reclamation
-            # is not enough. Caveat: do not compact/rewrite the index
-            # tables mid-stream outside the boundary hook — a snapshot
-            # pins nothing on disk (see compact_index's stream guard).
-            _release_local_checkpoint(state["idx"])
-            _release_local_checkpoint(state["ib"])
-            state["idx"] = spark.table(
-                f"{table_name}_summary"
-            ).localCheckpoint(eager=True)
-            state["ib"] = spark.table(
-                f"{table_name}_bands"
-            ).localCheckpoint(eager=True)
-            state["gen"] = gen
-        return state["idx"], state["ib"]
-
-    def probe(b: DataFrame, batch_id: int) -> DataFrame:
-        if on_batch_start is not None:
-            # boundary window: no probe plan is in flight, so index
-            # maintenance (compact_index) invoked synchronously from the
-            # hook is safe and the lease does not block it
-            with leases.at_boundary(state["lease"]):
-                on_batch_start(batch_id)
-        idx_min, ib = _frames(batch_id)
-        return _hamming_probe_tail(
-            b, id_col, hash_col, idx_min, ib,
-            n_bands, radius, hash_bits, bucket_cap,
-        )
-
-    def drain(empty: DataFrame) -> DataFrame:
-        # zero-micro-batch drain: shape the empty output from lazily
-        # read table frames — no on_batch_start (it may compact an
-        # index for a batch that never ran) and no eager snapshot
-        # localCheckpoints (r11 ADVICE)
-        return _hamming_probe_tail(
-            empty, id_col, hash_col,
-            spark.table(f"{table_name}_summary"),
-            spark.table(f"{table_name}_bands"),
-            n_bands, radius, hash_bits, bucket_cap,
-        )
-
-    try:
-        with leases.stream_lease(table_name) as lease:
-            state["lease"] = lease
-            return run_bounded_stream(
-                spark,
-                batch_df,
-                lambda s: s,
-                reader_options=reader_options or {"maxFilesPerTrigger": "1"},
-                batch_transform=probe,
-                pass_batch_id=True,
-                drain_transform=drain,
-            )
-    finally:
-        # every micro-batch's output is already materialized by the
-        # sink, so the final snapshots have no consumer — release their
-        # blocks NOW instead of hoping the ContextCleaner gets to them
-        _release_local_checkpoint(state["idx"])
-        _release_local_checkpoint(state["ib"])
-        state["idx"] = state["ib"] = None
 
 
 def stream_probe_minhash_index(
@@ -729,128 +653,38 @@ def stream_probe_minhash_index(
     threshold: float = 0.5,
     bucket_cap: int | None = None,
     reader_options: dict[str, str] | None = None,
-    refresh_every_n_batches: int | None = None,
     on_batch_start: Callable[[int], None] | None = None,
 ) -> DataFrame:
     """stream_probe_hamming_index's Jaccard twin: micro-batches of raw
-    documents probed inside foreachBatch against a PERSISTED
-    build_minhash_index table set (bucketed band/shingle-set tables).
-    Each micro-batch shingles and hashes only its own documents; the
-    corpus is never re-shingled. Per-doc matches are independent of
-    batching, so the drained output equals the batch probe_minhash_index
-    over the same frame (parity pinned in
-    tests/test_round9_properties.py).
+    documents, each run through the batch probe_minhash_index against a
+    PERSISTED build_minhash_index table set. Each micro-batch shingles
+    and hashes only its own documents; the corpus is never re-shingled.
+    The drained output equals probe_minhash_index over the same frame
+    (parity pinned in tests/test_streaming.py).
 
-    Index meta is read ONCE; each micro-batch's shingle frame is
-    persisted for its own two reads and released right after the batch's
-    write (run_bounded_stream's batch_cleanup — the r9 ADVICE fix: the
-    previous shape leaked one cache entry per micro-batch for the
-    session's lifetime). `refresh_every_n_batches` / `on_batch_start`
-    are the snapshot policy and maintenance hook, exactly as on
-    stream_probe_hamming_index."""
-    from dsacord_spark.operators.dedup import (
-        _doc_shingle_arrays,
-        _jaccard_verify_arrays,
-        _minhash_probe_tail,
-        _minhash_sig_from_ngr,
-        _read_index_meta,
-        _shingle_frame,
-        minhash_bands,
+    The batch probe persists the micro-batch's shingle frame for its
+    two reads; it is released right after the batch's write (the r9
+    ADVICE fix: without it one cache entry per micro-batch leaked for
+    the session's lifetime). Meta, prune decision, per-batch re-reads
+    and the hook are as on stream_probe_hamming_index."""
+    from dsacord_spark.operators.dedup import _minhash_index_prober
+
+    prober = _minhash_index_prober(spark, table_name)
+    pinned: list[DataFrame] = []
+
+    def probe(b: DataFrame) -> DataFrame:
+        out, bngr = prober(b, id_col, text_col, threshold, bucket_cap)
+        pinned.append(bngr)
+        return out
+
+    def release() -> None:
+        while pinned:
+            pinned.pop().unpersist()
+
+    return _stream_index_probe(
+        spark, table_name, batch_df, probe, reader_options,
+        on_batch_start, release=release,
     )
-
-    if refresh_every_n_batches is not None and refresh_every_n_batches < 1:
-        raise ValueError(
-            f"refresh_every_n_batches must be >= 1 or None, got "
-            f"{refresh_every_n_batches}"
-        )
-    meta = _read_index_meta(
-        spark, table_name, ("n", "n_perm", "bands"), "MinHash"
-    )
-    n, n_perm, bands = int(meta["n"]), int(meta["n_perm"]), int(meta["bands"])
-    state: dict = {"gen": None, "ib": None, "sh": None, "pending": []}
-
-    def _frames(batch_id: int) -> tuple[DataFrame, DataFrame]:
-        if refresh_every_n_batches is None:
-            return (
-                spark.table(f"{table_name}_bands"),
-                spark.table(f"{table_name}_shingles"),
-            )
-        # batch-id-keyed generations, retry-stable (see the Hamming twin)
-        gen = batch_id // refresh_every_n_batches
-        if state["gen"] != gen or state["ib"] is None:
-            # localCheckpoint for true snapshot semantics (see
-            # stream_probe_hamming_index — persisted table frames are
-            # re-cached on any table write); retired generation released
-            # eagerly (_release_local_checkpoint)
-            _release_local_checkpoint(state["ib"])
-            _release_local_checkpoint(state["sh"])
-            state["ib"] = spark.table(
-                f"{table_name}_bands"
-            ).localCheckpoint(eager=True)
-            state["sh"] = spark.table(
-                f"{table_name}_shingles"
-            ).localCheckpoint(eager=True)
-            state["gen"] = gen
-        return state["ib"], state["sh"]
-
-    def probe(b: DataFrame, batch_id: int) -> DataFrame:
-        if on_batch_start is not None:
-            # boundary window — see stream_probe_hamming_index
-            with leases.at_boundary(state["lease"]):
-                on_batch_start(batch_id)
-        ib, sh = _frames(batch_id)
-        bngr = _shingle_frame(b, id_col, text_col, n).persist()
-        state["pending"].append(bngr)
-        b_sig = _minhash_sig_from_ngr(bngr, n_perm)
-        return _minhash_probe_tail(
-            b, id_col,
-            minhash_bands(b_sig, n_perm, bands),
-            ib, threshold, bucket_cap,
-            verify=lambda cand: _jaccard_verify_arrays(
-                cand, "bdoc", "idoc", _doc_shingle_arrays(bngr), sh,
-                threshold,
-            ),
-        )
-
-    def cleanup() -> None:
-        for f in state["pending"]:
-            f.unpersist()
-        state["pending"].clear()
-
-    def drain(empty: DataFrame) -> DataFrame:
-        # zero-micro-batch drain: no maintenance hook, no eager
-        # snapshots, and no persist registration — the empty shingle
-        # frame is used inline (r11 ADVICE; see the Hamming twin)
-        bngr = _shingle_frame(empty, id_col, text_col, n)
-        b_sig = _minhash_sig_from_ngr(bngr, n_perm)
-        return _minhash_probe_tail(
-            empty, id_col,
-            minhash_bands(b_sig, n_perm, bands),
-            spark.table(f"{table_name}_bands"),
-            threshold, bucket_cap,
-            verify=lambda cand: _jaccard_verify_arrays(
-                cand, "bdoc", "idoc", _doc_shingle_arrays(bngr),
-                spark.table(f"{table_name}_shingles"), threshold,
-            ),
-        )
-
-    try:
-        with leases.stream_lease(table_name) as lease:
-            state["lease"] = lease
-            return run_bounded_stream(
-                spark,
-                batch_df,
-                lambda s: s,
-                reader_options=reader_options or {"maxFilesPerTrigger": "1"},
-                batch_transform=probe,
-                batch_cleanup=cleanup,
-                pass_batch_id=True,
-                drain_transform=drain,
-            )
-    finally:
-        _release_local_checkpoint(state["ib"])
-        _release_local_checkpoint(state["sh"])
-        state["ib"] = state["sh"] = None
 
 
 def stream_probe_ivf_index(
@@ -865,54 +699,31 @@ def stream_probe_ivf_index(
     """The ANN twin of stream_probe_hamming_index (r12, closing the
     verdict's "any future streaming ANN probe" clause): micro-batches of
     query vectors (q_id, q_vec) are served top-k from a persisted
-    build_ivf_index lake inside foreachBatch. Each micro-batch re-reads
-    the lake's sidecar and cell partitions (maximum freshness — an
-    append from the boundary hook is visible to the NEXT batch), assigns
-    its own queries to cells, and scans only the probed cell partitions
-    (directory pruning) — probe cost tracks the micro-batch, never the
-    corpus. Per-query results are independent of batching, so the
-    drained output equals the batch query_ivf_index over the same
+    build_ivf_index lake by the batch query_ivf_index inside
+    foreachBatch. Each micro-batch re-reads the lake's sidecar and cell
+    partitions (an append from the boundary hook is seen by that batch),
+    assigns its own queries to cells, and scans only the probed cell
+    partitions (directory pruning) — probe cost tracks the micro-batch,
+    never the corpus. Per-query results are independent of batching, so
+    the drained output equals the batch query_ivf_index over the same
     queries (parity pinned in tests/test_ivf_lifecycle.py).
 
     The stream holds a lease on the lake path for its lifetime:
     append/retrain/build refuse mid-batch and are safe from the
-    `on_batch_start(i)` hook — the batch boundary, where no probe plan
-    is in flight and the lease is marked non-blocking (the compaction
-    interlock contract, applied to the ANN lake). The zero-micro-batch
-    drain shapes its empty output from the lazy serving plan — no hook,
-    no collects."""
+    `on_batch_start(i)` hook (_stream_index_probe). Each batch's result
+    (<= rows x k) is materialized inside the stream's lease, so nothing
+    lazy outlives the boundary; the zero-micro-batch drain shapes its
+    empty output from the lazy serving plan — no hook, no collects."""
     from dsacord_spark.operators.similarity import (
         _ivf_lease_name,
         query_ivf_index,
     )
 
-    state: dict = {}
-
-    def probe(b: DataFrame, batch_id: int) -> DataFrame:
-        if on_batch_start is not None:
-            # boundary window: maintenance (append_ivf_index /
-            # retrain_ivf_index) invoked synchronously from the hook is
-            # safe — see stream_probe_hamming_index
-            with leases.at_boundary(state["lease"]):
-                on_batch_start(batch_id)
-        # materialize=True: the batch's result (<= rows x k, always
-        # batch-small) is computed inside this batch's own stream lease,
-        # so nothing lazy outlives the boundary
-        return query_ivf_index(spark, path, b, nprobe=nprobe, k=k)
-
-    def drain(empty: DataFrame) -> DataFrame:
-        return query_ivf_index(
+    return _stream_index_probe(
+        spark, _ivf_lease_name(path), query_stream,
+        lambda b: query_ivf_index(spark, path, b, nprobe=nprobe, k=k),
+        reader_options, on_batch_start,
+        drain=lambda empty: query_ivf_index(
             spark, path, empty, nprobe=nprobe, k=k, materialize=False
-        )
-
-    with leases.stream_lease(_ivf_lease_name(path)) as lease:
-        state["lease"] = lease
-        return run_bounded_stream(
-            spark,
-            query_stream,
-            lambda s: s,
-            reader_options=reader_options or {"maxFilesPerTrigger": "1"},
-            batch_transform=probe,
-            pass_batch_id=True,
-            drain_transform=drain,
-        )
+        ),
+    )

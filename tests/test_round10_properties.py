@@ -10,10 +10,10 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from tests.test_round9_properties import (
+from tests.index_tables import (
     HAMMING_SUFFIXES,
     MINHASH_SUFFIXES,
-    _drop_index_tables,
+    drop_index_tables,
 )
 
 
@@ -103,7 +103,7 @@ def test_curate_daily_loop_is_retry_idempotent(spark, tmp_path, capsys):
             )
         finally:
             spark.catalog.clearCache()
-            _drop_index_tables(
+            drop_index_tables(
                 spark, tname,
                 HAMMING_SUFFIXES if method == "simhash"
                 else MINHASH_SUFFIXES,
@@ -168,7 +168,7 @@ def test_update_corpus_index_enforces_disjoint_append(spark):
             assert by_id[902][1] is False
         finally:
             spark.catalog.clearCache()
-            _drop_index_tables(spark, tname, suffixes)
+            drop_index_tables(spark, tname, suffixes)
 
 
 def test_probe_exclude_self_semantics(spark):
@@ -232,8 +232,8 @@ def test_probe_exclude_self_semantics(spark):
             assert on[30][1] is False and off[30][1] is False, name
     finally:
         spark.catalog.clearCache()
-        _drop_index_tables(spark, tmh, MINHASH_SUFFIXES)
-        _drop_index_tables(spark, tham, HAMMING_SUFFIXES)
+        drop_index_tables(spark, tmh, MINHASH_SUFFIXES)
+        drop_index_tables(spark, tham, HAMMING_SUFFIXES)
 
 
 def test_probe_index_scans_bucket_prune_to_batch_size(spark, sf_dir):
@@ -332,8 +332,8 @@ def test_probe_index_scans_bucket_prune_to_batch_size(spark, sf_dir):
     finally:
         spark.catalog.clearCache()
         sig.unpersist()
-        _drop_index_tables(spark, "t_bp_ham", HAMMING_SUFFIXES)
-        _drop_index_tables(spark, "t_bp_mh", MINHASH_SUFFIXES)
+        drop_index_tables(spark, "t_bp_ham", HAMMING_SUFFIXES)
+        drop_index_tables(spark, "t_bp_mh", MINHASH_SUFFIXES)
 
 
 def _mk_decisions(spark, ids, day: str = "2025-01-01"):
@@ -557,8 +557,8 @@ def test_compact_index_one_file_per_bucket_and_sort_free_probes(spark):
             prev_ord,
         )
         spark.catalog.clearCache()
-        _drop_index_tables(spark, "t_cpt_mh", MINHASH_SUFFIXES)
-        _drop_index_tables(spark, "t_cpt_ham", HAMMING_SUFFIXES)
+        drop_index_tables(spark, "t_cpt_mh", MINHASH_SUFFIXES)
+        drop_index_tables(spark, "t_cpt_ham", HAMMING_SUFFIXES)
 
 
 def test_curate_production_runbook_end_to_end(spark, tmp_path, capsys):
@@ -633,7 +633,7 @@ def test_curate_production_runbook_end_to_end(spark, tmp_path, capsys):
             assert _table_contents(spark, t, suffixes) == idx_state
         finally:
             spark.catalog.clearCache()
-            _drop_index_tables(spark, t, suffixes)
+            drop_index_tables(spark, t, suffixes)
 
 
 def test_curate_cli_compact_index(spark, tmp_path, capsys):
@@ -673,7 +673,7 @@ def test_curate_cli_compact_index(spark, tmp_path, capsys):
             main(["--method", "minhash"])  # neither --input nor compact
         assert "--input is required" in capsys.readouterr().err
     finally:
-        _drop_index_tables(spark, "t_cli_cpt", MINHASH_SUFFIXES)
+        drop_index_tables(spark, "t_cli_cpt", MINHASH_SUFFIXES)
 
 
 def test_read_index_meta_missing_or_empty_raises_rebuild_diagnostic(spark):
@@ -694,127 +694,6 @@ def test_read_index_meta_missing_or_empty_raises_rebuild_diagnostic(spark):
                              ("n", "n_perm", "bands"), "MinHash")
     finally:
         spark.sql("DROP TABLE IF EXISTS t_empty_meta_meta")
-
-
-def test_stream_probe_snapshot_policy_refresh_boundary(spark, tmp_path):
-    """r9 verdict item 5: refresh_every_n_batches snapshots the index
-    frames and re-reads them only at refresh boundaries. An index append
-    landed (via the on_batch_start hook) before micro-batch 1 is visible
-    from batch 1 on when N=1, and NEVER within the run when the snapshot
-    horizon exceeds the stream (N=100) — and the fresh-every-batch
-    default still equals the batch probe."""
-    from dsacord_spark.operators.dedup import (
-        build_minhash_index, probe_minhash_index,
-    )
-    from dsacord_spark.streaming.pipeline import stream_probe_minhash_index
-
-    base = spark.createDataFrame(
-        [(1, "completely unrelated base corpus document one"),
-         (2, "another unrelated base document about lakes")],
-        "doc_id long, text string",
-    )
-    delta_text = "the snapshot boundary pangram about zebras and spark"
-    delta = spark.createDataFrame(
-        [(50, delta_text)], "doc_id long, text string",
-    )
-    # 9 docs, all exact copies of the delta text, 3 per micro-batch
-    batch = spark.createDataFrame(
-        [(100 + i, delta_text) for i in range(9)],
-        "doc_id long, text string",
-    ).repartition(3)
-
-    def run(n_refresh):
-        tname = "t_snap_mh"
-        _drop_index_tables(spark, tname, MINHASH_SUFFIXES)
-        build_minhash_index(base, "doc_id", "text", tname, buckets=2)
-
-        def hook(i: int) -> None:
-            if i == 1:
-                build_minhash_index(
-                    delta, "doc_id", "text", tname, mode="append",
-                )
-
-        try:
-            out = stream_probe_minhash_index(
-                spark, tname, batch, "doc_id", "text",
-                refresh_every_n_batches=n_refresh,
-                on_batch_start=hook,
-            )
-            return out.filter(F.col("is_dup")).count()
-        finally:
-            _drop_index_tables(spark, tname, MINHASH_SUFFIXES)
-
-    # N=1: batches 1 and 2 (3 docs each) refresh after the append and
-    # match the delta; batch 0 predates it
-    assert run(1) == 6
-    # N=100: the batch-0 snapshot outlives the stream; the append is
-    # never seen
-    assert run(100) == 0
-
-    # default (fresh per batch) parity with the batch probe, unchanged
-    tname = "t_snap_par"
-    _drop_index_tables(spark, tname, MINHASH_SUFFIXES)
-    build_minhash_index(
-        base.union(delta), "doc_id", "text", tname, buckets=2,
-    )
-    try:
-        got = sorted(map(tuple, stream_probe_minhash_index(
-            spark, tname, batch, "doc_id", "text",
-        ).collect()))
-        want = sorted(map(tuple, probe_minhash_index(
-            spark, tname, batch, "doc_id", "text",
-        ).collect()))
-        assert got == want and sum(1 for r in got if r[1]) == 9
-    finally:
-        _drop_index_tables(spark, tname, MINHASH_SUFFIXES)
-
-
-def test_stream_probe_leaves_no_cache_entries(spark):
-    """r9 ADVICE: stream_probe_minhash_index persisted one batch shingle
-    frame per micro-batch with no unpersist — a session-lifetime leak in
-    the advertised daily loop. The probe now releases each batch's frame
-    after its write and its snapshot frames at drain: the persistent-RDD
-    census must be unchanged across a whole streamed probe."""
-    from dsacord_spark.operators.dedup import build_minhash_index
-    from dsacord_spark.streaming.pipeline import stream_probe_minhash_index
-
-    base = spark.createDataFrame(
-        [(1, "a base document about spark streaming probes here")],
-        "doc_id long, text string",
-    )
-    batch = spark.createDataFrame(
-        [(100 + i, f"probe doc {i} about spark streaming probes here")
-         for i in range(6)],
-        "doc_id long, text string",
-    ).repartition(3)
-    tname = "t_leak_mh"
-    _drop_index_tables(spark, tname, MINHASH_SUFFIXES)
-    build_minhash_index(base, "doc_id", "text", tname, buckets=2)
-    try:
-        import gc
-        import time
-
-        before = spark._jsc.sc().getPersistentRDDs().size()
-        for n_refresh in (None, 2):
-            out = stream_probe_minhash_index(
-                spark, tname, batch, "doc_id", "text",
-                refresh_every_n_batches=n_refresh,
-            )
-            out.count()
-            del out
-            # snapshot mode's localCheckpoint blocks are reclaimed by
-            # the ASYNC ContextCleaner once unreferenced — poll
-            for _ in range(30):
-                gc.collect()
-                spark._jvm.System.gc()
-                if spark._jsc.sc().getPersistentRDDs().size() <= before:
-                    break
-                time.sleep(1)
-            assert spark._jsc.sc().getPersistentRDDs().size() <= before, (
-                f"cache leak with refresh_every_n_batches={n_refresh}"
-            )
-    finally:
-        _drop_index_tables(spark, tname, MINHASH_SUFFIXES)
 
 
 def test_run_backfill_custom_sink_without_action_does_not_hang(
@@ -1032,8 +911,8 @@ def test_minhash_append_crash_between_tables_heals_on_retry(spark):
         ).count() == 1
     finally:
         spark.catalog.clearCache()
-        _drop_index_tables(spark, "t_crash_mh", MINHASH_SUFFIXES)
-        _drop_index_tables(spark, "t_crash_ref", MINHASH_SUFFIXES)
+        drop_index_tables(spark, "t_crash_mh", MINHASH_SUFFIXES)
+        drop_index_tables(spark, "t_crash_ref", MINHASH_SUFFIXES)
 
 
 def test_overwrite_build_drops_stale_meta_first(spark):
@@ -1068,5 +947,5 @@ def test_overwrite_build_drops_stale_meta_first(spark):
         assert (meta2["n_bands"], meta2["hash_bits"]) == (4, SIMHASH_BITS)
     finally:
         spark.catalog.clearCache()
-        _drop_index_tables(spark, "t_regen", MINHASH_SUFFIXES)
-        _drop_index_tables(spark, "t_regen2", HAMMING_SUFFIXES)
+        drop_index_tables(spark, "t_regen", MINHASH_SUFFIXES)
+        drop_index_tables(spark, "t_regen2", HAMMING_SUFFIXES)

@@ -2,19 +2,13 @@
 pre-aggregate self-exclusion (cross-hash evidence survives), the
 rebuild path dropping a stale uuid index, the heal append honoring the
 existing index's bucket spec, compact_bucketed_table's rename-aside
-swap, and the streaming probes' refresh-policy validation + batch-id
-keyed snapshot generations."""
+swap, and the fast literal-IN filter."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from tests.test_round9_properties import (
-    HAMMING_SUFFIXES,
-    MINHASH_SUFFIXES,
-    _drop_index_tables,
-)
+from tests.index_tables import HAMMING_SUFFIXES, drop_index_tables
 
 
 def test_probe_exclude_self_keeps_cross_hash_evidence(spark):
@@ -65,7 +59,7 @@ def test_probe_exclude_self_keeps_cross_hash_evidence(spark):
             True, 3, 2)
     finally:
         spark.catalog.clearCache()
-        _drop_index_tables(spark, t, HAMMING_SUFFIXES)
+        drop_index_tables(spark, t, HAMMING_SUFFIXES)
 
 
 def test_rebuild_drops_stale_uuid_index(spark, tmp_path):
@@ -244,115 +238,6 @@ def test_in_literals_matches_isin(spark):
     assert got_s == ["7", "9"]  # non-int fallback path
 
 
-def test_compact_index_interleaves_with_stream_probe(spark):
-    """r10 verdict item 4: compacting an index UNDER a live snapshot
-    stream. The safe pattern — compact from the stream's own
-    on_batch_start hook (a batch boundary) — must succeed mid-stream,
-    and the stream must stay CORRECT across the following snapshot
-    refresh boundary (which re-reads the now-compacted tables). A
-    compaction attempted while a mid-batch lease is held must refuse."""
-    from dsacord_spark import leases
-    from dsacord_spark.operators.dedup import (
-        SIMHASH_BITS, build_hamming_index, compact_index,
-        probe_hamming_index, simhash_signatures,
-    )
-    from dsacord_spark.streaming.pipeline import stream_probe_hamming_index
-
-    docs = spark.createDataFrame(
-        [(i, f"document number {i} with mostly shared boilerplate text "
-              f"and a unique token tok{i}") for i in range(16)],
-        "doc_id long, text string",
-    )
-    t = "t_r11_ilv"
-    try:
-        sig = simhash_signatures(docs, "doc_id", "text")
-        build_hamming_index(sig, "doc", "simhash", t,
-                            n_bands=4, hash_bits=SIMHASH_BITS, buckets=4)
-        # append a second generation so buckets span >1 file and the
-        # compaction has real work
-        from dsacord_spark.curate import update_corpus_index
-
-        update_corpus_index(
-            spark.createDataFrame(
-                [(100 + i, f"later appended doc {i} carrying token "
-                           f"late{i}") for i in range(4)],
-                "doc_id long, text string",
-            ), "simhash", t,
-        )
-        # refusal: a held mid-batch lease blocks compaction
-        with leases.stream_lease(t):
-            with pytest.raises(RuntimeError, match="refused"):
-                compact_index(spark, t)
-            compact_index(spark, t, force=True)  # override works
-        assert leases.blocking_leases(t) == 0  # lease released
-
-        batch = sig.repartition(4)  # 4 staged files -> 4 micro-batches
-        compacted = {}
-
-        def hook(i: int) -> None:
-            if i == 1:
-                # mid-stream, at a boundary: must succeed (the lease is
-                # marked non-blocking inside the hook window)
-                compacted.update(compact_index(spark, t))
-
-        streamed = stream_probe_hamming_index(
-            spark, t, batch, "doc", "simhash",
-            refresh_every_n_batches=2, on_batch_start=hook,
-        )
-        got = sorted(map(tuple, streamed.collect()))
-        assert compacted, "hook never compacted — batch 1 did not run"
-        for s, st in compacted.items():
-            assert st["files_after"] <= st["n_buckets"], (s, st)
-        # correctness across the refresh boundary (batch 2 re-reads the
-        # compacted tables): equals the batch probe over the same frame
-        want = sorted(map(tuple, probe_hamming_index(
-            spark, t, batch, "doc", "simhash").collect()))
-        assert got == want
-        assert leases.blocking_leases(t) == 0
-    finally:
-        spark.catalog.clearCache()
-        _drop_index_tables(spark, t, HAMMING_SUFFIXES)
-
-
-def test_stream_probe_refresh_policy_validation(spark):
-    """r10 ADVICE: refresh_every_n_batches=0 used to reach the modulo
-    and die with ZeroDivisionError inside the first micro-batch; the
-    N >= 1 contract is now validated up front, before any stream
-    machinery spins up."""
-    from dsacord_spark.operators.dedup import (
-        SIMHASH_BITS, build_hamming_index, build_minhash_index,
-        simhash_signatures,
-    )
-    from dsacord_spark.streaming.pipeline import (
-        stream_probe_hamming_index,
-        stream_probe_minhash_index,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta")],
-        "doc_id long, text string",
-    )
-    tmh, tham = "t_r11_smh", "t_r11_sham"
-    try:
-        build_minhash_index(docs, "doc_id", "text", tmh, buckets=2)
-        sig = simhash_signatures(docs, "doc_id", "text")
-        build_hamming_index(sig, "doc", "simhash", tham,
-                            n_bands=4, hash_bits=SIMHASH_BITS, buckets=2)
-        for bad in (0, -3):
-            with pytest.raises(ValueError, match=">= 1"):
-                stream_probe_hamming_index(
-                    spark, tham, sig, "doc", "simhash",
-                    refresh_every_n_batches=bad)
-            with pytest.raises(ValueError, match=">= 1"):
-                stream_probe_minhash_index(
-                    spark, tmh, docs, "doc_id", "text",
-                    refresh_every_n_batches=bad)
-    finally:
-        spark.catalog.clearCache()
-        _drop_index_tables(spark, tmh, MINHASH_SUFFIXES)
-        _drop_index_tables(spark, tham, HAMMING_SUFFIXES)
-
-
 def test_in_literals_isin_parity_property(spark):
     """Hypothesis pin for the fast literal-IN: for ANY list of int64
     values (boundaries included), the parsed-SQL form selects exactly
@@ -386,36 +271,3 @@ def test_in_literals_isin_parity_property(spark):
         check()
     finally:
         df.unpersist()
-
-
-def test_stream_probe_empty_batch_returns_empty_frame(spark):
-    """r11 review: a bounded stream that drains ZERO micro-batches (an
-    empty staged batch writes no data files) reaches run_bounded_stream's
-    fallback, which must honor the 2-arg batch_transform contract — it
-    used to call the probe with one arg and die with TypeError instead
-    of returning an empty, correctly-shaped result."""
-    from dsacord_spark.operators.dedup import (
-        SIMHASH_BITS, build_hamming_index, simhash_signatures,
-    )
-    from dsacord_spark.streaming.pipeline import stream_probe_hamming_index
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta")],
-        "doc_id long, text string",
-    )
-    t = "t_r11_empty"
-    try:
-        sig = simhash_signatures(docs, "doc_id", "text")
-        build_hamming_index(sig, "doc", "simhash", t,
-                            n_bands=4, hash_bits=SIMHASH_BITS, buckets=2)
-        empty = sig.filter(F.lit(False))
-        out = stream_probe_hamming_index(spark, t, empty, "doc", "simhash")
-        assert out.count() == 0
-        assert out.columns == ["doc", "is_dup", "match_id", "best_hamming"]
-        # and with the snapshot policy set (the pass_batch_id path)
-        out2 = stream_probe_hamming_index(
-            spark, t, empty, "doc", "simhash", refresh_every_n_batches=2)
-        assert out2.count() == 0
-    finally:
-        spark.catalog.clearCache()
-        _drop_index_tables(spark, t, HAMMING_SUFFIXES)

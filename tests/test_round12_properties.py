@@ -58,68 +58,6 @@ def test_shape_empty_drain_prefers_side_effect_free_path(spark):
     assert out.count() == 0 and effects == ["batch:0"]
 
 
-def test_zero_batch_drain_is_side_effect_free(
-    spark, sf_dir, monkeypatch
-):
-    """r11 ADVICE, end-to-end through the probes' own drain closures:
-    when the bounded runner reports zero micro-batches, the index
-    probes must shape their empty output WITHOUT firing on_batch_start
-    (the maintenance hook could compact an index for a batch that never
-    ran) and without eager snapshot checkpoints. The runner is stubbed
-    to the zero-batch branch (under availableNow even an empty staged
-    input runs one empty micro-batch, so the branch is defensive); the
-    drain closures and the probe tails they build are the real ones."""
-    from dsacord_spark.operators.dedup import (
-        build_hamming_index,
-        build_minhash_index,
-    )
-    from dsacord_spark.streaming import pipeline as sp
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .limit(40)
-    )
-    calls: list[int] = []
-
-    def fake_runner(spark_, batch_df, transform, **kw):
-        return sp._shape_empty_drain(
-            spark_, transform(batch_df).schema, kw.get("batch_transform"),
-            kw.get("pass_batch_id", False), kw.get("drain_transform"),
-        )
-
-    monkeypatch.setattr(sp, "run_bounded_stream", fake_runner)
-    try:
-        build_hamming_index(
-            docs.select("doc_id", F.xxhash64("text").alias("h")),
-            "doc_id", "h", "t_r12_drain_ham",
-        )
-        out = sp.stream_probe_hamming_index(
-            spark, "t_r12_drain_ham",
-            spark.createDataFrame([], "doc_id long, h long"),
-            "doc_id", "h",
-            refresh_every_n_batches=1,
-            on_batch_start=calls.append,
-        )
-        assert out.count() == 0 and len(out.columns) >= 2
-        assert calls == [], "hook fired for a batch that never ran"
-
-        build_minhash_index(docs, "doc_id", "text", "t_r12_drain_mh")
-        out = sp.stream_probe_minhash_index(
-            spark, "t_r12_drain_mh",
-            spark.createDataFrame([], "doc_id long, text string"),
-            "doc_id", "text",
-            refresh_every_n_batches=1,
-            on_batch_start=calls.append,
-        )
-        assert out.count() == 0 and len(out.columns) >= 2
-        assert calls == [], "hook fired for a batch that never ran"
-    finally:
-        for t in ("t_r12_drain_ham", "t_r12_drain_mh"):
-            for suffix in ("_summary", "_bands", "_shingles", "_meta"):
-                spark.sql(f"DROP TABLE IF EXISTS {t}{suffix}")
-
-
 def test_annctl_stats_survives_null_mean_cos(spark, tmp_path, capsys):
     """r11 ADVICE (medium): a cell whose members are all zero-norm
     vectors is legal input — cosine is NULL via try_divide, so the cell

@@ -1,22 +1,19 @@
 """Round-9 pins: the persisted MinHash index (the Jaccard twin of
 build_hamming_index — r8 verdict ask #1), multi-delta append stress for
-the Hamming index (ask #7), the streaming probe served from the
-persisted index (ask #6), and the curate CLI's --build-index /
---index-table path."""
+the Hamming index (ask #7), and the curate CLI's --build-index /
+--index-table path (the streaming probes served from the persisted
+index, ask #6, are pinned in tests/test_streaming.py)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-
-def _drop_index_tables(spark, name: str, suffixes) -> None:
-    for s in suffixes:
-        spark.sql(f"DROP TABLE IF EXISTS {name}_{s}")
-
-
-MINHASH_SUFFIXES = ("bands", "shingles", "meta")
-HAMMING_SUFFIXES = ("summary", "bands", "meta")
+from tests.index_tables import (
+    HAMMING_SUFFIXES,
+    MINHASH_SUFFIXES,
+    drop_index_tables,
+)
 
 
 def test_persisted_minhash_index_matches_inmemory_probe(spark, sf_dir):
@@ -51,7 +48,7 @@ def test_persisted_minhash_index_matches_inmemory_probe(spark, sf_dir):
             assert got == want and len(got) > 0, f"cap={cap}"
         assert any(r[1] for r in got), "corpus has dups; none matched"
     finally:
-        _drop_index_tables(spark, "t_mh_idx", MINHASH_SUFFIXES)
+        drop_index_tables(spark, "t_mh_idx", MINHASH_SUFFIXES)
 
 
 def test_minhash_index_build_validations(spark):
@@ -125,8 +122,8 @@ def test_minhash_index_append_mode_extends_index(spark):
                                 n=2, n_perm=32, bands=8, buckets=2,
                                 mode="append")
     finally:
-        _drop_index_tables(spark, "t_mh_app", MINHASH_SUFFIXES)
-        _drop_index_tables(spark, "t_mh_fresh", MINHASH_SUFFIXES)
+        drop_index_tables(spark, "t_mh_app", MINHASH_SUFFIXES)
+        drop_index_tables(spark, "t_mh_fresh", MINHASH_SUFFIXES)
 
 
 def test_hamming_index_multi_delta_append_equals_fresh_build(spark, sf_dir):
@@ -183,44 +180,8 @@ def test_hamming_index_multi_delta_append_equals_fresh_build(spark, sf_dir):
         assert any(r[1] for r in got)
     finally:
         sig.unpersist()
-        _drop_index_tables(spark, "t_ham_md", HAMMING_SUFFIXES)
-        _drop_index_tables(spark, "t_ham_fresh", HAMMING_SUFFIXES)
-
-
-def test_stream_probe_from_persisted_index_parity(spark, sf_dir):
-    """r8 verdict ask #6: the daily-production streaming shape — index
-    ON DISK (build_hamming_index tables), new batch arriving in
-    micro-batches, each probed inside foreachBatch via the bucketed
-    tables — must produce exactly the catalog entry's output
-    (stream_incremental_dedup: in-memory persisted index frames), which
-    itself equals the batch probe."""
-    from dsacord_spark.operators.dedup import (
-        SIMHASH_BITS,
-        build_hamming_index,
-        simhash_signatures,
-    )
-    from dsacord_spark.plans.reports import stream_incremental_dedup
-    from dsacord_spark.streaming.pipeline import stream_probe_hamming_index
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sig = simhash_signatures(d, "doc_id", "text").persist()
-    try:
-        batch = sig.filter(F.col("doc") % 10 == 0).repartition(4)
-        index = sig.filter(F.col("doc") % 10 != 0)
-        build_hamming_index(index, "doc", "simhash", "t_ham_stream",
-                            n_bands=4, hash_bits=SIMHASH_BITS, buckets=4)
-        got = sorted(map(tuple, stream_probe_hamming_index(
-            spark, "t_ham_stream", batch.select("doc", "simhash"),
-            "doc", "simhash", radius=3,
-        ).withColumnRenamed("doc", "doc_id").collect()))
-        want = sorted(map(tuple, stream_incremental_dedup(
-            spark, sf_dir
-        ).collect()))
-        assert got == want and len(got) > 0
-        assert any(r[1] for r in got)
-    finally:
-        sig.unpersist()
-        _drop_index_tables(spark, "t_ham_stream", HAMMING_SUFFIXES)
+        drop_index_tables(spark, "t_ham_md", HAMMING_SUFFIXES)
+        drop_index_tables(spark, "t_ham_fresh", HAMMING_SUFFIXES)
 
 
 def test_curate_cli_build_index_then_index_table(spark, sf_dir, tmp_path,
@@ -268,7 +229,7 @@ def test_curate_cli_build_index_then_index_table(spark, sf_dir, tmp_path,
             assert rep_t["dropped_vs_index"] > 0  # corpus dups really hit
         finally:
             spark.catalog.clearCache()
-            _drop_index_tables(
+            drop_index_tables(
                 spark, tname,
                 HAMMING_SUFFIXES if method == "simhash"
                 else MINHASH_SUFFIXES,
@@ -283,37 +244,6 @@ def test_dedup_incremental_rejects_ambiguous_index_args(spark):
         dedup_incremental(docs)
     with pytest.raises(ValueError, match="exactly one"):
         dedup_incremental(docs, index_docs=docs, index_table="t")
-
-
-def test_stream_probe_minhash_index_parity(spark, sf_dir):
-    """The Jaccard twin of the streaming persisted-index probe:
-    micro-batched raw documents probed against the on-disk
-    build_minhash_index tables must equal the batch probe_minhash_index
-    (per-doc matches are batching-independent) — which the first test
-    already pins equal to the in-memory incremental probe."""
-    from dsacord_spark.operators.dedup import (
-        build_minhash_index,
-        probe_minhash_index,
-    )
-    from dsacord_spark.streaming.pipeline import stream_probe_minhash_index
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    batch = d.filter(F.col("doc_id") % 10 == 0).select("doc_id", "text") \
-        .repartition(4)
-    index = d.filter(F.col("doc_id") % 10 != 0)
-    try:
-        build_minhash_index(index, "doc_id", "text", "t_mh_stream",
-                            n=3, n_perm=32, bands=8, buckets=4)
-        got = sorted(map(tuple, stream_probe_minhash_index(
-            spark, "t_mh_stream", batch, "doc_id", "text", threshold=0.5,
-        ).collect()))
-        want = sorted(map(tuple, probe_minhash_index(
-            spark, "t_mh_stream", batch, "doc_id", "text", threshold=0.5,
-        ).collect()))
-        assert got == want and len(got) > 0
-        assert any(r[1] for r in got)
-    finally:
-        _drop_index_tables(spark, "t_mh_stream", MINHASH_SUFFIXES)
 
 
 def test_curate_update_index_closes_the_daily_loop(spark, tmp_path, capsys):
@@ -374,7 +304,7 @@ def test_curate_update_index_closes_the_daily_loop(spark, tmp_path, capsys):
             assert rep2["dropped_vs_index"] == 1 and rep2["docs_kept"] == 0
         finally:
             spark.catalog.clearCache()
-            _drop_index_tables(
+            drop_index_tables(
                 spark, tname,
                 HAMMING_SUFFIXES if method == "simhash"
                 else MINHASH_SUFFIXES,
@@ -431,7 +361,7 @@ def test_curate_cli_build_index_append_mode(spark, tmp_path, capsys):
         assert got == {10: (True, 1), 11: (True, 2), 12: (False, None)}
     finally:
         spark.catalog.clearCache()
-        _drop_index_tables(spark, "t_cli_app", MINHASH_SUFFIXES)
+        drop_index_tables(spark, "t_cli_app", MINHASH_SUFFIXES)
 
 
 def test_probe_rejects_wrong_index_family(spark):
@@ -456,8 +386,8 @@ def test_probe_rejects_wrong_index_family(spark):
         with pytest.raises(ValueError, match="not a MinHash index"):
             probe_minhash_index(spark, "t_fam_ham", docs, "doc_id", "text")
     finally:
-        _drop_index_tables(spark, "t_fam_mh", MINHASH_SUFFIXES)
-        _drop_index_tables(spark, "t_fam_ham", HAMMING_SUFFIXES)
+        drop_index_tables(spark, "t_fam_mh", MINHASH_SUFFIXES)
+        drop_index_tables(spark, "t_fam_ham", HAMMING_SUFFIXES)
 
 
 def test_persisted_minhash_index_hypothesis_random_docs(spark):
@@ -508,6 +438,6 @@ def test_persisted_minhash_index_hypothesis_random_docs(spark):
             assert got == want
         finally:
             spark.catalog.clearCache()
-            _drop_index_tables(spark, "t_mh_hyp", MINHASH_SUFFIXES)
+            drop_index_tables(spark, "t_mh_hyp", MINHASH_SUFFIXES)
 
     run()
