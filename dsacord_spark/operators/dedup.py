@@ -21,6 +21,7 @@ reproduce results bit-for-bit.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
+from pyspark.sql.types import StructField, StructType
 
 from dsacord_spark.functions.hashing import (
     SCRAMBLE_MOD1 as _BAND_SCRAMBLE_MOD1,
@@ -32,6 +33,7 @@ from dsacord_spark.functions.hashing import (
     perm_hash,
 )
 from dsacord_spark.functions.text import tokens, word_ngrams
+from dsacord_spark.session import local_frame
 
 # Cap on driver-side IN-lists the persisted-index probes push into the
 # corpus-side scans (band keys / matched hashes / candidate doc ids).
@@ -650,7 +652,8 @@ def duplicate_components(pairs: DataFrame) -> DataFrame:
     one canonical doc per cluster).
 
     The route is picked from the measured edge count. Up to 200k
-    symmetric edges, union-find on the driver. Above that, min-label
+    symmetric edges (twice the pair count), union-find on the driver
+    over the pairs as given. Above that, min-label
     propagation to a fixpoint — each round every node takes the min of
     its own label and its neighbors' labels (one shuffle join + one
     partial-aggregated groupBy per round), converging in O(component
@@ -666,38 +669,39 @@ def duplicate_components(pairs: DataFrame) -> DataFrame:
     "Connected Components in MapReduce and Beyond", 2014), which
     contracts components in O(log n) rounds regardless of diameter, so a
     1M-link chain costs ~20 rounds instead of an impossible 1M."""
-    # persist the DIRECTED edges before symmetrizing: union(e, swap(e))
-    # evaluates its input twice, and the input here is the whole pair-
-    # generation pipeline (measured ~2x the query without this persist)
+    # persist the directed edges: the input is the whole pair-generation
+    # pipeline (measured ~2x the query without this persist), and the
+    # count below, the collect or the symmetric union re-read it.
+    # Union-find needs one orientation per pair; only the distributed
+    # loop reads both, so only that route builds the symmetric list.
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).persist()
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).persist()
     # The edge list is usually orders of magnitude smaller than the corpus
     # (it only holds near-dup evidence), but the session's shuffle
     # partitioning is sized for the corpus — at 32+ partitions each tiny
     # per-round join pays full scheduling fan-out. Size the loop's shuffle
-    # from the measured edge count instead (~500k edges/partition; the
-    # count also materializes the persist before the loop re-reads it).
+    # from the measured symmetric edge count instead (~500k
+    # edges/partition; the count also materializes the persist).
     spark = pairs.sparkSession
-    n_edges = sym.count()
-    edges.unpersist()  # sym is materialized now; the directed copy is done
+    n_edges = 2 * edges.count()
     # Small-graph shortcut: near-dup edge lists from bucketed candidate
     # generation are tiny relative to the corpus (they hold only actual
     # duplicate evidence). Below the threshold, union-find on the driver
     # beats any distributed loop — one collect replaces d rounds of
     # join+agg+checkpoint (measured 2-3s saved at a 256-edge graph, and
     # the gap grows with diameter). The cap is sized for the DRIVER's
-    # collect cost (200k Row objects ~ tens of MB incl. the JVM buffer),
-    # not for "still feels small" — the distributed loop handles
-    # everything larger.
+    # collect cost (200k symmetric edges: 100k Row objects, tens of MB
+    # incl. the JVM buffer), not for "still feels small" — the
+    # distributed loop handles everything larger.
     if n_edges <= 200_000:
         try:
-            return _driver_union_find(spark, sym)
+            return _driver_union_find(spark, edges)
         finally:
-            sym.unpersist()
+            edges.unpersist()
+    sym = edges.union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).persist()
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     loop_parts = max(1, min(int(prev_parts), n_edges // 500_000 + 1))
     spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
@@ -705,6 +709,7 @@ def duplicate_components(pairs: DataFrame) -> DataFrame:
         return _distributed_components(sym)
     finally:
         sym.unpersist()
+        edges.unpersist()
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
@@ -723,10 +728,12 @@ def _distributed_components(sym: DataFrame) -> DataFrame:
         return _large_small_star(sym)
 
 
-def _driver_union_find(spark, sym: DataFrame) -> DataFrame:
+def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
     """Exact connected components on the driver (path-compressed
-    union-find); output labels are the component-min doc id, identical to
-    the propagation fixpoint."""
+    union-find) over an edge list in either orientation (one direction
+    per pair suffices); output labels are the component-min doc id,
+    identical to the propagation fixpoint. The result is a local
+    relation, so downstream joins read it in the JVM."""
     parent: dict = {}
 
     def find(x):
@@ -739,7 +746,7 @@ def _driver_union_find(spark, sym: DataFrame) -> DataFrame:
 
     # one parallel collect — the caller guarantees the edge bound, and
     # toLocalIterator would fetch the 32 shuffle partitions serially
-    for row in sym.collect():
+    for row in edges.collect():
         a, b = row["src"], row["dst"]
         if a not in parent:
             parent[a] = a
@@ -754,8 +761,10 @@ def _driver_union_find(spark, sym: DataFrame) -> DataFrame:
         if r not in comp_min or n < comp_min[r]:
             comp_min[r] = n
     rows = [(n, comp_min[roots[n]]) for n in sorted(roots)]
-    id_type = sym.schema["src"].dataType.simpleString()
-    return spark.createDataFrame(rows, f"doc_id {id_type}, cluster_id {id_type}")
+    id_type = edges.schema["src"].dataType
+    return local_frame(spark, rows, StructType([
+        StructField("doc_id", id_type), StructField("cluster_id", id_type),
+    ]))
 
 
 def _propagate_min_labels(sym: DataFrame, max_iter: int) -> DataFrame:
@@ -2246,7 +2255,7 @@ def _minhash_index_prober(spark, table_name: str, prune: bool | None = None):
                 pairs = cand.take(_PROBE_PRUNE_LIMIT + 1)
                 if len(pairs) <= _PROBE_PRUNE_LIMIT:
                     ids = sorted({r["idoc"] for r in pairs})
-                    cand = spark.createDataFrame(pairs, cand.schema)
+                    cand = local_frame(spark, pairs, cand.schema)
                     ab = ab.filter(_in_literals("doc", ids))
                 else:
                     ids = cand.select("idoc").distinct().take(

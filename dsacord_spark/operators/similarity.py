@@ -19,9 +19,13 @@ from __future__ import annotations
 import hashlib
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
+from pyspark.sql.types import (
+    ArrayType, DoubleType, LongType, StructField, StructType,
+)
 
 from dsacord_spark import leases
 from dsacord_spark.functions.vectors import cosine, dot, norm
+from dsacord_spark.session import local_frame
 
 # sidecar I/O shared with leases.py's maintenance markers (r12 review:
 # two line-identical copies had started to drift); the old private
@@ -150,8 +154,6 @@ def block_topk_cosine(
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     src0 = emb.select(id_col, vec_col, *payload_cols)
     empty_schema = StructType(
         [
@@ -856,7 +858,7 @@ def query_ivf_index(
         # result frame died, tripping the persistent-RDD census — r11
         # review of annctl).
         probe_rows = assigned.collect()
-        probes = spark.createDataFrame(probe_rows, assigned.schema)
+        probes = local_frame(spark, probe_rows, assigned.schema)
         cells = sorted({r["cell"] for r in probe_rows})
         cell_filter = (
             F.col("cell").isin(cells) if cells else F.lit(False)
@@ -876,7 +878,7 @@ def query_ivf_index(
         if not materialize:
             return result
         rows = result.collect()
-        return spark.createDataFrame(rows, result.schema)
+        return local_frame(spark, rows, result.schema)
 
 
 def _quantized_probe(
@@ -930,7 +932,7 @@ def _quantized_probe(
         .select(id_col, vec_col, F.col("__vn").alias("__en"))
     )
     cand = (
-        spark.createDataFrame(pairs, shortlisted.schema)
+        local_frame(spark, pairs, shortlisted.schema)
         .join(
             # probes carries one row per (q_id, probed cell); the
             # rerank needs each query ONCE
@@ -1206,9 +1208,13 @@ def ivf_index_stats(spark, path: str) -> DataFrame:
     the cosine is JVM zip_with/aggregate, no Python in the plan."""
     meta = _read_ivf_meta(spark, path)
     vec_col = meta["vec_col"]
-    cents = spark.createDataFrame(
+    cents = local_frame(
+        spark,
         [(int(c), [float(x) for x in v]) for c, v in meta["centroids"]],
-        "cell long, __cent array<double>",
+        StructType([
+            StructField("cell", LongType()),
+            StructField("__cent", ArrayType(DoubleType())),
+        ]),
     )
     lake = spark.read.parquet(path).select("cell", vec_col)
     occupied = (

@@ -19,6 +19,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dsacord_spark.config import Config
+from dsacord_spark.hadoopfs import hadoop_path_exists
 from dsacord_spark.sinks.jdbc import dedup_batch
 from dsacord_spark.sinks.parquet import write_decisions_parquet
 from dsacord_spark.sources.stager import stage_range, stage_range_distributed
@@ -123,11 +124,16 @@ def run_backfill(
 
         def _lake_rows() -> int:
             # footer-metadata count: parquet row counts come from file
-            # footers (no data pages read), so this is file-count-sized
+            # footers (no data pages read), so this is file-count-sized.
+            # An absent lake (first run) is asked of the filesystem, not
+            # of spark.read: that read fails analysis with PATH_NOT_FOUND
+            # and logs the stack trace through the listener bus
+            if not hadoop_path_exists(spark, out):
+                return 0
             try:
                 return spark.read.parquet(out).count()
             except Exception:
-                return 0  # lake dir absent: first run / empty write
+                return 0  # lake dir without data files: empty write
 
         def sink(df: DataFrame) -> int:
             if rebuild:

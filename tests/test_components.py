@@ -276,3 +276,14 @@ def test_keep_canonical_covers_corpus_once(spark, sf_dir):
     for r in rows:
         per_cluster.setdefault(r["cluster_id"], []).append(r["kept"])
     assert all(sum(ks) == 1 for ks in per_cluster.values())
+
+
+def test_small_route_result_is_local_relation(spark):
+    """The driver union-find result is rebuilt as a local relation
+    (LocalTableScan), not a pickled Python RDD that every downstream
+    action re-runs through Python workers."""
+    out = duplicate_components(_edges(spark, PAIRS))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+    assert {r["doc_id"]: r["cluster_id"] for r in out.collect()} == EXPECTED

@@ -123,6 +123,38 @@ def test_default_sink_handles_all_quarantined_empty_write(spark, tmp_path):
     assert metrics.day_errors == []
 
 
+def test_first_backfill_never_reads_absent_lake(spark, tmp_path, monkeypatch):
+    """A first backfill into an empty landing dir asks the filesystem
+    whether the lake exists instead of reading the absent path (which
+    fails analysis with PATH_NOT_FOUND and logs a stack trace), and
+    still counts rows_written exactly."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    lake = str(tmp_path / "landing" / "decisions")
+    absent_reads = []
+    parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **options):
+        absent_reads.extend(p for p in paths if not os.path.exists(p))
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    served = {"2025-01-01": _day_zip("d1"), "2025-01-02": _day_zip("d2")}
+    metrics = run_backfill(
+        spark,
+        Config(date_from=date(2025, 1, 1), date_to=date(2025, 1, 2),
+               landing_dir=str(tmp_path / "landing")),
+        opener=lambda url: _Resp(
+            next(v for k, v in served.items() if k in url)
+        ),
+    )
+    assert absent_reads == []
+    assert metrics.rows_written == 2
+    assert spark.read.parquet(lake).count() == 2
+
+
 def _day_zip_at(uuid: str, created_at: str) -> bytes:
     """_day_zip with a controllable created_at so each dump day lands in
     its own dt= lake partition (the scoping tests below need disjoint
