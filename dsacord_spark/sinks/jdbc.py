@@ -86,10 +86,16 @@ def table_size_sql(table: str = "decisions") -> str:
 def dedup_batch(df: DataFrame, key: str = UPSERT_KEY) -> DataFrame:
     """Within-batch keep-latest on the upsert key (ON CONFLICT requires
     each key at most once per statement; order: latest created_at wins,
-    mirroring UpdateAll's last-write semantics)."""
-    w = W.partitionBy(key).orderBy(
-        F.col("created_at").desc_nulls_last(), F.col(UPSERT_KEY).asc()
-    )
+    mirroring UpdateAll's last-write semantics). Ties go to the later
+    `_source_file` (the reference upserts files in order, so the last
+    one wins), then to the remaining columns, so the survivor depends
+    only on the set of input rows: never on shuffle arrival order, which
+    a task retry can change."""
+    ties = [c for c in df.columns if c not in (key, "created_at", "_source_file")]
+    order = [F.col("created_at").desc_nulls_last()]
+    if "_source_file" in df.columns:
+        order.append(F.col("_source_file").desc_nulls_last())
+    w = W.partitionBy(key).orderBy(*order, *(F.col(c).asc_nulls_first() for c in ties))
     return df.withColumn("__rn", F.row_number().over(w)).filter(
         F.col("__rn") == 1
     ).drop("__rn")

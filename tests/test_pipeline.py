@@ -279,3 +279,80 @@ def test_config_rejects_unknown_staging():
     with pytest.raises(ValueError, match="staging"):
         Config(date_from=date(2025, 1, 1), date_to=date(2025, 1, 1),
                staging="carrier-pigeon").validate()
+
+
+# three versions of one uuid with the same created_at: only their
+# content differs, so the keep choice falls to the tie-breaks
+_CONFLICT = [
+    dict(_FULL_ROW, uuid="c-1", account_type=kind) for kind in ("b", "a", "c")
+]
+
+
+def _conflict_zip(rows: list[dict]) -> bytes:
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        zf.writestr("d.csv", HEADER + "\n" + "\n".join(map(_csv_row, rows)) + "\n")
+    return buf.getvalue()
+
+
+def _backfill_survivor(spark, tmp_path, rows: list[dict]) -> str:
+    kept: list = []
+
+    def sink(df):
+        kept.extend(df.select("uuid", "account_type").collect())
+        return len(kept)
+
+    run_backfill(
+        spark,
+        Config(date_from=date(2025, 1, 1), date_to=date(2025, 1, 1),
+               landing_dir=str(tmp_path / "landing")),
+        sink=sink,
+        opener=lambda url: _Resp(_conflict_zip(rows)),
+    )
+    assert [r["uuid"] for r in kept] == ["c-1"]
+    return kept[0]["account_type"]
+
+
+def _stream_survivor(spark, tmp_path, rows: list[dict]) -> str:
+    from dsacord_spark.streaming.pipeline import start_decisions_stream
+
+    day = tmp_path / "stream" / "dt=2025-01-01"
+    day.mkdir(parents=True)
+    (day / "d.csv").write_text(HEADER + "\n" + "\n".join(map(_csv_row, rows)) + "\n")
+    kept: list = []
+    q = start_decisions_stream(
+        spark, str(tmp_path / "stream"), str(tmp_path / "ckpt"),
+        lambda df, _epoch: kept.extend(df.select("uuid", "account_type").collect()),
+    )
+    q.awaitTermination(120)
+    assert [r["uuid"] for r in kept] == ["c-1"]
+    return kept[0]["account_type"]
+
+
+def test_dedup_keep_choice_ignores_row_order(spark, tmp_path):
+    """Rows that tie on uuid and created_at arrive at the dedup window in
+    file order; the survivor must not depend on it (a task retry can
+    change arrival order), in the backfill and in the stream's epoch."""
+    survivors = {
+        (path.__name__, order): path(spark, tmp_path / f"{path.__name__}{order}", rows)
+        for path in (_backfill_survivor, _stream_survivor)
+        for order, rows in enumerate((_CONFLICT, _CONFLICT[::-1]))
+    }
+    assert set(survivors.values()) == {"a"}, survivors
+
+
+def test_dedup_keep_choice_prefers_later_source_file(spark):
+    from pyspark.sql import functions as F
+
+    from dsacord_spark.sinks.jdbc import dedup_batch
+
+    rows = [
+        ("c-1", "a", "file:/landing/sbd-2025-01-01-full.zip!d.csv"),
+        ("c-1", "z", "file:/landing/sbd-2025-01-02-full.zip!d.csv"),
+    ]
+    for ordered in (rows, rows[::-1]):
+        df = spark.createDataFrame(
+            ordered, "uuid string, account_type string, _source_file string"
+        ).coalesce(1).withColumn("created_at", F.lit("2025-01-01").cast("timestamp"))
+        kept = dedup_batch(df).collect()
+        assert [(r["uuid"], r["account_type"]) for r in kept] == [("c-1", "z")]

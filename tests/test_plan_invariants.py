@@ -71,9 +71,14 @@ def _plans(spark, sf_dir):
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
-        simple = df._jdf.queryExecution().executedPlan().toString()
-        out[name] = {"fmt": buf.getvalue(), "simple": simple,
-                     "schema": df.schema}
+        qe = df._jdf.queryExecution()
+        out[name] = {
+            "df": df,
+            "fmt": buf.getvalue(),
+            "simple": qe.executedPlan().toString(),
+            "logical": _logical_tree(spark, qe.optimizedPlan()),
+            "schema": df.schema,
+        }
     return out
 
 
@@ -207,151 +212,220 @@ def _unbounded_scan_paths(nodes, children, root: int) -> bool:
     return any(walk(c) for c in children[root])
 
 
-def _self_col2tab(sf_dir):
-    import glob
-
-    import pyarrow.parquet as pq
-
-    col2tab: dict[str, set[str]] = {}
-    for p in glob.glob(sf_dir + "/*.parquet"):
-        tab = p.split("/")[-1].replace(".parquet", "")
-        for c in pq.read_schema(p).names:
-            col2tab.setdefault(c, set()).add(tab)
-    return col2tab
-
-
-_COLLIST = re.compile(r"\[([^\]]*)\]")
-
-
-def _rel_sig(name: str, col2tab) -> str | None:
-    """Identify the base relation a scan node reads: parquet scans by the
-    table whose schema contains the scanned columns (the toString
-    truncates the path, but the pruned column list survives), cached
-    frames by their (pruned) column-name set. Cache sigs are compared
-    with subset semantics in _shared_sigs — two projections of one
-    cached frame prune to different column lists, and exact-set
-    comparison would miss their self-join (review finding)."""
-    if name.startswith(("FileScan", "Scan parquet")):
-        m = _COLLIST.search(name)
-        cols = (
-            [c.split("#")[0].strip() for c in m.group(1).split(",")]
-            if m
-            else []
-        )
-        tabs: set[str] | None = None
-        for c in cols:
-            t = col2tab.get(c)
-            if t:
-                tabs = set(t) if tabs is None else tabs & t
-        if tabs:
-            # sign with the FULL ambiguity set: picking one candidate
-            # would give two different ambiguously-resolved tables the
-            # same sig and flag their legitimate join as a self-join
-            # (review finding; latent — no column name is shared across
-            # the current tables)
-            return "tab:" + ",".join(sorted(tabs))
-        # unresolvable scans keep their column list: collapsing them to
-        # one shared "?" sig would report a join of two DIFFERENT
-        # unresolved tables as a self-join (review finding)
-        return "tab:?" + ",".join(sorted(cols))
-    if name.startswith("InMemoryTableScan"):
-        m = _COLLIST.search(name)
-        cols = (
-            sorted({c.split("#")[0].strip() for c in m.group(1).split(",")})
-            if m
-            else []
-        )
-        return "cache:" + ",".join(cols)
-    # a SHUFFLE ReusedExchange is a leaf that hides its subtree — and it
-    # exists precisely because this subtree is IDENTICAL to another one
-    # in the same plan (Spark's ReuseExchange rule), i.e. a self-join's
-    # twin side. Treat it as a shared-relation wildcard so the join it
-    # sits under cannot escape detection by being pruned to a sigless
-    # leaf (review finding; latent — no current plan reuses a shuffle).
-    if name.startswith("ReusedExchange") and "BroadcastExchange" not in name:
-        return "reuse:shuffle"
-    return None
-
-
-def _shared_sigs(left: set, right: set) -> set:
-    """Relations shared by both join sides: table sigs match exactly;
-    cache sigs also match CROSS-SIDE when one pruned column set contains
-    the other (two projections of the same cached frame prune to
-    different lists — exact-set matching would miss that self-join)."""
-    shared = set(left & right)
-    # a shuffle-reuse leaf on EITHER side means that side duplicates a
-    # subtree elsewhere in the plan — conservatively treat EVERY
-    # relation of BOTH sides as shared (the reused subtree is the twin
-    # of something this join reads; declarations absorb any false
-    # positive). Adding only the marker would not do: the non-reuse
-    # side's own sigs must be in `shared` for its unbounded-path walk
-    # to register a hit.
-    if "reuse:shuffle" in left | right:
-        shared |= left | right
-    for ls in left:
-        if not ls.startswith("cache:"):
-            continue
-        lc = set(ls[6:].split(","))
-        for rs in right:
-            if not rs.startswith("cache:"):
-                continue
-            rc = set(rs[6:].split(","))
-            if lc and rc and (lc <= rc or rc <= lc):
-                shared.add(ls)
-                shared.add(rs)
-    return shared
-
-
-_JOIN = re.compile(
-    r"^(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin"
-    r"|BroadcastNestedLoopJoin|CartesianProduct)"
-)
-# Join TYPES that cannot multiply rows: anti/semi output at most one row
-# per left-side row, so they are never raw-by-raw self-joins regardless
-# of broadcast-vs-shuffle planning (which is the size estimate that made
-# declarations flip stale in r10).
-_NON_MULTIPLYING_JOIN = re.compile(r"\bLeft(Anti|Semi)\b")
-# STRONG cardinality bounds a plan can prove by itself: explicit limits,
-# a planner-certified-small broadcast side, a keyless (one-row)
-# aggregate, or a literal/range source. A KEYED aggregate is NOT here on
-# purpose: distinct/groupBy reduces but doesn't bound — the r5
-# hot-bucket finding lived exactly behind a distinct. ReusedExchange
-# counts ONLY when it reuses a BroadcastExchange (its toString carries
-# the referenced exchange on the same line): reusing a SHUFFLE exchange
-# is exactly what the planner does to a raw self-join's identical sides
-# and proves nothing about cardinality (review finding). Known residual
-# weakness, documented rather than fixable here: broadcast selection is
-# a size estimate at the TEST scale factor, so a side that broadcasts
-# at sf0.001 but shuffles at production scale auto-passes — the gate is
-# a strong screen, not a proof.
-_STRONG_BOUND = re.compile(
-    r"^(LocalLimit|GlobalLimit|TakeOrderedAndProject|CollectLimit"
-    r"|BroadcastExchange|LocalTableScan|Range\b)"
-    r"|^ReusedExchange\b.*BroadcastExchange"
-    r"|^(HashAggregate|SortAggregate|ObjectHashAggregate)\(keys=\[\]"
-)
-
 # --- invariant 5: self-joins must be bounded or declared -------------------
 #
 # The r5 verdict's manual audit caught an unbounded self-join shape (the
 # perceptual-hash joiner's duplicate-hash hot bucket) that no mechanical
 # invariant guarded. This gate turns that audit into CI: any join whose
-# BOTH subtrees reach the SAME base relation with no strong bound
-# (limit / broadcast / keyless agg) on the path is a raw-by-raw
-# self-join and MUST carry an entry here declaring why its output is
-# bounded. New entries with an undeclared self-join fail this test.
+# BOTH sides carry rows of the SAME base relation with no strong bound
+# (limit / broadcast hint / keyless agg / local rows) on the path is a
+# raw-by-raw self-join and MUST carry an entry here declaring why its
+# output is bounded. New entries with an undeclared self-join fail this
+# test.
+#
+# The gate reads the OPTIMIZED LOGICAL plan. The physical plan it read
+# before made broadcast-vs-shuffle choices from size estimates, so its
+# verdict moved with the host and the data (r10, r11 and r12 each
+# flipped an entry; a 4-CPU host then planned
+# dedup_incremental_probe_selfsafe's member stamp as a sort-merge join
+# and failed the gate on nothing that had changed). The logical plan is
+# settled before that choice: only an explicit broadcast hint counts as
+# a bound, and test_self_join_verdict_ignores_broadcast_threshold pins
+# the verdict across autoBroadcastJoinThreshold values.
+
+# logical nodes that bound the rows below them: limits, driver-local
+# rows and generated ranges (a keyless Aggregate, one row, is checked
+# in _raw_relations). A KEYED aggregate is not a bound on purpose: a
+# distinct or groupBy reduces but does not bound, and the r5 hot-bucket
+# finding lived exactly behind a distinct.
+_BOUNDING_NODES = {
+    "GlobalLimit", "LocalLimit", "Tail", "LocalRelation", "Range",
+    "OneRowRelation",
+}
+# join types whose output rows come from the left side only, at most one
+# per left row: never a raw-by-raw product, and their right side's rows
+# do not flow upward
+_NON_MULTIPLYING_JOIN = re.compile(r"^(LeftSemi|LeftAnti|ExistenceJoin)")
+
+
+def _logical_tree(spark, plan) -> dict:
+    """A JVM logical plan as nested dicts: node name, children, and what
+    the gate needs per kind (a join's type, broadcast hints and
+    condition; whether an aggregate is keyless; the identity of a base
+    relation: parquet root paths, the cache builder of a cached frame,
+    the RDD of a checkpointed one)."""
+    name = plan.nodeName()
+    kids = plan.children()
+    node = {
+        "name": name,
+        "kids": [_logical_tree(spark, kids.apply(i)) for i in range(kids.size())],
+    }
+    if name == "Join":
+        hint = plan.hint().toString()
+        node["type"] = plan.joinType().toString()
+        node["broadcast"] = [
+            f"{side}Hint=(strategy=broadcast" in hint for side in ("left", "right")
+        ]
+        node["cond"] = plan.condition().toString()
+    elif name == "Aggregate":
+        node["keyless"] = plan.groupingExpressions().isEmpty()
+    elif name == "LogicalRelation":
+        node["rel"] = "files:" + plan.relation().location().rootPaths().mkString(",")
+    elif name == "InMemoryRelation":
+        builder = spark._jvm.System.identityHashCode(plan.cacheBuilder())
+        node["rel"] = f"cache:{builder}"
+    elif name == "LogicalRDD":
+        node["rel"] = f"rdd:{plan.rdd().id()}"
+    return node
+
+
+def _raw_relations(node) -> set:
+    """Base relations whose rows reach `node` with no strong bound on the
+    way (a broadcast-hinted join side is bounded by its author)."""
+    if node["name"] in _BOUNDING_NODES or node.get("keyless"):
+        return set()
+    if "rel" in node:
+        return {node["rel"]}
+    kids = node["kids"]
+    if node["name"] == "Join":
+        if _NON_MULTIPLYING_JOIN.match(node["type"]):
+            kids = kids[:1]
+        kids = [k for k, hinted in zip(kids, node["broadcast"]) if not hinted]
+    return set().union(*map(_raw_relations, kids))
+
+
+def _self_joins(node) -> list[str]:
+    """Every multiplying join at or below `node` whose two sides both
+    carry raw rows of one base relation, as 'type condition on
+    relations'."""
+    found = []
+    if node["name"] == "Join" and not _NON_MULTIPLYING_JOIN.match(node["type"]):
+        left, right = (
+            set() if hinted else _raw_relations(k)
+            for k, hinted in zip(node["kids"], node["broadcast"])
+        )
+        if left & right:
+            found.append(f"{node['type']} {node['cond']} on {sorted(left & right)}")
+    for k in node["kids"]:
+        found += _self_joins(k)
+    return found
+
+
+# Bounds shared by several entries: most self-joins in the catalog are
+# one of these shapes, which the logical plan alone cannot prove (it
+# does not know that a grouped side is unique on the join key).
+_KEYED_LOOKUP = (
+    "keyed lookup: one side is grouped (or made distinct) on exactly the "
+    "join key, one row per key, so the join emits at most one row per "
+    "row of the other side"
+)
+_QUERY_SET = (
+    "query set: the 5-row query frame (embeddings with vec_id < 5) meets "
+    "the corpus, |queries| x |corpus| at most, reduced to top-k per query"
+)
+_INVERTED_INDEX = (
+    "inverted index: candidate pairs come from the shingle-hash equi-join "
+    "with doc_a < doc_b (ngram_jaccard_pairs switches to the prefix-"
+    "filtered join when sum(df^2) exceeds 30x the index), then per-doc "
+    "size stamps, one row per doc"
+)
+_MINHASH_BANDED = (
+    "banded+verified: candidates come from the MinHash band equi-join "
+    "(bounded by shared band buckets, never |docs|^2) + distinct; the "
+    "shingle joins only expand those candidates for the exact-Jaccard "
+    "verify, then per-doc size stamps"
+)
+_HAMMING_BANDED = (
+    "duplicate-safe banded: the band self-join runs over DISTINCT hashes "
+    "(pigeonhole bands, radius filter); the same-hash equi-join and the "
+    "member expansion emit exactly the answer's member pairs"
+)
+_LABEL_STAMP = (
+    "label stamp: members join a one-row-per-hash (or per-cluster) map, "
+    "fan-out exactly 1; the hash-level candidate stage is the banded "
+    "joiner over DISTINCT hashes"
+)
+
 _SELF_JOIN_BOUNDS = {
-    "dedup_minhash_calibration": (
-        "banded: candidate pairs come from a band-hash equi-join "
-        "(8 bands x md5 band hash) + distinct; the flagged SMJ only "
-        "joins that candidate evidence set back to per-doc shingle "
-        "rows for the exact-Jaccard verify (equi-join on doc id, "
-        "fan-out = shingles per candidate doc)"
+    "ann_bruteforce_topk": _QUERY_SET,
+    "ann_ivf_kmeans_topk": (
+        _QUERY_SET + " (the brute-force best-cosine reference the IVF "
+        "answer is checked against)"
     ),
-    "events_anomaly_mad": (
-        "keyed-tiny: both sides are per-event-type aggregates "
-        "(median/MAD stats), key domain = #event_types; the stream "
-        "side equi-joins a broadcast-hinted per-type frame"
+    "ann_lsh_topk": (
+        "query set x probed buckets: each of the 5 queries meets only the "
+        "vectors in its own and its 4 Hamming-1 hyperplane buckets"
+    ),
+    "basket_part_pairs_topk": (
+        "bounded basket: distinct (order, part) rows self-joined on the "
+        "order with part_a < part_b; per-order multiplicity = lines per "
+        "order (at most 7 in TPC-H), so at most 21 pairs per order"
+    ),
+    "corpus_novelty_curve": _KEYED_LOOKUP + " (per-bucket counts)",
+    "curate_keep_selection": _KEYED_LOOKUP + " (the per-cluster keep choice)",
+    "customer_balance_iqr_outliers": (
+        _KEYED_LOOKUP + " (both sides are per-market-segment aggregates)"
+    ),
+    "decontaminate_bloom": _KEYED_LOOKUP + " (distinct test hashes, per-doc counts)",
+    "decontaminate_train_test": _KEYED_LOOKUP + " (per-doc counts)",
+    "dedup_chunk_exact": _KEYED_LOOKUP + " (per-chunk-hash and per-doc counts)",
+    "dedup_embedding_blocked": (
+        "blocked: pairs only within one label block (id_a < id_b) and the "
+        "cosine threshold filters inside the join; cost is the sum of "
+        "squared block sizes, never an unblocked cross join"
+    ),
+    "dedup_incremental_minhash": _MINHASH_BANDED + " (batch x index)",
+    "dedup_incremental_minhash_selfsafe": (
+        _MINHASH_BANDED + " (batch x index; the bdoc <> idoc filter only "
+        "removes pairs)"
+    ),
+    "dedup_incremental_probe": (
+        _HAMMING_BANDED + " (batch x index); the member stamp joins one "
+        "best match per batch hash"
+    ),
+    "dedup_incremental_probe_selfsafe": (
+        _HAMMING_BANDED + " (batch x index); the member stamp joins one "
+        "best match per batch hash"
+    ),
+    "dedup_jaccard_band_histogram": _INVERTED_INDEX,
+    "dedup_minhash_calibration": _MINHASH_BANDED,
+    "dedup_minhash_lsh": _MINHASH_BANDED,
+    "dedup_ngram_jaccard": _INVERTED_INDEX,
+    "dedup_simhash": _HAMMING_BANDED,
+    "dedup_simhash_clusters": _LABEL_STAMP,
+    "events_funnel_windowed": _KEYED_LOOKUP + " (per-user first view / click)",
+    "events_hourly_gapfill": (
+        _KEYED_LOOKUP + " (the hourly aggregate is unique on (event_type, "
+        "hour) under the spine)"
+    ),
+    "events_retention_cohort": _KEYED_LOOKUP + " (per-user first active day)",
+    "events_rolling_7d_active": (
+        "band join: each distinct user-day meets at most the 7 spine days "
+        "of its trailing window (the spine is the distinct days)"
+    ),
+    "events_type_cooccurrence_lift": (
+        "bounded dimension: distinct (user, event_type) rows self-joined "
+        "on the user with type_a < type_b; per-user multiplicity = "
+        "#event types, a small fixed dimension"
+    ),
+    "events_user_copresence_topk": (
+        "per-bucket cap: at most _COPRESENCE_CAP users per hour are "
+        "admitted (scrambled row_number) before the hour self-join, so an "
+        "hour contributes at most cap^2/2 pairs"
+    ),
+    "multimodal_audio_fingerprint_dedup": _HAMMING_BANDED,
+    "multimodal_phash_clusters": _LABEL_STAMP,
+    "multimodal_phash_dedup": _HAMMING_BANDED,
+    "multimodal_video_fingerprint_dedup": _HAMMING_BANDED,
+    "orders_forecast_eval": (
+        _KEYED_LOOKUP + " (daily totals joined to themselves shifted by 7 "
+        "days)"
+    ),
+    "orders_repeat_retention": _KEYED_LOOKUP + " (per-customer first and second order)",
+    "q17_small_qty_revenue": _KEYED_LOOKUP + " (per-part average quantity)",
+    "source_overlap_matrix": (
+        _INVERTED_INDEX + "; the source stamps join one documents row per "
+        "doc id"
     ),
     "source_vocab_tv_distance": (
         "bounded-dimension: per-(source,token) counts self-joined on "
@@ -359,132 +433,58 @@ _SELF_JOIN_BOUNDS = {
         "#sources (a small dimension), so fan-out per token is "
         "#sources^2/2, linear in distinct tokens"
     ),
-    # dedup_simhash_clusters left this registry in r12: the
-    # simhash_signatures reformulation (explode + map-side-combined
-    # per-bit aggregate, operators/dedup.py) changed the physical shape
-    # of the signature subtree — the hash-level candidate join now
-    # plans as a BroadcastHashJoin at sf0.001, and that
-    # BroadcastExchange is a strong bound on the stamp join's map-side
-    # path, so the detector no longer pattern-matches it as a raw
-    # self-join. The bound itself is unchanged: the stamp join matches
-    # each member row to a one-row-per-DISTINCT-hash map, per-member
-    # fan-out exactly 1, output one row per input doc.
-    "multimodal_phash_clusters": (
-        "label-stamp: same unique-per-hash map join as "
-        "dedup_simhash_clusters over the dHash member table — one "
-        "output row per media id, never member pairs; the hash-level "
-        "candidate stage is the grouped banded joiner over DISTINCT "
-        "dHashes"
-    ),
-    # curate_keep_selection left this registry in r12 for the same
-    # reason as dedup_simhash_clusters (directly above): the r12
-    # simhash_signatures reformulation re-planned the signature subtree
-    # with a broadcast-bounded hash-map path, so its two label-stamp
-    # joins (member -> hash->cluster map, member -> cluster->keep map;
-    # per-member fan-out exactly 1 in both, declared here since r8) no
-    # longer match the detector's raw-by-raw signature.
-    # dedup_incremental_probe left this registry in r10: the Hamming
-    # candidate join moved to the derived single band_key (injective
-    # encode of (band_no, band_val) — operators/dedup._with_band_key),
-    # and joining on a derived key no longer pattern-matches the
-    # detector's raw-by-raw shared-scan signature. The bound itself is
-    # unchanged (banded+grouped over DISTINCT hashes, one member stamp).
-    #
-    # dedup_incremental_probe_selfsafe left in r11: its only detected
-    # join was exclude_self's LeftAnti of the batch ids out of the index
-    # members, whose physical strategy is a size estimate (it flipped
-    # broadcast<->SMJ between the r10 close-out and the r10 judge run,
-    # going stale). Anti/semi joins never multiply rows, so the detector
-    # now skips them by TYPE (_NON_MULTIPLYING_JOIN) — deterministic
-    # regardless of planning.
-    "dedup_incremental_minhash_selfsafe": (
-        "banded+verified (r10): identical bound to "
-        "dedup_incremental_minhash below — band equi-join candidates, "
-        "exact-Jaccard verify expansion, one-row-per-batch-doc reduce — "
-        "with the bdoc <> idoc candidate filter only REMOVING pairs"
-    ),
-    "dedup_incremental_minhash": (
-        "banded+verified (r8): batch x index candidates come from the "
-        "MinHash band equi-join (bounded by shared band buckets, never "
-        "|batch| x |index|); the shingle-index joins only expand those "
-        "candidates for the exact-Jaccard verify (the "
-        "dedup_minhash_calibration shape), then reduce to one row per "
-        "batch doc before the stamp"
-    ),
+    "text_bigram_lm_fluency": _KEYED_LOOKUP + " (bigram and unigram counts)",
+    "text_boilerplate_coverage": _KEYED_LOOKUP + " (distinct boilerplate hashes, per-doc sizes)",
+    "text_compression_ratio": _KEYED_LOOKUP + " (both sides are per-language aggregates)",
+    "text_containment_pairs": _INVERTED_INDEX,
+    "text_sentence_dedup": _KEYED_LOOKUP + " (per-sentence-hash and per-doc counts)",
+    "text_tfidf_topk": _KEYED_LOOKUP + " (per-token document frequency)",
 }
 
 
-def _subtree_sigs(nodes, children, i, col2tab, acc):
-    s = _rel_sig(nodes[i][1], col2tab)
-    if s:
-        acc.add(s)
-    for c in children[i]:
-        _subtree_sigs(nodes, children, c, col2tab, acc)
-    return acc
-
-
-def _unbounded_to(nodes, children, i, shared, col2tab) -> bool:
-    """True if some path from node i reaches a scan of a shared relation
-    with no strong bound on the way."""
-    name = nodes[i][1]
-    if _STRONG_BOUND.match(name):
-        return False
-    if _rel_sig(name, col2tab) in shared:
-        return True
-    return any(
-        _unbounded_to(nodes, children, c, shared, col2tab)
-        for c in children[i]
-    )
-
-
 def test_self_joins_are_bounded_or_declared(all_plans, sf_dir):
-    # detection depends on broadcast-vs-shuffle planning, which is a
-    # SIZE ESTIMATE at the test SF: at an env-overridden larger SF
-    # (conftest's SPARK_GRAFT_SF_SMALL knob) legitimate entries flip
-    # from broadcast to SMJ and the equality asserts would fire on
-    # nothing regressing. The gate is a registration-time CI check —
-    # run it at the canonical SF only (review finding).
+    # an entry's logical plan can still depend on its data (a route
+    # picked from a count at call time), so the registry is calibrated
+    # at the canonical SF only (conftest's SPARK_GRAFT_SF_SMALL knob can
+    # point the suite elsewhere)
     if sf_dir != "/root/testdata/sf0.001":
         pytest.skip("self-join gate is calibrated at the canonical sf0.001")
-    col2tab = _self_col2tab(sf_dir)
-    detected = set()
-    for qname, p in all_plans.items():
-        nodes, children = _tree(p["simple"])
-        for i, (_, nm) in enumerate(nodes):
-            if not _JOIN.match(nm):
-                continue
-            if _NON_MULTIPLYING_JOIN.search(nm):
-                # LeftAnti/LeftSemi never multiply: output <= left-side
-                # rows by definition, whatever physical strategy the
-                # planner picks. Detecting them made the gate
-                # size-estimate-sensitive (r10: the exclude_self
-                # anti-join flipped broadcast<->SMJ with the size
-                # estimate, toggling its declaration stale). A genuinely
-                # unbounded join UNDER an anti/semi is still flagged at
-                # its own node by this same loop.
-                continue
-            kids = children[i]
-            if len(kids) < 2:
-                continue
-            left = _subtree_sigs(nodes, children, kids[0], col2tab, set())
-            right = _subtree_sigs(nodes, children, kids[1], col2tab, set())
-            shared = _shared_sigs(left, right)
-            if shared and all(
-                _unbounded_to(nodes, children, k, shared, col2tab)
-                for k in kids[:2]
-            ):
-                detected.add(qname)
-    undeclared = detected - set(_SELF_JOIN_BOUNDS)
+    detected = {
+        name: joins
+        for name, p in all_plans.items()
+        if (joins := _self_joins(p["logical"]))
+    }
+    undeclared = {n: j for n, j in detected.items() if n not in _SELF_JOIN_BOUNDS}
     assert not undeclared, (
-        f"undeclared raw-by-raw self-joins: {sorted(undeclared)} — bound "
-        "the join (broadcast / limit / banded+grouped / per-bucket cap) "
-        "or add a _SELF_JOIN_BOUNDS declaration explaining why its "
+        f"undeclared raw-by-raw self-joins: {undeclared} — bound "
+        "the join (broadcast hint / limit / banded+grouped / per-bucket "
+        "cap) or add a _SELF_JOIN_BOUNDS declaration explaining why its "
         "output is bounded"
     )
     # stale declarations rot the registry's audit value: at the default
     # test SF the detected set is deterministic, so require equality
-    stale = set(_SELF_JOIN_BOUNDS) - detected
+    stale = set(_SELF_JOIN_BOUNDS) - set(detected)
     assert not stale, f"stale _SELF_JOIN_BOUNDS declarations: {sorted(stale)}"
+
+
+def test_self_join_verdict_ignores_broadcast_threshold(all_plans, spark):
+    """Re-optimizing every entry with autoBroadcastJoinThreshold at -1
+    (never broadcast by size), the default and 100 MB finds the same
+    self-joins each time. All three read the same cache state, so only
+    the threshold differs between them."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    default = spark.conf.get(key)
+    verdicts: dict[str, set] = {name: set() for name in all_plans}
+    try:
+        for threshold in ("-1", default, str(100 * 1024 * 1024)):
+            spark.conf.set(key, threshold)
+            for name, p in all_plans.items():
+                plan = p["df"].select("*")._jdf.queryExecution().optimizedPlan()
+                verdicts[name].add(tuple(_self_joins(_logical_tree(spark, plan))))
+    finally:
+        spark.conf.set(key, default)
+    moved = sorted(name for name, seen in verdicts.items() if len(seen) > 1)
+    assert not moved, f"self-join verdict moved with the broadcast threshold: {moved}"
 
 
 def test_single_partition_funnels_are_bounded(all_plans):
