@@ -8,18 +8,15 @@ partition counts are only a starting hint once AQE coalescing is on.
 Python workers start zip-free where that is safe: a local session whose
 workers can import this package runs them through
 `dsacord_spark._worker_daemon`, which imports `pyspark` from
-site-packages instead of `$SPARK_HOME/python/lib/pyspark.zip`. Every
-other session keeps the stock `pyspark.daemon` (see `get_spark`).
+site-packages instead of `$SPARK_HOME/python/lib/pyspark.zip` when the
+workers' interpreter has the same pyspark version. Every other session
+keeps the stock `pyspark.daemon` (see `get_spark`).
 """
 
 from __future__ import annotations
 
 import os
-import re
-import site
-import zipfile
 
-import pyspark
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -104,9 +101,12 @@ def get_spark(
     # (4 CPUs, 15 GB): a warm 80-task mapInArrow count 7.24 -> 1.46 s;
     # perfbench peak_rss_mb -3.8% on curate_daily (10/10 pairs) and
     # -4.5% on ingest_backfill (8/8), whose traced extraction executor
-    # time fell 1437 -> 853 and 1353 -> 707 ms. Two guards keep the
-    # stock daemon: the site-packages pyspark must be the version the
-    # JVM ships, and every worker must be able to import this package.
+    # time fell 1437 -> 853 and 1353 -> 707 ms. Two guards keep the stock
+    # behaviour: a session whose workers might not import this package
+    # (a non-local master, or the package's parent directory neither the
+    # cwd nor on PYTHONPATH) keeps pyspark.daemon, and the daemon itself
+    # leaves the path as Spark built it unless the workers' interpreter
+    # has a pyspark of the version in Spark's pyspark.zip.
     if _zip_free_workers_ok(master):
         builder = builder.config(
             "spark.python.daemon.module", "dsacord_spark._worker_daemon"
@@ -118,46 +118,17 @@ def get_spark(
     return spark
 
 
-_VERSION_ASSIGN = re.compile(r"""__version__(?::\s*str)?\s*=\s*["']([^"']+)["']""")
-
-
-def _site_pyspark_version() -> str | None:
-    """Version of the installed pyspark distribution (site-packages)."""
-    from importlib import metadata
-
-    try:
-        return metadata.version("pyspark")
-    except metadata.PackageNotFoundError:
-        return None
-
-
-def _jvm_pyspark_version() -> str | None:
-    """Version of the pyspark bundled with the Spark the JVM starts from
-    ($SPARK_HOME, else the pip package's own jars): the `pyspark.zip`
-    that stock workers import, read as a file so that no JVM is started."""
-    home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
-    try:
-        with zipfile.ZipFile(os.path.join(home, "python", "lib", "pyspark.zip")) as zf:
-            text = zf.read("pyspark/version.py").decode("utf-8")
-    except (OSError, KeyError, zipfile.BadZipFile):
-        return None
-    m = _VERSION_ASSIGN.search(text)
-    return m.group(1) if m else None
-
-
 def _zip_free_workers_ok(master: str) -> bool:
-    """True when every Python worker of a session on `master` can run
-    `dsacord_spark._worker_daemon` against a matching pyspark. Local
-    workers run `python -m` in the driver's cwd, which -m puts first on
-    their path, followed by the driver's PYTHONPATH and site-packages.
-    Executors on other hosts may lack both, so only local masters pass."""
+    """True when every Python worker of a session on `master` can import
+    `dsacord_spark._worker_daemon`. Local workers run `python -m` in the
+    driver's cwd, which -m puts first on their path, followed by the
+    driver's PYTHONPATH. Site-packages are not counted: the workers'
+    interpreter (`PYSPARK_PYTHON`) may not be the driver's. Executors on
+    other hosts may lack both, so only local masters pass. Whether the
+    workers' pyspark matches Spark's is checked by the daemon itself."""
     if not (master == "local" or master.startswith("local[")):
         return False
-    site_version = _site_pyspark_version()
-    if site_version is None or site_version != _jvm_pyspark_version():
-        return False
     roots = os.environ.get("PYTHONPATH", "").split(os.pathsep)
-    roots += site.getsitepackages()
     if not os.environ.get("PYTHONSAFEPATH"):
         roots.append(os.getcwd())
     package_parent = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))

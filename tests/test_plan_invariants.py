@@ -61,6 +61,10 @@ _STREAMING_PREFIX = ("stream_", "session_stateful")
 
 
 def _plans(spark, sf_dir):
+    # an entry's plan reads the frames that earlier entries persisted:
+    # start from an empty cache so that earlier test modules do not
+    # change what the plans show
+    spark.catalog.clearCache()
     out = {}
     for name, spec in specs().items():
         if name.startswith(_STREAMING_PREFIX[0]) or name in (
@@ -231,7 +235,9 @@ def _unbounded_scan_paths(nodes, children, root: int) -> bool:
 # and failed the gate on nothing that had changed). The logical plan is
 # settled before that choice: only an explicit broadcast hint counts as
 # a bound, and test_self_join_verdict_ignores_broadcast_threshold pins
-# the verdict across autoBroadcastJoinThreshold values.
+# the verdict across autoBroadcastJoinThreshold values. Joins inside a
+# cached frame's plan and inside subqueries are checked as well (the
+# physical plan's text printed both).
 
 # logical nodes that bound the rows below them: limits, driver-local
 # rows and generated ranges (a keyless Aggregate, one row, is checked
@@ -253,12 +259,16 @@ def _logical_tree(spark, plan) -> dict:
     the gate needs per kind (a join's type, broadcast hints and
     condition; whether an aggregate is keyless; the identity of a base
     relation: parquet root paths, the cache builder of a cached frame,
-    the RDD of a checkpointed one)."""
+    the RDD of a checkpointed one). The plans of a node's subqueries and
+    of a cached frame are kept apart from its children ("subs"): their
+    joins are checked, but their rows do not flow up as the node's."""
     name = plan.nodeName()
     kids = plan.children()
+    subs = plan.subqueries()
     node = {
         "name": name,
         "kids": [_logical_tree(spark, kids.apply(i)) for i in range(kids.size())],
+        "subs": [_logical_tree(spark, subs.apply(i)) for i in range(subs.size())],
     }
     if name == "Join":
         hint = plan.hint().toString()
@@ -272,8 +282,16 @@ def _logical_tree(spark, plan) -> dict:
     elif name == "LogicalRelation":
         node["rel"] = "files:" + plan.relation().location().rootPaths().mkString(",")
     elif name == "InMemoryRelation":
-        builder = spark._jvm.System.identityHashCode(plan.cacheBuilder())
-        node["rel"] = f"cache:{builder}"
+        builder = plan.cacheBuilder()
+        node["rel"] = f"cache:{spark._jvm.System.identityHashCode(builder)}"
+        # AQE plans a cached frame that holds an exchange, a subquery or a
+        # scan of an adaptive cached frame, and keeps its query execution,
+        # whose optimized plan is the frame's. A frame it left alone holds
+        # none of these, so no join but a CartesianProduct.
+        cached = builder.cachedPlan()
+        if cached.nodeName() == "AdaptiveSparkPlan":
+            optimized = cached.context().qe().optimizedPlan()
+            node["subs"].append(_logical_tree(spark, optimized))
     elif name == "LogicalRDD":
         node["rel"] = f"rdd:{plan.rdd().id()}"
     return node
@@ -295,20 +313,20 @@ def _raw_relations(node) -> set:
 
 
 def _self_joins(node) -> list[str]:
-    """Every multiplying join at or below `node` whose two sides both
-    carry raw rows of one base relation, as 'type condition on
-    relations'."""
-    found = []
+    """Every multiplying join at or below `node`, inside subqueries and
+    cached frames too, whose two sides both carry raw rows of one base
+    relation, as sorted unique 'type condition on relations'."""
+    found = set()
     if node["name"] == "Join" and not _NON_MULTIPLYING_JOIN.match(node["type"]):
         left, right = (
             set() if hinted else _raw_relations(k)
             for k, hinted in zip(node["kids"], node["broadcast"])
         )
         if left & right:
-            found.append(f"{node['type']} {node['cond']} on {sorted(left & right)}")
-    for k in node["kids"]:
-        found += _self_joins(k)
-    return found
+            found.add(f"{node['type']} {node['cond']} on {sorted(left & right)}")
+    for k in node["kids"] + node["subs"]:
+        found.update(_self_joins(k))
+    return sorted(found)
 
 
 # Bounds shared by several entries: most self-joins in the catalog are
@@ -362,6 +380,10 @@ _SELF_JOIN_BOUNDS = {
         "order (at most 7 in TPC-H), so at most 21 pairs per order"
     ),
     "corpus_novelty_curve": _KEYED_LOOKUP + " (per-bucket counts)",
+    "corpus_vocab_growth": (
+        _KEYED_LOOKUP + " (per-doc token counts left-joined to per-doc "
+        "first-seen counts, inside the frame the global cumsum persists)"
+    ),
     "curate_keep_selection": _KEYED_LOOKUP + " (the per-cluster keep choice)",
     "customer_balance_iqr_outliers": (
         _KEYED_LOOKUP + " (both sides are per-market-segment aggregates)"
@@ -467,24 +489,64 @@ def test_self_joins_are_bounded_or_declared(all_plans, sf_dir):
     assert not stale, f"stale _SELF_JOIN_BOUNDS declarations: {sorted(stale)}"
 
 
-def test_self_join_verdict_ignores_broadcast_threshold(all_plans, spark):
-    """Re-optimizing every entry with autoBroadcastJoinThreshold at -1
-    (never broadcast by size), the default and 100 MB finds the same
-    self-joins each time. All three read the same cache state, so only
-    the threshold differs between them."""
+# expression ids (and lambda variable counters), cache and checkpoint
+# identities differ between two builds of one entry; the joins do not
+_BUILD_IDS = re.compile(r"(_\d+)?#\d+L?|(?<=cache:)\d+|(?<=rdd:)\d+")
+
+
+def _build_free(joins: list[str]) -> list[str]:
+    return sorted({_BUILD_IDS.sub("#", j) for j in joins})
+
+
+def test_self_join_verdict_ignores_broadcast_threshold(all_plans, spark, sf_dir):
+    """Every entry built anew, from an empty cache as in `_plans`, with
+    autoBroadcastJoinThreshold at -1 (never broadcast by size) and at
+    100 MB has the self-joins it has at the default. Built anew, not
+    re-optimized: an entry may pick its route from the data when it is
+    called."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     default = spark.conf.get(key)
-    verdicts: dict[str, set] = {name: set() for name in all_plans}
+    expected = {n: _build_free(_self_joins(p["logical"])) for n, p in all_plans.items()}
+    moved = {}
     try:
-        for threshold in ("-1", default, str(100 * 1024 * 1024)):
+        for threshold in ("-1", str(100 * 1024 * 1024)):
             spark.conf.set(key, threshold)
-            for name, p in all_plans.items():
-                plan = p["df"].select("*")._jdf.queryExecution().optimizedPlan()
-                verdicts[name].add(tuple(_self_joins(_logical_tree(spark, plan))))
+            spark.catalog.clearCache()
+            for name, spec in specs().items():
+                if name not in all_plans:
+                    continue
+                plan = spec.fn(spark, sf_dir)._jdf.queryExecution().optimizedPlan()
+                seen = _build_free(_self_joins(_logical_tree(spark, plan)))
+                if seen != expected[name]:
+                    moved[(name, threshold)] = (expected[name], seen)
     finally:
         spark.conf.set(key, default)
-    moved = sorted(name for name, seen in verdicts.items() if len(seen) > 1)
+        spark.catalog.clearCache()
     assert not moved, f"self-join verdict moved with the broadcast threshold: {moved}"
+
+
+def test_self_join_gate_reads_cached_frames_and_subqueries(spark, sf_dir):
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    pairs = docs.alias("a").join(docs.alias("b"), "source").persist()
+    # a cached frame over a cached frame: the gate follows the nesting
+    narrowed = pairs.where("length(source) > 0").persist()
+    try:
+        # the raw self-join is inside the cached frames only
+        for cached in (pairs, narrowed):
+            plan = cached.groupBy("source").count()._jdf.queryExecution().optimizedPlan()
+            assert "InMemoryRelation" in plan.toString()
+            assert _self_joins(_logical_tree(spark, plan))
+    finally:
+        narrowed.unpersist()
+        pairs.unpersist()
+    docs.createOrReplaceTempView("self_join_gate_docs")
+    in_subquery = spark.sql(
+        "SELECT (SELECT count(*) FROM self_join_gate_docs a "
+        "JOIN self_join_gate_docs b ON a.source = b.source) AS n"
+    )
+    plan = in_subquery._jdf.queryExecution().optimizedPlan()
+    assert _self_joins(_logical_tree(spark, plan))
+    spark.catalog.dropTempView("self_join_gate_docs")
 
 
 def test_single_partition_funnels_are_bounded(all_plans):
