@@ -43,6 +43,11 @@ import time
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 
+# update_corpus_index compacts an index once one of its tables holds
+# more than this many files per bucket (its docstring has the cost)
+_COMPACT_FILES_PER_BUCKET = 8
+
+
 def _pairs_to_comp(duplicate_components, pairs: DataFrame) -> DataFrame:
     """Pair list -> (__comp_doc, __comp_cluster) via connected
     components (the jaccard/minhash route; simhash goes straight to
@@ -377,7 +382,7 @@ def build_corpus_index(
     bands: int | None = None,
     ngram: int = 3,
     n_perm: int = 32,
-    buckets: int = 16,
+    buckets: int | None = None,
     mode: str = "overwrite",
 ) -> None:
     """Build the persisted corpus index dedup_incremental's
@@ -387,7 +392,9 @@ def build_corpus_index(
     minhash -> build_minhash_index's band/shingle-set tables over the
     corpus text. mode='append' extends an existing index with a delta
     (simhash: any delta; minhash: NEW doc ids only — see
-    build_minhash_index's append contract)."""
+    build_minhash_index's append contract). `buckets=None` sizes the
+    index from its input (sinks/parquet.index_bucket_count: one bucket
+    per 128 MiB, so a corpus under 128 MiB is one bucket)."""
     from dsacord_spark.operators.dedup import (
         SIMHASH_BITS,
         build_hamming_index,
@@ -434,7 +441,9 @@ def update_corpus_index(
     (the parameters are a property of the index; a caller-supplied knob
     could only match or raise). This is the write half of the daily
     loop: curate a batch against the index, then append the KEPT docs
-    so tomorrow's batch dedups against today's survivors.
+    so tomorrow's batch dedups against today's survivors. The meta row
+    and the bucket count are read once per append (one job and one
+    catalog lookup) and handed to the table writes.
 
     ENFORCES the disjoint-doc-id append contract build_minhash_index
     documents (r9 verdict item 1): the batch is anti-joined against the
@@ -447,28 +456,56 @@ def update_corpus_index(
     per hash, so the min-id column IS the appended-id set; a re-append
     of a non-min id would in any case be harmless, per-hash MIN being
     monotone under union). Both reads are index-metadata-sized column
-    scans of bucketed tables."""
+    scans of bucketed tables.
+
+    Bounded fragmentation: each append adds up to one file per bucket to
+    each table, so once a table holds more than
+    `_COMPACT_FILES_PER_BUCKET` (8) files per bucket the append ends
+    with compact_index, which also grows the bucket count when the
+    index has outgrown it. On the benchmark's 1-bucket, 500-doc index
+    a table then never holds more than 8 files; the compaction runs
+    every 8th append and, measured on that index after 8 appends of
+    ~350 kept docs (2.4 MB in 18 files, local[4] on 4 CPUs), took 1.1 s
+    where each append took 1.6-2.6 s. A compaction refused because a live streaming probe holds
+    a mid-batch lease (or another driver holds the maintenance marker)
+    is skipped; the next append tries again, and the append itself
+    does not fail."""
     from dsacord_spark.operators.dedup import (
-        _read_index_meta, build_minhash_index,
+        SIMHASH_BITS,
+        CompactionRefused,
+        _read_index_meta,
+        _write_hamming_tables,
+        _write_minhash_tables,
+        compact_index,
+        simhash_signatures,
     )
+    from dsacord_spark.leases import MaintenanceMarkerHeld
+    from dsacord_spark.sinks.parquet import describe_bucket_spec, table_files
 
     if method not in ("simhash", "minhash"):
         raise ValueError(
             f"persisted indexes support simhash/minhash, not {method!r}"
         )
     spark = docs.sparkSession
+    simhash = method == "simhash"
     meta = _read_index_meta(
         spark, table_name,
-        ("n_bands", "hash_bits") if method == "simhash"
-        else ("n", "n_perm", "bands"),
-        "Hamming" if method == "simhash" else "MinHash",
+        ("n_bands", "hash_bits") if simhash else ("n", "n_perm", "bands"),
+        "Hamming" if simhash else "MinHash",
     )
-    existing = (
-        spark.table(f"{table_name}_summary")
-        .select(F.col("_i_min").alias(id_col))
-        if method == "simhash"
-        else spark.table(f"{table_name}_shingles")
-        .select(F.col("doc").alias(id_col))
+    if simhash and int(meta["hash_bits"]) != SIMHASH_BITS:
+        raise ValueError(
+            f"{table_name} holds {meta['hash_bits']}-bit hashes, not "
+            f"{SIMHASH_BITS}-bit simhash signatures"
+        )
+    tables = [
+        f"{table_name}_bands",
+        f"{table_name}_summary" if simhash else f"{table_name}_shingles",
+    ]
+    # one count for the index's tables (compact_index keeps them equal)
+    n_buckets = describe_bucket_spec(spark, tables[0])["n_buckets"]
+    existing = spark.table(tables[1]).select(
+        F.col("_i_min" if simhash else "doc").alias(id_col)
     )
     docs = docs.join(existing, id_col, "left_anti").persist()
     try:
@@ -478,20 +515,34 @@ def update_corpus_index(
             # files completely untouched — byte-stable, not just
             # content-stable
             return 0
-        if method == "simhash":
-            build_corpus_index(
-                docs, "simhash", table_name, id_col, text_col,
-                bands=int(meta["n_bands"]), mode="append",
-            )
+        if simhash:
+            # persisted across the two table writes, as in
+            # build_corpus_index
+            sig = simhash_signatures(docs, id_col, text_col).persist()
+            try:
+                _write_hamming_tables(
+                    sig, "doc", "simhash", table_name,
+                    int(meta["n_bands"]), SIMHASH_BITS, n_buckets, "append",
+                )
+            finally:
+                sig.unpersist()
         else:
-            build_minhash_index(
+            _write_minhash_tables(
                 docs, id_col, text_col, table_name,
-                n=int(meta["n"]), n_perm=int(meta["n_perm"]),
-                bands=int(meta["bands"]), mode="append",
+                int(meta["n"]), int(meta["n_perm"]), int(meta["bands"]),
+                n_buckets, "append",
             )
-        return appended
     finally:
         docs.unpersist()
+    if any(
+        table_files(spark, t)[0] > _COMPACT_FILES_PER_BUCKET * n_buckets
+        for t in tables
+    ):
+        try:
+            compact_index(spark, table_name)
+        except (CompactionRefused, MaintenanceMarkerHeld):
+            pass  # the index is in use; the next append compacts it
+    return appended
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -561,7 +612,8 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--compact-index", default=None, metavar="TABLE",
                    help="Compact a persisted index's bucketed tables to "
                    "one file per bucket and exit (no input read, no "
-                   "dedup): restores the write-time sort order that "
+                   "dedup), growing the bucket count if the index has "
+                   "outgrown it: restores the write-time sort order that "
                    "daily appends fragment, so probes' sort-merge joins "
                    "skip their per-partition Sorts "
                    "(spark.sql.legacy.bucketedTableScan.outputOrdering "

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
+from dsacord_spark.config import URL_TEMPLATE
+
 DISCORD_EPOCH_MS = 1420070400000  # 2015-01-01T00:00:00Z, utils.go:295
 
 
@@ -133,12 +135,9 @@ def platform_uid_parts(col: Column | str) -> dict[str, Column]:
 
 
 def url_for_day(day: Column | str) -> Column:
-    """F6, main.go:148: daily dump URL from a date column."""
+    """F6, main.go:148: daily dump URL from a date column, filled into
+    config.URL_TEMPLATE."""
+    prefix, suffix = URL_TEMPLATE.split("%s")
     return F.concat(
-        F.lit(
-            "https://dsa-sor-data-dumps.s3.eu-central-1.amazonaws.com/"
-            "sor-discord-netherlands-bv-"
-        ),
-        F.date_format(_c(day), "yyyy-MM-dd"),
-        F.lit("-full.zip"),
+        F.lit(prefix), F.date_format(_c(day), "yyyy-MM-dd"), F.lit(suffix)
     )

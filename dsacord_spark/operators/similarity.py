@@ -26,6 +26,7 @@ from pyspark.sql.types import (
 from dsacord_spark import leases
 from dsacord_spark.functions.vectors import cosine, dot, norm
 from dsacord_spark.session import local_frame
+from dsacord_spark.sinks.parquet import describe_bucket_spec, index_bucket_count
 
 # sidecar I/O shared with leases.py's maintenance markers (r12 review:
 # two line-identical copies had started to drift); the old private
@@ -680,17 +681,19 @@ def _q8_dot(a: Column, b: Column) -> Column:
 
 
 def _bootstrap_ivf_id_index(
-    spark, path: str, id_col: str, table: str, buckets: int
+    spark, path: str, id_col: str, table: str, buckets: int | None
 ) -> None:
     """(Re)build the IVF lake's id side-index from the lake's CURRENT
     contents: one column-pruned full-lake id scan, written as an
     id-bucketed id-sorted table so the daily append's retry anti-join
     consumes it with no Exchange on the index side (the uuid-index
-    bootstrap shape, sinks/parquet.append_new_decisions)."""
+    bootstrap shape, sinks/parquet.append_new_decisions). `buckets=None`
+    sizes the table from the id scan (index_bucket_count)."""
+    ids = spark.read.parquet(path).select(id_col)
     (
-        spark.read.parquet(path).select(id_col)
-        .write.format("parquet").mode("overwrite")
-        .bucketBy(buckets, id_col).sortBy(id_col)
+        ids.write.format("parquet").mode("overwrite")
+        .bucketBy(buckets or index_bucket_count(spark, ids), id_col)
+        .sortBy(id_col)
         .saveAsTable(table)
     )
 
@@ -703,7 +706,7 @@ def build_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     id_index_table: str | None = None,
-    id_index_buckets: int = 16,
+    id_index_buckets: int | None = None,
     force: bool = False,
     quantize: bool = False,
 ) -> list[tuple[int, list[float]]]:
@@ -724,7 +727,10 @@ def build_ivf_index(
     instead of a full-lake id scan, and `retrain_ivf_index` rebuilds it
     with the lake. The whole build holds a maintenance lease on the
     lake path, so a concurrent `query_ivf_index` cannot plan over a
-    half-overwritten directory (r11 ADVICE).
+    half-overwritten directory (r11 ADVICE). `id_index_buckets=None`
+    sizes the id index from the lake's id column at every (re)build
+    (sinks/parquet.index_bucket_count); an explicit count is recorded
+    in the sidecar and kept by retrains.
 
     `quantize=True` (r12) additionally stores an int8 `__q8` column
     (SQ8: round(v/||v||*127)) beside each vector, recorded in the
@@ -768,7 +774,7 @@ def build_ivf_index(
             meta["quantized"] = True
         if id_index_table is not None:
             meta["id_index_table"] = id_index_table
-            meta["id_index_buckets"] = int(id_index_buckets)
+            meta["id_index_buckets"] = id_index_buckets
         _hadoop_write_text(
             spark, os.path.join(path, "_ivf_centroids.json"),
             json.dumps(meta),
@@ -1001,7 +1007,6 @@ def _ivf_recover_pending(
     mid-recovery reruns it. The marker is deleted only after the index
     converged."""
     from dsacord_spark.operators.dedup import _in_literals
-    from dsacord_spark.sinks.parquet import describe_bucket_spec
 
     try:
         pending = spark.read.parquet(marker)
@@ -1137,7 +1142,7 @@ def append_ivf_index(
             # (the bootstrap read the post-crash lake)
             _bootstrap_ivf_id_index(
                 spark, path, id_col,
-                idx_table, int(meta.get("id_index_buckets", 16)),
+                idx_table, meta.get("id_index_buckets"),
             )
             fs.delete(jvm.org.apache.hadoop.fs.Path(marker), True)
         elif fs.exists(jvm.org.apache.hadoop.fs.Path(marker)):
@@ -1173,8 +1178,6 @@ def append_ivf_index(
                     spark.table(idx_table).select(id_col),
                     id_col, "left_anti",
                 )
-            from dsacord_spark.sinks.parquet import describe_bucket_spec
-
             n_buckets = describe_bucket_spec(spark, idx_table)["n_buckets"]
             (
                 to_index.write.format("parquet").mode("append")
@@ -1311,7 +1314,7 @@ def retrain_ivf_index(
         build_ivf_index(
             emb, tmp, n_cells=k, iters=iters, id_col=id_col,
             vec_col=vec_col, id_index_table=idx_table,
-            id_index_buckets=int(meta.get("id_index_buckets", 16)),
+            id_index_buckets=meta.get("id_index_buckets"),
             quantize=bool(meta.get("quantized")),
         )
         if not fs.rename(_p(path), _p(old)):

@@ -23,7 +23,7 @@ from dsacord_spark.hadoopfs import hadoop_path_exists
 from dsacord_spark.sinks.jdbc import dedup_batch
 from dsacord_spark.sinks.parquet import write_decisions_parquet
 from dsacord_spark.sources.stager import stage_range, stage_range_distributed
-from dsacord_spark.sources.urlgen import url_table
+from dsacord_spark.sources.urlgen import day_urls, url_table
 from dsacord_spark.sources.zipsource import read_staged_zips
 from dsacord_spark.transform import decisions_transform, split_quarantine, with_dq_metrics
 
@@ -73,17 +73,17 @@ def run_backfill(
     for w in warnings:
         print(f"warning: {w}")
 
-    url_df = url_table(spark, cfg.date_from, cfg.date_to, cfg.workers)
     if cfg.staging == "distributed":
         staged = stage_range_distributed(
-            url_df,
+            url_table(spark, cfg.date_from, cfg.date_to, cfg.workers),
             cfg.landing_dir,
             **({"opener": opener} if opener else {}),
         )
     else:
-        urls = [(r["dt"], r["url"]) for r in url_df.collect()]
+        # the driver's worker pool needs a plain list: built here, with
+        # no Spark job
         staged = stage_range(
-            urls,
+            day_urls(cfg.days()),
             cfg.landing_dir,
             workers=cfg.workers,
             **({"opener": opener} if opener else {}),

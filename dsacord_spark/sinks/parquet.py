@@ -22,6 +22,20 @@ operators/dedup.py) stay on the session codec: on the curate MinHash
 index zstd saved only 1.4% (870.7 -> 858.7 B/doc; hash columns do not
 compress) while a 10-batch curate A/B read a median 5.15 s with snappy
 against 5.90 s with zstd.
+
+The index tables the program builds for its own probes (the uuid index,
+the MinHash/Hamming probe indexes, the shingle index, the IVF id index)
+are sized from their data by `index_bucket_count`: one bucket per
+`TARGET_FILE_BYTES` of build input, the same 128 MiB that
+`compact_partitions` splits a day into. A fixed 16 buckets made the
+benchmark's 500-doc MinHash index (237,333 B of corpus parquet, which
+the rule sizes at 1 bucket) 32 files from birth and 128 files / 1.34 MB
+after three appends; at 1 bucket it is 8 files, and the index holds a
+median 753 B per indexed doc instead of 865 (-12.9% over 11 seeds,
+local[4] on 4 CPUs). Compaction grows
+the count as the index grows (`compact_bucketed_table`). The TPC-H
+tables of `write_bucketed` keep their explicit count: equal counts are
+what co-locates their joins.
 """
 
 from __future__ import annotations
@@ -36,6 +50,39 @@ from dsacord_spark.session import local_frame
 
 # parquet codec of every file holding decision rows (module docstring)
 LAKE_CODEC = "zstd"
+
+# size of one file of a compacted lake partition, and of one bucket of a
+# persisted index (index_bucket_count)
+TARGET_FILE_BYTES = 128 << 20
+
+# bucket count of an index whose input size the optimizer does not know
+_UNKNOWN_SIZE_BUCKETS = 16
+_LONG_MAX = (1 << 63) - 1
+
+
+def index_bucket_count(
+    spark: SparkSession,
+    data: DataFrame | int,
+    target_file_bytes: int = TARGET_FILE_BYTES,
+) -> int:
+    """Bucket count of a persisted probe index, derived from its data:
+    ceil(bytes / `target_file_bytes`), clamped to [1,
+    spark.sql.sources.bucketing.maxBuckets].
+
+    `data` is either the build's input frame, whose bytes are the
+    optimizer's sizeInBytes estimate (a parquet read reports its file
+    bytes exactly: the benchmark's 500-doc corpus reads 237,333 B, so 1
+    bucket), or a byte count (a table's on-disk bytes, at compaction).
+    An estimate the optimizer does not know (an RDD-backed frame reports
+    Long.MaxValue) gives 16 buckets, the count every index had before it
+    was derived. The estimate is driver-side planning only, no job."""
+    if isinstance(data, DataFrame):
+        size = int(data._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        n = _UNKNOWN_SIZE_BUCKETS if size >= _LONG_MAX else -(-size // target_file_bytes)
+    else:
+        n = -(-int(data) // target_file_bytes)
+    max_buckets = int(spark.conf.get("spark.sql.sources.bucketing.maxBuckets"))
+    return max(1, min(max_buckets, n))
 
 
 def write_decisions_parquet(
@@ -96,7 +143,7 @@ def append_new_decisions(
     return_dts: bool = False,
     observation=None,
     uuid_index_table: str | None = None,
-    uuid_index_buckets: int = 16,
+    uuid_index_buckets: int | None = None,
     **write_kwargs,
 ) -> list[str] | None:
     """Append only rows whose key is not already in the lake — the lake
@@ -129,7 +176,10 @@ def append_new_decisions(
     + O(day), never O(lake). Adoption on an existing lake without an
     index pays one full-lake uuid scan to bootstrap the index, then
     never again. Requires the day-partitioned layout for the crash
-    guard; an unpartitioned lake falls back to the full probe.
+    guard; an unpartitioned lake falls back to the full probe. The
+    bootstrap buckets the index by `uuid_index_buckets`, or, when None,
+    by `index_bucket_count` of the lake's uuid column; appends keep the
+    count the catalog holds.
 
     `return_dts=True` additionally returns the distinct day-partition
     values this batch COVERS (computed pre-anti-join, so a replayed
@@ -213,10 +263,13 @@ def append_new_decisions(
         if not index_ready:
             # bootstrap: index over the ENTIRE post-append lake (one
             # full uuid scan, paid once at adoption)
+            keys = spark.read.parquet(path).select(key)
             (
-                spark.read.parquet(path).select(key)
-                .write.format("parquet").mode("overwrite")
-                .bucketBy(uuid_index_buckets, key).sortBy(key)
+                keys.write.format("parquet").mode("overwrite")
+                .bucketBy(
+                    uuid_index_buckets or index_bucket_count(spark, keys), key
+                )
+                .sortBy(key)
                 .saveAsTable(uuid_index_table)
             )
         elif dts:
@@ -250,7 +303,7 @@ def compact_partitions(
     spark: SparkSession,
     path: str,
     partition_col: str = "dt",
-    target_file_bytes: int = 128 << 20,
+    target_file_bytes: int = TARGET_FILE_BYTES,
     force: bool = False,
 ) -> dict:
     """Small-file compaction for a `{partition_col}=...` parquet lake —
@@ -464,34 +517,64 @@ def lake_with_rollup_sink(
     return sink
 
 
+def _catalog_table(spark: SparkSession, table_name: str):
+    """The session catalog's CatalogTable for `table_name`: a metadata
+    lookup (~3 ms), where a DESCRIBE FORMATTED statement took ~40-60 ms."""
+    state = spark._jsparkSession.sessionState()
+    return state.catalog().getTableMetadata(
+        state.sqlParser().parseTableIdentifier(table_name)
+    )
+
+
+def table_location(spark: SparkSession, table_name: str) -> str:
+    """A catalog table's storage location URI (metadata only)."""
+    return _catalog_table(spark, table_name).location().toString()
+
+
+def table_files(spark: SparkSession, table_name: str) -> tuple[int, int]:
+    """(data files, their bytes) directly under a catalog table's
+    location: one directory listing, no data read. Hidden files
+    (`_SUCCESS`, checksum `.crc` files) do not count. Sized for the
+    unpartitioned bucketed index tables; a missing location is (0, 0)."""
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(table_location(spark, table_name))
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(path):
+        return 0, 0
+    files = [
+        st for st in fs.listStatus(path)
+        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+    ]
+    return len(files), sum(st.getLen() for st in files)
+
+
 def describe_bucket_spec(spark: SparkSession, table_name: str) -> dict:
-    """Read a bucketed table's layout contract back from the catalog
-    (DESCRIBE FORMATTED): {'n_buckets', 'bucket_cols', 'sort_cols'}.
-    Raises if the table is not bucketed — callers use this to compact or
-    append WITHOUT restating the spec (a drifted restatement would
-    silently produce a mixed-layout table)."""
-    rows = {
-        r["col_name"].strip(): (r["data_type"] or "").strip()
-        for r in spark.sql(f"DESCRIBE FORMATTED {table_name}").collect()
-    }
-
-    def _cols(v: str) -> list[str]:
-        return [
-            c.strip().strip("`")
-            for c in v.strip("[]").split(",")
-            if c.strip()
-        ]
-
-    if "Num Buckets" not in rows:
+    """Read a bucketed table's layout contract back from the catalog:
+    {'n_buckets', 'bucket_cols', 'sort_cols'}. Raises if the table is
+    not bucketed — callers use this to compact or append
+    WITHOUT restating the spec (a drifted restatement would silently
+    produce a mixed-layout table)."""
+    spec = _catalog_table(spark, table_name).bucketSpec()
+    if spec.isEmpty():
         raise ValueError(f"{table_name} is not a bucketed table")
+    spec = spec.get()
+
+    def _cols(seq) -> list[str]:
+        return [seq.apply(i) for i in range(seq.size())]
+
     return {
-        "n_buckets": int(rows["Num Buckets"]),
-        "bucket_cols": _cols(rows.get("Bucket Columns", "")),
-        "sort_cols": _cols(rows.get("Sort Columns", "")),
+        "n_buckets": int(spec.numBuckets()),
+        "bucket_cols": _cols(spec.bucketColumnNames()),
+        "sort_cols": _cols(spec.sortColumnNames()),
     }
 
 
-def compact_bucketed_table(spark: SparkSession, table_name: str) -> dict:
+def compact_bucketed_table(
+    spark: SparkSession,
+    table_name: str,
+    min_buckets: int = 1,
+    target_file_bytes: int = TARGET_FILE_BYTES,
+) -> dict:
     """Rewrite a bucketed table so every bucket lands in exactly ONE
     file (r9 verdict item 4 / PLANS.md backlog). Append-maintained
     bucketed tables accumulate one file per bucket PER APPEND; Spark
@@ -502,23 +585,27 @@ def compact_bucketed_table(spark: SparkSession, table_name: str) -> dict:
     true) the scan reports its sortBy order and the SMJ consumes the
     bucket files directly, no Sort, at any corpus size.
 
+    The rewrite has max(current count, index_bucket_count of the
+    table's on-disk bytes at `target_file_bytes`, `min_buckets`)
+    buckets: an index gains buckets as it grows and never drops below a
+    count someone chose. compact_index passes `min_buckets` so the
+    tables of one index keep one count.
+
     Mechanics: repartition by the bucket columns into exactly n_buckets
     partitions — repartition's HashPartitioning is the same
     pmod(Murmur3, n) as DataFrameWriter.bucketBy, so each task holds
     exactly one bucket's rows and the bucketed write emits one file per
     bucket — then swap via a temp table (saveAsTable cannot overwrite a
-    table it reads). The spec (bucket count/columns/sort columns) is
-    read from the catalog, never restated. Returns {'files_before',
-    'files_after', 'n_buckets'}."""
+    table it reads). The bucket and sort columns are read from the
+    catalog, never restated. Returns {'files_before', 'files_after',
+    'n_buckets'}."""
     spec = describe_bucket_spec(spark, table_name)
-
-    def _n_files(t: str) -> int:
-        try:
-            return len(spark.table(t).inputFiles())
-        except Exception:
-            return -1
-
-    before = _n_files(table_name)
+    before, size = table_files(spark, table_name)
+    n_buckets = max(
+        spec["n_buckets"],
+        index_bucket_count(spark, size, target_file_bytes),
+        min_buckets,
+    )
     tmp = f"{table_name}__compact"
     spark.sql(f"DROP TABLE IF EXISTS {tmp}")
     # Force the BUCKETED scan for the rewrite. The repartition-by-bucket-
@@ -539,9 +626,9 @@ def compact_bucketed_table(spark: SparkSession, table_name: str) -> dict:
         )
         w = (
             spark.table(table_name)
-            .repartition(spec["n_buckets"], *spec["bucket_cols"])
+            .repartition(n_buckets, *spec["bucket_cols"])
             .write.format("parquet").mode("overwrite")
-            .bucketBy(spec["n_buckets"], *spec["bucket_cols"])
+            .bucketBy(n_buckets, *spec["bucket_cols"])
         )
         if spec["sort_cols"]:
             w = w.sortBy(*spec["sort_cols"])
@@ -565,8 +652,8 @@ def compact_bucketed_table(spark: SparkSession, table_name: str) -> dict:
     spark.sql(f"DROP TABLE {old}")
     return {
         "files_before": before,
-        "files_after": _n_files(table_name),
-        "n_buckets": spec["n_buckets"],
+        "files_after": table_files(spark, table_name)[0],
+        "n_buckets": n_buckets,
     }
 
 

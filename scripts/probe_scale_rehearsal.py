@@ -76,12 +76,11 @@ def main() -> int:
                 )
                 csig.unpersist()
             build_s = time.perf_counter() - t0
-            from dsacord_spark.operators.dedup import (
-                _PRUNE_AUTO_MIN_BYTES, _table_location_bytes,
-            )
+            from dsacord_spark.operators.dedup import _PRUNE_AUTO_MIN_BYTES
+            from dsacord_spark.sinks.parquet import table_files
 
             idx_bytes = sum(
-                _table_location_bytes(spark, f"{t}_{s}")
+                table_files(spark, f"{t}_{s}")[1]
                 for s in (("bands", "shingles") if fam == "minhash"
                           else ("bands", "summary"))
             )

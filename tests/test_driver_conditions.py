@@ -19,10 +19,14 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
+
+# the checkout this file belongs to, whatever its path
+_REPO = str(Path(__file__).resolve().parents[1])
 
 _SCRIPT = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from pyspark.sql import SparkSession
 
 spark = (
@@ -75,11 +79,11 @@ print("DRIVER-CONDITIONS-PASS")
 
 def test_catalog_runs_in_bare_default_session():
     res = subprocess.run(
-        [sys.executable, "-c", _SCRIPT],
+        [sys.executable, "-c", _SCRIPT, _REPO],
         capture_output=True,
         text=True,
         timeout=900,
-        cwd="/root/repo",
+        cwd=_REPO,
     )
     assert res.returncode == 0, res.stdout[-2000:] + res.stderr[-4000:]
     assert "DRIVER-CONDITIONS-PASS" in res.stdout

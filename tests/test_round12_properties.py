@@ -6,9 +6,13 @@ side-index itself is pinned in tests/test_ivf_lifecycle.py."""
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
+
+# the checkout this file belongs to, whatever its path
+_REPO = str(Path(__file__).resolve().parents[1])
 
 
 def test_in_literals_int64_gate(spark):
@@ -143,7 +147,7 @@ def test_fs_marker_blocks_second_driver(spark, tmp_path):
         r = subprocess.run(
             [sys.executable, "-c", _SECOND_DRIVER, base],
             capture_output=True, text=True, timeout=300,
-            cwd=str(tmp_path), env=dict(os.environ, PYTHONPATH="/root/repo"),
+            cwd=str(tmp_path), env=dict(os.environ, PYTHONPATH=_REPO),
         )
         assert r.returncode == 0, r.stderr[-500:]
         return r.stdout
@@ -166,11 +170,8 @@ def test_fs_marker_crash_takeover_and_compact_integration(spark, sf_dir,
     import time
 
     from dsacord_spark import leases
-    from dsacord_spark.operators.dedup import (
-        _table_location,
-        build_hamming_index,
-        compact_index,
-    )
+    from dsacord_spark.operators.dedup import build_hamming_index, compact_index
+    from dsacord_spark.sinks.parquet import table_location
 
     t = "t_r12_marker_compact"
     try:
@@ -180,7 +181,7 @@ def test_fs_marker_crash_takeover_and_compact_integration(spark, sf_dir,
             .limit(60)
         )
         build_hamming_index(docs, "doc_id", "h", t)
-        loc = _table_location(spark, f"{t}_summary")
+        loc = table_location(spark, f"{t}_summary")
         # the catalog reports a file: URI; the local-FS assertions below
         # need the bare path
         marker = leases._marker_path(loc).removeprefix("file:")

@@ -466,6 +466,19 @@ def _parents_until_join(plan: str, table: str) -> list[str]:
 def test_persisted_probe_indexes_never_shuffle_the_corpus(
     spark, sf_dir,
 ):
+    _assert_probe_indexes_read_in_place(spark, sf_dir, buckets=4)
+
+
+def test_derived_one_bucket_probe_indexes_never_shuffle_the_corpus(
+    spark, sf_dir,
+):
+    """The same pin at the bucket count the builders derive for a small
+    parquet corpus (one bucket): the batch side still shuffles into the
+    index's layout, never the index side."""
+    _assert_probe_indexes_read_in_place(spark, sf_dir, buckets=None)
+
+
+def _assert_probe_indexes_read_in_place(spark, sf_dir, buckets):
     """The r9 persisted probe indexes exist so a daily probe pays
     batch-sized work against an in-place corpus: every index table must
     be read BUCKETED and feed its join with no Exchange between scan and
@@ -484,6 +497,7 @@ def test_persisted_probe_indexes_never_shuffle_the_corpus(
         probe_minhash_index,
         simhash_signatures,
     )
+    from dsacord_spark.sinks.parquet import describe_bucket_spec
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     sig = simhash_signatures(d, "doc_id", "text").persist()
@@ -491,12 +505,17 @@ def test_persisted_probe_indexes_never_shuffle_the_corpus(
     try:
         build_hamming_index(
             sig.filter(F.col("doc") % 10 != 0), "doc", "simhash",
-            "t_plan_ham", n_bands=4, hash_bits=SIMHASH_BITS, buckets=4,
+            "t_plan_ham", n_bands=4, hash_bits=SIMHASH_BITS,
+            buckets=buckets,
         )
         build_minhash_index(
             d.filter(F.col("doc_id") % 10 != 0), "doc_id", "text",
-            "t_plan_mh", n=3, n_perm=32, bands=8, buckets=4,
+            "t_plan_mh", n=3, n_perm=32, bands=8, buckets=buckets,
         )
+        want = buckets or 1
+        for t in ("t_plan_ham_bands", "t_plan_ham_summary",
+                  "t_plan_mh_bands", "t_plan_mh_shingles"):
+            assert describe_bucket_spec(spark, t)["n_buckets"] == want, t
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         # prune=False so the WHOLE join topology is visible in one
         # explain: the r10 pruning path materializes its candidate

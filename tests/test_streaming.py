@@ -6,6 +6,8 @@ micro-batch."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -18,6 +20,8 @@ from tests.index_tables import (
 )
 
 HEADER = ",".join(CSV_COLUMNS)
+# the checkout this file belongs to, whatever its path
+_REPO = str(Path(__file__).resolve().parents[1])
 
 
 def _wire_csv(rows: list[dict]) -> str:
@@ -368,7 +372,7 @@ def test_sessionize_bounded_timezone_safe():
 
     script = r"""
 import sys, datetime
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[2]")
          .config("spark.sql.session.timeZone", "Asia/Shanghai")
@@ -389,8 +393,8 @@ assert got == expected, got
 print("TZ-SAFE-PASS")
 """
     res = subprocess.run(
-        [sys.executable, "-c", script],
-        capture_output=True, text=True, timeout=420, cwd="/root/repo",
+        [sys.executable, "-c", script, _REPO],
+        capture_output=True, text=True, timeout=420, cwd=_REPO,
     )
     assert "TZ-SAFE-PASS" in res.stdout, res.stdout[-2000:] + res.stderr[-2000:]
 
