@@ -35,6 +35,7 @@ from dsacord_spark.functions.hashing import (
 from dsacord_spark.functions.text import tokens, word_ngrams
 from dsacord_spark.session import local_frame
 from dsacord_spark.sinks.parquet import (
+    bucket_clustered,
     compact_bucketed_table,
     describe_bucket_spec,
     index_bucket_count,
@@ -181,7 +182,7 @@ def build_shingle_index(
     if buckets is None:
         buckets = index_bucket_count(df.sparkSession, df)
     writer = (
-        _shingle_frame(df, id_col, text_col, n)
+        bucket_clustered(_shingle_frame(df, id_col, text_col, n), buckets, "hg")
         .write.mode("overwrite")
         .format("parquet")
         .bucketBy(buckets, "hg")
@@ -1570,8 +1571,8 @@ def build_hamming_index(
         mode,
     )
     if mode == "overwrite":
-        spark.createDataFrame(
-            [(n_bands, hash_bits)], "n_bands int, hash_bits int"
+        local_frame(
+            spark, [(n_bands, hash_bits)], "n_bands int, hash_bits int"
         ).write.format("parquet").mode("overwrite").saveAsTable(
             f"{table_name}_meta"
         )
@@ -2042,8 +2043,8 @@ def build_minhash_index(
         df, id_col, text_col, table_name, n, n_perm, bands, buckets, mode
     )
     if mode == "overwrite":
-        spark.createDataFrame(
-            [(n, n_perm, bands)], "n int, n_perm int, bands int"
+        local_frame(
+            spark, [(n, n_perm, bands)], "n int, n_perm int, bands int"
         ).write.format("parquet").mode("overwrite").saveAsTable(
             f"{table_name}_meta"
         )

@@ -165,7 +165,7 @@ def block_topk_cosine(
         + [StructField(c, src0.schema[c].dataType, True) for c in payload_cols]
     )
     if not queries:
-        return emb.sparkSession.createDataFrame([], empty_schema)
+        return local_frame(emb.sparkSession, [], empty_schema)
 
     q_ids = np.array([q[0] for q in queries], dtype=np.int64)
     q_mat = np.array([q[1] for q in queries], dtype=np.float64)

@@ -85,6 +85,28 @@ def index_bucket_count(
     return max(1, min(max_buckets, n))
 
 
+def bucket_clustered(df: DataFrame, n_buckets: int, key: str) -> DataFrame:
+    """`df` with each bucket's rows in one partition, so that
+    `bucketBy(n_buckets, key)` writes one file per bucket. A bucketed
+    write lands one file per writer task per bucket that task holds: a
+    40-doc input stored as 4 parquet files gave a 1-bucket shingle table
+    of 4 files. Spark's bucket id is the same pmod(murmur3) as hash
+    partitioning, so a hash repartition on `key` at the bucket count puts
+    bucket b in partition b. Input that already arrives that way keeps
+    its plan: EnsureRequirements drops a repartition whose child is
+    hash-partitioned on `key` at that count (the uuid index heal's
+    sort-merge anti-join against the bucketed index), and a one-bucket
+    write keeps input that is already one partition, which Spark would
+    otherwise gather again."""
+    if n_buckets == 1:
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            plan = plan.executedPlan()  # the wrapper reports no partitioning
+        if plan.outputPartitioning().numPartitions() == 1:
+            return df
+    return df.repartition(n_buckets, key)
+
+
 def write_decisions_parquet(
     df: DataFrame,
     path: str,
@@ -264,12 +286,11 @@ def append_new_decisions(
             # bootstrap: index over the ENTIRE post-append lake (one
             # full uuid scan, paid once at adoption)
             keys = spark.read.parquet(path).select(key)
+            n_buckets = uuid_index_buckets or index_bucket_count(spark, keys)
             (
-                keys.write.format("parquet").mode("overwrite")
-                .bucketBy(
-                    uuid_index_buckets or index_bucket_count(spark, keys), key
-                )
-                .sortBy(key)
+                bucket_clustered(keys, n_buckets, key)
+                .write.format("parquet").mode("overwrite")
+                .bucketBy(n_buckets, key).sortBy(key)
                 .saveAsTable(uuid_index_table)
             )
         elif dts:
@@ -290,7 +311,8 @@ def append_new_decisions(
                 "n_buckets"
             ]
             (
-                missing.write.format("parquet").mode("append")
+                bucket_clustered(missing, n_buckets, key)
+                .write.format("parquet").mode("append")
                 .bucketBy(n_buckets, key).sortBy(key)
                 .saveAsTable(uuid_index_table)
             )

@@ -25,6 +25,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from dsacord_spark import leases
 from dsacord_spark.schema import CSV_SCHEMA
+from dsacord_spark.session import local_frame
 from dsacord_spark.sinks.jdbc import dedup_batch
 from dsacord_spark.transform import decisions_transform, split_quarantine
 
@@ -269,7 +270,7 @@ def sessionize_bounded(
                 .collect()[0][0]
             )
         if hi_us is None:
-            return spark.createDataFrame([], SESSION_OUTPUT_SCHEMA)
+            return local_frame(spark, [], SESSION_OUTPUT_SCHEMA)
         sentinel_us = hi_us + (2 * gap_s + 1) * 1_000_000
         # one job fetches up to the driver-side cap of distinct keys; a
         # corpus with more keys writes its sentinels distributed instead
@@ -278,7 +279,7 @@ def sessionize_bounded(
         kdf = spark.read.parquet(src).select("user_id").distinct()
         keys = [r["user_id"] for r in kdf.limit(_KEY_CAP + 1).collect()]
         if not keys:
-            return spark.createDataFrame([], SESSION_OUTPUT_SCHEMA)
+            return local_frame(spark, [], SESSION_OUTPUT_SCHEMA)
         cores = spark.sparkContext.defaultParallelism
         if len(keys) <= _KEY_CAP:
             if state_partitions is None:
@@ -434,7 +435,7 @@ def _shape_empty_drain(
     Otherwise the per-batch transform shapes it, honoring the 2-arg
     contract (r11 review: the 1-arg call died with TypeError under
     pass_batch_id=True)."""
-    empty = spark.createDataFrame([], schema)
+    empty = local_frame(spark, [], schema)
     if drain_transform is not None:
         return drain_transform(empty)
     if batch_transform is None:

@@ -1,6 +1,8 @@
 """Layout of the persisted probe indexes: bucket counts derived from the
-build input (sinks/parquet.index_bucket_count), compaction that grows a
-count and never shrinks it, and the curate loop's bounded file count."""
+build input (sinks/parquet.index_bucket_count), one file per bucket for
+writes of unshuffled input (sinks/parquet.bucket_clustered), compaction
+that grows a count and never shrinks it, and the curate loop's bounded
+file count."""
 
 from __future__ import annotations
 
@@ -10,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dsacord_spark.sinks.parquet import (
+    bucket_clustered,
     compact_bucketed_table,
     describe_bucket_spec,
     index_bucket_count,
@@ -53,6 +56,12 @@ def test_small_parquet_input_builds_one_bucket(spark, tmp_path):
         for t in ("t_lay_mh_bands", "t_lay_mh_shingles", "t_lay_ham_bands",
                   "t_lay_ham_summary", "t_lay_sh"):
             assert _n_buckets(spark, t) == 1, t
+        # the input is 4 parquet files, one per writer task: the shingle
+        # write still lands one file per bucket
+        assert len(docs.inputFiles()) == 4
+        assert table_files(spark, "t_lay_sh")[0] == 1
+        build_shingle_index(docs, "doc_id", "text", 3, "t_lay_sh", buckets=4)
+        assert table_files(spark, "t_lay_sh")[0] == 4
     finally:
         drop_index_tables(spark, "t_lay_mh", MINHASH_SUFFIXES)
         drop_index_tables(spark, "t_lay_ham", ("summary", "bands", "meta"))
@@ -238,17 +247,38 @@ def test_uuid_index_bootstrap_bucket_count(spark, tmp_path, explicit):
     from dsacord_spark.sinks.parquet import append_new_decisions
 
     rows = spark.createDataFrame(
-        [(f"u-{i}", "2025-01-0%d 10:00:00" % (1 + i % 3)) for i in range(30)],
+        [(f"u-{i}", "2025-01-0%d 10:00:00" % (1 + i % 3)) for i in range(40)],
         "uuid string, created_at string",
     ).withColumn("created_at", F.to_timestamp("created_at"))
     lake, idx = str(tmp_path / "lake"), "t_lay_uuid"
+    n = explicit or 1
     try:
         append_new_decisions(spark, rows.limit(10), lake)
         append_new_decisions(
-            spark, rows, lake, uuid_index_table=idx,
+            spark, rows.limit(30), lake, uuid_index_table=idx,
             uuid_index_buckets=explicit,
         )
-        assert _n_buckets(spark, idx) == (explicit or 1)
+        assert _n_buckets(spark, idx) == n
         assert spark.table(idx).count() == 30
+        # the bootstrap reads a lake of 3 day partitions: one file per
+        # bucket all the same, and each heal append adds at most one more
+        assert table_files(spark, idx)[0] == n
+        append_new_decisions(spark, rows, lake, uuid_index_table=idx)
+        assert spark.table(idx).count() == 40
+        assert table_files(spark, idx)[0] <= 2 * n
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {idx}")
+
+
+@pytest.mark.parametrize("n", [1, 3])
+def test_bucket_clustered_keeps_input_already_hashed_on_the_key(spark, n):
+    rows = spark.range(0, 100, 1, 4).withColumn("k", F.col("id") % 7)
+    hashed = rows.repartition(n, "k")
+    plan = bucket_clustered(hashed, n, "k")._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    # unshuffled input is hash-partitioned on the key at the bucket count
+    clustered = bucket_clustered(rows, n, "k")
+    assert clustered.rdd.getNumPartitions() == n
+    by_part = clustered.rdd.glom().map(lambda p: sorted({r.k for r in p})).collect()
+    assert sum(map(len, by_part)) == 7

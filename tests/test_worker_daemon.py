@@ -3,7 +3,9 @@
 `session.get_spark` runs local workers through a daemon that imports
 `pyspark` from site-packages instead of `pyspark.zip`, and keeps the
 stock `pyspark.daemon` where a worker could not import this package;
-the daemon keeps Spark's path when the workers' pyspark differs.
+the daemon keeps Spark's path when the workers' pyspark differs. The
+daemon imports the worker-side Arrow stack and freezes its heap before
+the first fork, so the workers share those pages.
 """
 
 from __future__ import annotations
@@ -45,6 +47,252 @@ def test_python_worker_imports_pyspark_outside_zip(spark):
         pyspark_file, zip_importers = json.loads(row.info)
         assert ".zip" not in pyspark_file and ".jar" not in pyspark_file
         assert zip_importers == 0
+
+
+def test_worker_forks_from_frozen_preloaded_daemon(spark):
+    def state(batches):
+        # read before this function imports anything itself
+        loaded = [
+            m in sys.modules
+            for m in ("pyarrow", "pandas", "dsacord_spark.sources.zipsource")
+        ]
+        import gc
+
+        import pyarrow as pa
+
+        info = json.dumps([gc.get_freeze_count(), loaded])
+        for _ in batches:
+            yield pa.RecordBatch.from_pylist([{"info": info}])
+
+    rows = spark.range(4, numPartitions=2).mapInArrow(state, "info string").collect()
+    assert len(rows) == 2
+    for row in rows:
+        frozen, loaded = json.loads(row.info)
+        assert frozen > 0
+        assert loaded == [True, True, True]
+
+
+def test_daemon_on_spark_path_still_preloads(spark, tmp_path, monkeypatch):
+    # a pyspark of another version behind Spark's entries makes the
+    # daemon keep the path as Spark built it (pyspark from pyspark.zip);
+    # it must still start, preload and freeze
+    fake = tmp_path / "pyspark"
+    fake.mkdir()
+    (fake / "__init__.py").write_text("")
+    (fake / "version.py").write_text('__version__ = "0.0.0"\n')
+
+    def state(batches):
+        import gc
+
+        import pyarrow as pa
+        import pyspark
+
+        info = json.dumps([
+            pyspark.__file__, gc.get_freeze_count(),
+            "dsacord_spark.sources.zipsource" in sys.modules,
+        ])
+        for _ in batches:
+            yield pa.RecordBatch.from_pylist([{"info": info}])
+
+    monkeypatch.setitem(spark.sparkContext.environment, "PYTHONPATH", str(tmp_path))
+    rows = spark.range(2, numPartitions=1).mapInArrow(state, "info string").collect()
+    pyspark_file, frozen, kernel = json.loads(rows[0].info)
+    assert "pyspark.zip" in pyspark_file
+    assert frozen > 0 and kernel
+
+
+def test_preload_skips_modules_that_fail(tmp_path):
+    (tmp_path / "dsacord_broken_mod.py").write_text("raise RuntimeError('boom')\n")
+    code = (
+        "import gc, json, sys\n"
+        f"sys.path.insert(0, {str(tmp_path)!r})\n"
+        "from dsacord_spark import _worker_daemon as w\n"
+        "got = w.preload(('json', 'dsacord_no_such_mod', 'dsacord_broken_mod', 'csv'))\n"
+        "print(json.dumps([got, gc.get_freeze_count() > 0]))\n"
+    )
+    res = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        timeout=120, cwd=REPO,
+    )
+    assert res.returncode == 0, res.stderr[-4000:]
+    assert json.loads(res.stdout.splitlines()[-1]) == [["json", "csv"], True]
+
+
+_FORK_STRESS_DRIVER = r"""
+import json
+from dsacord_spark.session import get_spark
+
+spark = get_spark(
+    master="local[4]", shuffle_partitions=4,
+    extra_conf={"spark.python.worker.reuse": "false"},
+)
+daemon = spark.sparkContext.getConf().get("spark.python.daemon.module")
+
+
+def work(batches):
+    import gc
+    import io
+
+    import numpy as np
+    import pyarrow as pa
+    from pyarrow import csv as pa_csv
+
+    for batch in batches:
+        out = []
+        for i in batch.column(0).to_pylist():
+            lines = ["a,b"] + [f"{i * j},{j}" for j in range(2000)]
+            t = pa_csv.read_csv(io.BytesIO("\n".join(lines).encode()))
+            a = (np.arange(256 * 256, dtype=np.float64).reshape(256, 256) + i) % 7
+            out.append({
+                "id": i,
+                "csv_sum": sum(t.column("a").to_pylist()),
+                "mm": int((a @ a).sum()),
+                "frozen": gc.get_freeze_count() > 0,
+            })
+        yield pa.RecordBatch.from_pylist(out)
+
+
+rows = (
+    spark.range(40, numPartitions=40)
+    .mapInArrow(work, "id long, csv_sum long, mm long, frozen boolean")
+    .collect()
+)
+print("RESULT " + json.dumps(
+    [daemon, sorted((r.id, r.csv_sum, r.mm, r.frozen) for r in rows)]
+))
+spark.stop()
+"""
+
+
+def test_one_fork_per_task_stress(tmp_path):
+    # every task forks a fresh worker from the preloaded daemon (worker
+    # reuse off), then parses a CSV with pyarrow's threaded reader and
+    # runs a numpy matmul: a lock held across the fork would hang it
+    import numpy as np
+
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    res = subprocess.run(
+        [sys.executable, "-c", _FORK_STRESS_DRIVER],
+        capture_output=True, text=True, timeout=420, cwd=REPO, env=env,
+    )
+    assert res.returncode == 0, res.stdout[-2000:] + res.stderr[-4000:]
+    line = [x for x in res.stdout.splitlines() if x.startswith("RESULT ")][-1]
+    daemon, rows = json.loads(line[len("RESULT "):])
+    assert daemon == "dsacord_spark._worker_daemon"
+    want = []
+    for i in range(40):
+        a = (np.arange(256 * 256, dtype=np.float64).reshape(256, 256) + i) % 7
+        want.append([i, i * sum(range(2000)), int((a @ a).sum()), True])
+    assert rows == want
+
+
+_CURATE_DRIVER = r"""
+import json, os, random, sys
+import pyarrow as pa, pyarrow.parquet as pq
+from pyspark.sql import functions as F
+from dsacord_spark.curate import (
+    build_corpus_index, dedup_incremental, update_corpus_index,
+)
+from dsacord_spark.session import get_spark
+
+tmp = sys.argv[1]
+spark = get_spark(
+    master="local[4]", shuffle_partitions=4,
+    extra_conf={"spark.sql.warehouse.dir": os.path.join(tmp, "wh")},
+)
+jvm_pid = spark.sparkContext._gateway.proc.pid
+
+
+def text(i):
+    r = random.Random(i)
+    return " ".join(f"w{r.randrange(5000)}" for _ in range(24))
+
+
+def docs(name, pairs):
+    # written by pyarrow and read by Spark: no Python rows in the plan
+    path = os.path.join(tmp, name)
+    ids, texts = zip(*pairs)
+    pq.write_table(pa.table({"doc_id": pa.array(ids, pa.int64()),
+                             "text": list(texts)}), path)
+    return spark.read.parquet(path)
+
+
+def python_workers():
+    parent, cmd = {}, {}
+    for d in os.listdir("/proc"):
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                st = f.read()
+            with open(f"/proc/{d}/cmdline", "rb") as f:
+                cmd[int(d)] = f.read().replace(b"\0", b" ").decode()
+        except (OSError, ValueError):
+            continue
+        parent[int(d)] = int(st[st.rfind(")") + 2:].split()[1])
+
+    def under_jvm(pid):
+        while pid in parent and pid != jvm_pid:
+            pid = parent[pid]
+        return pid == jvm_pid
+
+    return sorted(
+        cmd[p] for p in cmd
+        if p != jvm_pid and under_jvm(p)
+        and ("pyspark.daemon" in cmd[p] or "_worker_daemon" in cmd[p])
+    )
+
+
+out = {}
+for method in ("minhash", "simhash"):
+    table = f"t_nowork_{method}"
+    build_corpus_index(docs(f"{method}_corpus", [(i, text(i)) for i in range(30)]),
+                       method, table)
+    labels = []
+    for b, planted in ((0, 3), (1, 1000)):
+        base = 1000 + 100 * b
+        batch = docs(f"{method}_b{b}",
+                     [(base + i, text(base + i)) for i in range(6)]
+                     + [(base + 50, text(planted))])
+        got = sorted(
+            (r["doc_id"], r["kept"], r["index_match_id"])
+            for r in dedup_incremental(batch, method=method, index_table=table)
+            .select("doc_id", "kept", "index_match_id").collect()
+        )
+        labels.append(got)
+        update_corpus_index(
+            batch.filter(F.col("doc_id").isin([d for d, k, _ in got if k])),
+            method, table,
+        )
+    out[method] = labels
+out["workers"] = python_workers()
+# the detector sees a daemon once a Python task has run
+spark.range(2).rdd.map(lambda r: r.id).collect()
+out["workers_after_udf"] = python_workers()
+print("RESULT " + json.dumps(out))
+spark.stop()
+"""
+
+
+def test_curate_loop_starts_no_python_worker(tmp_path):
+    # the index meta rows are local relations: a build, a probe and an
+    # append run entirely in the JVM
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    res = subprocess.run(
+        [sys.executable, "-c", _CURATE_DRIVER, str(tmp_path)],
+        capture_output=True, text=True, timeout=600, cwd=REPO, env=env,
+    )
+    assert res.returncode == 0, res.stdout[-2000:] + res.stderr[-4000:]
+    line = [x for x in res.stdout.splitlines() if x.startswith("RESULT ")][-1]
+    out = json.loads(line[len("RESULT "):])
+    assert out["workers"] == []
+    assert any("_worker_daemon" in c for c in out["workers_after_udf"])
+    for method in ("minhash", "simhash"):
+        first, second = out[method]
+        # fresh docs kept; the planted copy of corpus doc 3 matches it,
+        # and the next day's copy of an appended doc matches that doc
+        assert first == [[1000 + i, True, None] for i in range(6)] + [[1050, False, 3]]
+        assert second == [[1100 + i, True, None] for i in range(6)] + [
+            [1150, False, 1000]
+        ], method
 
 
 def test_python_worker_keeps_user_zip_on_path(spark, tmp_path, monkeypatch):
