@@ -98,6 +98,10 @@ def run_backfill(
     wire = read_staged_zips(
         spark, cfg.landing_dir if rebuild else staged_paths
     )
+    # the lake write's fan is sized by the dump days it reads: a rebuild
+    # reads every dump staged in the landing dir (a listing the scan has
+    # already made), a daily run only its own
+    days = len(wire.inputFiles()) if rebuild else len(staged_paths)
     typed, dq = with_dq_metrics(decisions_transform(wire))
     valid, quarantined = split_quarantine(typed)
     deduped = dedup_batch(valid)
@@ -157,7 +161,7 @@ def run_backfill(
                     )
                 # full-rebuild semantics: static overwrite replaces the
                 # entire decisions lake from every staged ZIP
-                write_decisions_parquet(df, out, mode="overwrite")
+                write_decisions_parquet(df, out, mode="overwrite", days=days)
                 try:
                     return int(written_obs.get["n"])
                 except Exception:
@@ -180,7 +184,7 @@ def run_backfill(
             before = _lake_rows()
             append_new_decisions(
                 spark, df, out, observation=written_obs,
-                uuid_index_table=cfg.uuid_index_table,
+                uuid_index_table=cfg.uuid_index_table, days=days,
             )
             try:
                 return int(written_obs.get["n"])

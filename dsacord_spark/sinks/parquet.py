@@ -6,17 +6,31 @@ Spark formulation of the reference's one-day-one-unit layout
 (SURVEY §4.3). At 100 TB, day-partitioned parquet with ~128 MB files is
 the layout every query in the catalog assumes.
 
+Each day lands as the fewest files its size needs, by one rule every
+lake write shares (`cluster_by_day`): rows are rebalanced by day, AQE
+keeps a small day in one writer task and splits a day above its
+advisory partition size (64 MiB of shuffle) over several, and a batch
+of fewer days than cores salts each day over ceil(2 * cores / days)
+hash keys so that every core writes. A fixed 8-way salt over the
+shuffle partitions spread every day over every writer task: the
+benchmark's 6-day backfill (18.7k rows of ~1.1 KB of CSV each,
+local[4]) landed as 19 files of ~960 rows, whose
+footers alone took 12.2 B per row and whose small column chunks
+compressed worse. At one file per day the lake holds a median 251.5 B
+per row instead of 277.8 (-9.5%, 10 seeds); on one seed the footers
+went from 12.2 to 3.8 B per row, decision_facts from 108.6 to 100.6 and
+the two explanation columns from 65.4 to 61.5.
+
 Every file that holds decision rows is zstd-compressed (`LAKE_CODEC`,
 at Spark's default zstd level 3): the lake write, the anti-join append
 and the compaction rewrite all set it, so a compacted partition keeps
 the codec it was written with. At 100 TB bytes at rest are both the
-storage bill and the scan I/O of every query over the lake. On
-generated dump rows of ~1.1 KB of CSV each (the benchmark's
-ingest_backfill, 10 seeds per codec) the lake holds a median 445.8 B
-per row with snappy, the session default, and 277.6 B with zstd
-(-37.7%). One same-process write of 18,213 such rows gave snappy 446.0,
-zstd level 1 300.7, level 3 277.7 and level 6 270.1 B per row, level 6
-at +25% write time, so level 3 is the knee. The bucketed index
+storage bill and the scan I/O of every query over the lake. With the
+19-file layout the benchmark's lake held a median 445.8 B per row with
+snappy, the session default, and 277.6 B with zstd (-37.7%, 10 seeds
+per codec). One same-process write of 18,213 such rows gave snappy
+446.0, zstd level 1 300.7, level 3 277.7 and level 6 270.1 B per row,
+level 6 at +25% write time, so level 3 is the knee. The bucketed index
 tables (the uuid index here, the MinHash/Hamming probe indexes in
 operators/dedup.py) stay on the session codec: on the curate MinHash
 index zstd saved only 1.4% (870.7 -> 858.7 B/doc; hash columns do not
@@ -50,6 +64,9 @@ from dsacord_spark.session import local_frame
 
 # parquet codec of every file holding decision rows (module docstring)
 LAKE_CODEC = "zstd"
+
+# column every lake file is sorted by inside its day (write_decisions_parquet)
+LAKE_SORT_COL = "entity_id"
 
 # size of one file of a compacted lake partition, and of one bucket of a
 # persisted index (index_bucket_count)
@@ -107,54 +124,79 @@ def bucket_clustered(df: DataFrame, n_buckets: int, key: str) -> DataFrame:
     return df.repartition(n_buckets, key)
 
 
+def cluster_by_day(df: DataFrame, days: int | None = None) -> DataFrame:
+    """`df` with its `dt` column, clustered so that each writer task holds
+    whole day slices and each slice is sorted by (dt, `LAKE_SORT_COL`):
+    the frame `write_decisions_parquet` hands to the dynamic-partition
+    writer. `days` is the number of days the batch holds. A batch of
+    fewer days than cores (defaultParallelism) salts each day over fan =
+    ceil(2 * cores / days) hash keys, pmod(hash(uuid), fan), so that every
+    core still writes (one writer per day made an sf0.1 write on 32 cores
+    take 40.6 s against 14.4 s unclustered). The keys hash onto the
+    writer tasks with collisions, hence twice the cores: with
+    ceil(cores / days) keys a one-day 30k-row backfill on local[4] landed
+    on 3 tasks, one of them holding half the rows, and ran slower than a
+    fixed 8-key salt in 4 of 4 separate-process pairs. A batch of at
+    least as many days as cores, or without a day count, has a fan of 1.
+
+    With adaptive execution on, the clustering is a rebalance on (dt,
+    salt): AQE keeps a small day in one task (one file) and splits a day
+    above spark.sql.adaptive.advisoryPartitionSizeInBytes (64 MiB of
+    shuffle) over several tasks. Spark drops the rebalance hint when AQE
+    is off, so there the same keys go through a plain repartition.
+    Sorting inside each task by dt first gives the dynamic writer
+    contiguous day runs; the salt stays out of the sort key, since a task
+    writes one file per day across all its salt groups."""
+    df = df.withColumn(
+        "dt", F.coalesce(F.date_format("created_at", "yyyy-MM-dd"), F.lit("unknown"))
+    )
+    spark = df.sparkSession
+    cores = spark.sparkContext.defaultParallelism
+    fan = -(-2 * cores // days) if days and days < cores else 1
+    keys = ["dt"]
+    if fan > 1:
+        df = df.withColumn("__salt", F.pmod(F.hash("uuid"), F.lit(fan)))
+        keys.append("__salt")
+    if spark.conf.get("spark.sql.adaptive.enabled").lower() == "true":
+        df = df.hint("rebalance", *keys)
+    else:
+        df = df.repartition(*keys)
+    if fan > 1:
+        df = df.drop("__salt")
+    if LAKE_SORT_COL in df.columns:
+        df = df.sortWithinPartitions("dt", LAKE_SORT_COL)
+    return df
+
+
 def write_decisions_parquet(
     df: DataFrame,
     path: str,
     partition_by_date: bool = True,
     mode: str = "append",
-    writers_per_day: int = 8,
-    cluster_within_files_by: str | None = "entity_id",
+    days: int | None = None,
 ) -> None:
-    """Day-partitioned parquet lake write.
+    """Day-partitioned parquet lake write: each day lands as the fewest
+    files its size needs (`cluster_by_day`; `days` is the batch's day
+    count). On the benchmark's 6-day, 18.7k-row backfill on local[4]
+    that is one file per day: 6 files where a fixed 8-way salt over the
+    shuffle partitions wrote 19.
 
-    `cluster_within_files_by` sorts rows inside each output file by that
-    column — the lake formulation of the reference's secondary index on
-    EntityID (types.go:63 `gorm:"index"`): sorted files give tight
-    per-row-group min/max statistics, so an entity_id point lookup skips
-    whole row groups instead of scanning every file of the day. Measured
-    cost ~20% on the e2e ingest (local sort, no extra shuffle) — the
+    Rows inside each file are sorted by `LAKE_SORT_COL` (entity_id) — the
+    lake formulation of the reference's secondary index on EntityID
+    (types.go:63 `gorm:"index"`): sorted files give tight per-row-group
+    min/max statistics, so an entity_id point lookup skips whole row
+    groups instead of scanning every file of the day. It is a local sort
+    per task, no extra shuffle; measured cost ~20% on the e2e ingest, the
     analog of the b-tree maintenance the reference pays per insert.
 
     Files are written with `LAKE_CODEC` (zstd level 3) whatever the
-    session codec: 278 B per row against snappy's 446 B on ~1.1 KB CSV
-    rows (-38%), for +7% backfill time per batch; the measurements and
-    why the index tables keep the session codec are in the module
-    docstring."""
-    writer = df.write.mode(mode)
+    session codec; the measurements, and why the index tables keep the
+    session codec, are in the module docstring."""
     if partition_by_date and "created_at" in df.columns:
-        df = df.withColumn(
-            "dt", F.coalesce(F.date_format("created_at", "yyyy-MM-dd"), F.lit("unknown"))
-        )
-        # Cluster rows by (dt, salt) before the dynamic-partition write.
-        # No clustering -> every task holding every day emits tasks x days
-        # fragments (the classic small-files problem). Clustering by dt
-        # alone -> at most one writer task per day, which serializes the
-        # write when days < cores (measured 40.6s vs 14.4s unclustered at
-        # sf0.1/32 cores). The salt caps files at writers_per_day per day
-        # while keeping every core writing (14.1s, 8 files/day). At 100 TB
-        # raise writers_per_day (or let maxRecordsPerFile split) so one
-        # hot day never bottlenecks on salt-many writers.
-        df = df.withColumn("__salt", F.pmod(F.hash("uuid"), F.lit(writers_per_day)))
-        df = df.repartition("dt", "__salt").drop("__salt")
-        if cluster_within_files_by and cluster_within_files_by in df.columns:
-            # local per-task sort, no extra shuffle. dt leads so the
-            # dynamic writer sees contiguous partition runs; the salt must
-            # NOT be in the sort key — a task emits one file per day dir
-            # across all its salt groups, so salt-major order would leave
-            # the file only piecewise sorted
-            df = df.sortWithinPartitions("dt", cluster_within_files_by)
-        writer = df.write.mode(mode).partitionBy("dt")
-    writer.option("compression", LAKE_CODEC).parquet(path)
+        writer = cluster_by_day(df, days).write.partitionBy("dt")
+    else:
+        writer = df.write
+    writer.mode(mode).option("compression", LAKE_CODEC).parquet(path)
 
 
 def append_new_decisions(
@@ -166,6 +208,7 @@ def append_new_decisions(
     observation=None,
     uuid_index_table: str | None = None,
     uuid_index_buckets: int | None = None,
+    days: int | None = None,
     **write_kwargs,
 ) -> list[str] | None:
     """Append only rows whose key is not already in the lake — the lake
@@ -215,7 +258,11 @@ def append_new_decisions(
     POST-anti-join frame, so the write action populates it with the
     count of rows actually appended — replayed rows the probe skipped do
     not count (run_backfill's exact rows_written, Q2/O5, at zero extra
-    passes)."""
+    passes).
+
+    `days` is the batch's day count, which sizes the lake write's fan
+    (`cluster_by_day`); when this call collects the batch's day list
+    anyway (`return_dts` or an index), the list's length is used."""
     batch = df
     lake_exists = hadoop_path_exists(spark, path)
     partitioned = (
@@ -268,7 +315,9 @@ def append_new_decisions(
             df = df.join(lake.select(key), key, "left_anti")
     if observation is not None:
         df = df.observe(observation, F.count(F.lit(1)).alias("n"))
-    write_decisions_parquet(df, path, mode="append", **write_kwargs)
+    write_decisions_parquet(
+        df, path, mode="append", days=len(dts) if dts else days, **write_kwargs
+    )
     if uuid_index_table is not None and partitioned:
         # Index maintenance AFTER the lake write, healed FROM the lake:
         # append every key present in this batch's day partitions that
@@ -400,6 +449,9 @@ def _compact_partitions_locked(
         .repartition(partition_col, "__salt")
         .drop("__pv", "__n_files", "__salt")
     )
+    if LAKE_SORT_COL in data_cols:
+        # a compacted file keeps the write's order (write_decisions_parquet)
+        salted = salted.sortWithinPartitions(partition_col, LAKE_SORT_COL)
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     try:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -530,7 +582,9 @@ def lake_with_rollup_sink(
                 .distinct()
                 .collect()
             ]
-            append_new_decisions(spark, batch_df, lake_path, key=key, **write_kwargs)
+            append_new_decisions(
+                spark, batch_df, lake_path, key=key, days=len(dts), **write_kwargs
+            )
         finally:
             batch_df.unpersist()
         if dts:

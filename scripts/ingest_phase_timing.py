@@ -9,6 +9,10 @@ operator's cost):
   D  C + dedup_batch window                       -> noop
   E  full write_decisions_parquet (real sink) + count (the bench action)
 
+After the timings it prints the lake phase E wrote: its file count, data
+files per day and bytes per row, so the file layout can be read next to
+the write time it costs.
+
 Run on an idle host: python scripts/ingest_phase_timing.py [reps]
 """
 
@@ -36,7 +40,8 @@ def main() -> None:
                       shuffle_partitions=cpus)
     work = tempfile.mkdtemp(prefix="ingest-phase-")
     landing = os.path.join(work, "landing")
-    rows = _build_ingest_fixture(landing, min(cpus, 32), 28125)
+    days = min(cpus, 32)
+    rows = _build_ingest_fixture(landing, days, 28125)
     os.sync()
     print(f"fixture rows={rows}")
 
@@ -62,8 +67,10 @@ def main() -> None:
     def phase_e(out):
         valid, _ = split_quarantine(
             decisions_transform(read_staged_zips(spark, landing)))
-        write_decisions_parquet(dedup_batch(valid), out, mode="overwrite")
-        spark.read.parquet(out).count()
+        write_decisions_parquet(
+            dedup_batch(valid), out, mode="overwrite", days=days
+        )
+        return spark.read.parquet(out).count()
 
     phases = [("A extract", phase_a), ("B +transform", phase_b),
               ("C +filter", phase_c), ("D +dedup", phase_d),
@@ -71,18 +78,32 @@ def main() -> None:
     # warm one full pass first
     phase_e(os.path.join(work, "warm_out"))
     results = {}
+    lake = {}
     for r in range(reps):
         for name, fn in phases:
             _reset_session_state(spark)
             spark.sparkContext.setJobDescription(f"phase {name} rep {r}")
+            out = os.path.join(work, f"out_{r}")
             t0 = time.perf_counter()
-            fn(os.path.join(work, f"out_{r}"))
+            n = fn(out)
             dt = time.perf_counter() - t0
+            if fn is phase_e:
+                lake = {"rows": n, "files": 0, "bytes": 0}
+                for d, _, names in os.walk(out):
+                    for f in names:
+                        if f.endswith(".parquet"):
+                            lake["files"] += 1
+                            lake["bytes"] += os.path.getsize(os.path.join(d, f))
             results.setdefault(name, []).append(round(dt, 2))
             _reset_session_state(spark)
             os.sync()
     for name, ts in results.items():
         print(f"{name:22s} min={min(ts):6.2f} all={ts}")
+    print(
+        f"E lake: rows={lake['rows']} files={lake['files']} "
+        f"files/day={lake['files'] / days:.2f} "
+        f"bytes/row={lake['bytes'] / max(1, lake['rows']):.1f}"
+    )
     import shutil
 
     shutil.rmtree(work, ignore_errors=True)

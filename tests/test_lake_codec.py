@@ -1,8 +1,9 @@
 """The decisions lake's file format: every data file the lake writers
 produce (both branches of write_decisions_parquet, append_new_decisions,
 compact_partitions) holds zstd column chunks whatever the session codec,
-the rows read back unchanged through Spark and through DuckDB, and the
-bucketed uuid index keeps the session codec."""
+the rows read back unchanged through Spark and through DuckDB, a
+compacted file keeps the write's entity_id order, and the bucketed uuid
+index keeps the session codec."""
 
 from __future__ import annotations
 
@@ -154,5 +155,9 @@ def test_compaction_keeps_zstd(spark, tmp_path):
     files = _data_files(out)
     assert len(files) == 1
     assert _codecs(files) == {"ZSTD"}
+    # the rewrite keeps the write's entity_id order inside each file
+    for f in files:
+        entity_ids = pq.read_table(f, columns=["entity_id"]).column(0).to_pylist()
+        assert entity_ids == sorted(entity_ids)
     assert _spark_rows(spark, out) == _expected(rows)
     assert _duckdb_rows(out) == _expected(rows)

@@ -614,3 +614,58 @@ def test_single_partition_funnels_are_bounded(all_plans):
         "any global funnel, or re-express with a distributed two-pass "
         "rank (plans/reports.py _global_rank)"
     )
+
+
+def _exchanges(plan) -> list:
+    """Every shuffle exchange of a physical plan, parents before children."""
+    out = []
+    if plan.getClass().getSimpleName() == "ShuffleExchangeExec":
+        out.append(plan)
+    children = plan.children()
+    for i in range(children.size()):
+        out += _exchanges(children.apply(i))
+    return out
+
+
+def test_backfill_lake_write_shuffles_twice(spark, tmp_path, monkeypatch):
+    """run_backfill's lake write has exactly two exchanges below it: the
+    dedup window's hash on uuid and one rebalance on dt (4 days on
+    local[4]: the write's fan is 1, so no salt)."""
+    from datetime import date
+
+    from dsacord_spark.config import Config
+    from dsacord_spark.pipeline import run_backfill
+    from dsacord_spark.sinks import parquet
+    from tests.test_pipeline import _Resp, _day_zip
+
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    written = []
+    cluster_by_day = parquet.cluster_by_day
+
+    def capture(df, days=None):
+        written.append(cluster_by_day(df, days))
+        return written[-1]
+
+    monkeypatch.setattr(parquet, "cluster_by_day", capture)
+    cfg = Config(
+        date_from=date(2025, 1, 1),
+        date_to=date(2025, 1, 4),
+        landing_dir=str(tmp_path / "landing"),
+    )
+    metrics = run_backfill(
+        spark, cfg, opener=lambda url: _Resp(_day_zip(url[-20:]))
+    )
+    assert metrics.rows_written == 4
+    assert len(written) == 1
+    plan = written[0]._jdf.queryExecution().executedPlan()
+    assert plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec"
+    exchanges = [
+        (str(e.shuffleOrigin()), e.outputPartitioning().toString())
+        for e in _exchanges(plan.executedPlan())
+    ]
+    assert len(exchanges) == 2, exchanges
+    (write_origin, write_keys), (dedup_origin, dedup_keys) = exchanges
+    assert write_origin == "REBALANCE_PARTITIONS_BY_COL"
+    assert re.fullmatch(r"hashpartitioning\(dt#\d+, \d+\)", write_keys), write_keys
+    assert dedup_origin == "ENSURE_REQUIREMENTS"
+    assert re.fullmatch(r"hashpartitioning\(uuid#\d+, \d+\)", dedup_keys), dedup_keys
