@@ -2,8 +2,8 @@
 
 The reference declares a fixed storage schema via Go struct tags
 (/root/reference/types.go:22-65) and maps 36 CSV wire columns onto it by
-header name (/root/reference/utils.go:167-191). Here both are explicit
-StructTypes: CSV_COLUMNS (all strings on the wire) and DECISIONS_SCHEMA
+header name (/root/reference/utils.go:167-191). Here both are explicit:
+CSV_COLUMNS (all strings on the wire) and DECISIONS_SCHEMA
 (typed, 39 storage columns of which 3 are derived + 1 never-populated).
 """
 
@@ -52,13 +52,6 @@ CSV_COLUMNS: list[str] = [
     "platform_uid",
     "created_at",
 ]
-
-# Wire schema: everything is a string; typing happens in the transform
-# (keeps the CSV scan simple + PERMISSIVE, matching ragged-row tolerance,
-# utils.go:161).
-CSV_SCHEMA = T.StructType(
-    [T.StructField(c, T.StringType(), True) for c in CSV_COLUMNS]
-)
 
 _ARR = T.ArrayType(T.StringType())
 

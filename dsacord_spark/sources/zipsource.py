@@ -22,8 +22,9 @@ design instead:
   Spark columns (transform.py) so F1-F5 remain Catalyst expressions.
 
 At 100 TB: binaryFile scan over dt=YYYY-MM-DD partitions gives partition
-pruning by date; maxFilesPerTrigger bounds a streaming backfill; one task
-per daily ZIP matches the reference's unit of work (main.go:146-154).
+pruning by date; maxFilesPerTrigger bounds a streaming backfill at one
+dump ZIP per file (`extract_staged_zips` serves batch and stream alike);
+one task per daily ZIP matches the reference's unit of work (main.go:146-154).
 """
 
 from __future__ import annotations
@@ -38,7 +39,8 @@ from collections.abc import Iterator
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyarrow import csv as pa_csv
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql.streaming import DataStreamReader
 
 from dsacord_spark.schema import CSV_COLUMNS
 
@@ -197,21 +199,23 @@ def extract_zip_arrow(it):
                 yield from t.to_batches()
 
 
-def read_staged_zips(
-    spark: SparkSession, landing: str | list[str]
+# binaryFile's fixed schema: a file-source stream must be given it
+BINARY_FILE_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
+
+
+def extract_staged_zips(
+    reader: DataFrameReader | DataStreamReader, landing: str | list[str]
 ) -> DataFrame:
-    """binaryFile scan of the landing dir — or of an explicit staged-path
-    list (what stage_range returns), so a daily run reads exactly its
-    own ZIPs instead of rescanning every previously staged day (r8
-    verdict; at 100 TB the landing dir holds years of dumps and a
-    directory scan would re-extract all of them).
+    """Wire rows of the dump ZIPs under `landing`, read by `spark.read`
+    or by `spark.readStream.schema(BINARY_FILE_SCHEMA)`. The glob skips
+    stager attempt files (`*.zip.tmp.*`) and the lake's parquet.
 
     Arrow-native extraction (mapInArrow): the parse tier emits pyarrow
     record batches directly, skipping the pandas object-string
     round-trip on both sides of the worker boundary (interleaved A/B at
     sf0.1/32 cores: see PLANS.md round-4 notes)."""
     binary = (
-        spark.read.format("binaryFile")
+        reader.format("binaryFile")
         .option("pathGlobFilter", "*.zip")
         .option("recursiveFileLookup", "true")
         .load(landing)
@@ -219,3 +223,11 @@ def read_staged_zips(
     )
     return binary.mapInArrow(extract_zip_arrow, schema=EXTRACT_SCHEMA)
 
+
+def read_staged_zips(spark: SparkSession, landing: str | list[str]) -> DataFrame:
+    """binaryFile scan of the landing dir — or of an explicit staged-path
+    list (what stage_range returns), so a daily run reads exactly its
+    own ZIPs instead of rescanning every previously staged day (r8
+    verdict; at 100 TB the landing dir holds years of dumps and a
+    directory scan would re-extract all of them)."""
+    return extract_staged_zips(spark.read, landing)

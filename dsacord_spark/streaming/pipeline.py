@@ -5,9 +5,10 @@ The reference is a batch backfill tool whose shape is micro-batch: an
 unbounded sequence of daily dumps with late/duplicate data handled by
 upsert (README.md:27-28). Mapping:
 
-- source:     file-source `readStream` on the landing directory
-              (CSV fast path; the ZIP path stages through the extraction
-              step first), `maxFilesPerTrigger` bounds a backfill batch;
+- source:     file-source `readStream` of the staged dump ZIPs in the
+              landing directory, through the batch backfill's extraction
+              front end (`sources/zipsource.extract_staged_zips`);
+              `maxFilesPerTrigger` bounds an epoch at that many dumps;
 - trigger:    `availableNow` == the reference's one-shot date-range run;
               a processing-time trigger == tailing fresh dumps;
 - exactly-once: checkpointing + per-epoch keep-latest dedup + idempotent
@@ -24,26 +25,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from dsacord_spark import leases
-from dsacord_spark.schema import CSV_SCHEMA
 from dsacord_spark.session import local_frame
 from dsacord_spark.sinks.jdbc import dedup_batch
+from dsacord_spark.sources.zipsource import BINARY_FILE_SCHEMA, extract_staged_zips
 from dsacord_spark.transform import decisions_transform, split_quarantine
-
-
-def read_wire_stream(
-    spark: SparkSession, landing_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    reader = (
-        spark.readStream.schema(CSV_SCHEMA)
-        .option("header", True)
-        .option("multiLine", True)
-        .option("escape", '"')
-        .option("mode", "PERMISSIVE")
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.csv(landing_dir)
 
 
 def start_decisions_stream(
@@ -54,11 +39,19 @@ def start_decisions_stream(
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
-    """Stream wire CSVs through the typed transform into `sink` via
+    """Stream the dump ZIPs staged under `landing_dir`
+    (`dt=YYYY-MM-DD/<name>.zip`, as the stager writes them) through the
+    backfill's extraction and typed transform into `sink` via
     foreachBatch. The sink receives the epoch's VALID rows already
     deduped on uuid (epoch-level exactly-once under checkpoint replay
-    when the sink itself is idempotent, e.g. always-upsert)."""
-    wire = read_wire_stream(spark, landing_dir, max_files_per_trigger)
+    when the sink itself is idempotent, e.g. always-upsert). With
+    `max_files_per_trigger` set, a same-`created_at` tie split across
+    two dumps can land in two epochs, where the lake anti-join keeps
+    the first-seen row, not the later file's as the backfill does."""
+    reader = spark.readStream.schema(BINARY_FILE_SCHEMA)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    wire = extract_staged_zips(reader, landing_dir)
 
     def run_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         typed = decisions_transform(batch_df)

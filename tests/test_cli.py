@@ -49,9 +49,10 @@ def test_main_parquet_sink_end_to_end(spark, tmp_path, monkeypatch, capsys):
     """`python -m dsacord_spark --sink parquet` over a faked transport:
     same serving setup as test_pipeline, driven through the real CLI."""
     import dsacord_spark.sources.stager as stager
-    from tests.test_pipeline import _Resp, _day_zip
+    from tests.test_pipeline import _Resp
+    from tests.wire_dumps import day_zip
 
-    served = {"2025-01-01": _day_zip("cli-row")}
+    served = {"2025-01-01": day_zip("cli-row", copies=2)}
 
     def opener(url):
         import urllib.error

@@ -4,8 +4,6 @@ Edge cases mirror FIXTURES.md §2 golden rows."""
 
 from __future__ import annotations
 
-import io
-import zipfile
 from datetime import datetime
 
 import pytest
@@ -15,52 +13,22 @@ from dsacord_spark.schema import CSV_COLUMNS
 from dsacord_spark.sources.zipsource import read_staged_zips
 from dsacord_spark.transform import decisions_transform, split_quarantine
 from dsacord_spark.sinks.parquet import write_decisions_parquet
-
-HEADER = ",".join(CSV_COLUMNS)
-
-# one fully-populated valid row
-_FULL_ROW = {
-    "uuid": "aaaa-1",
-    "decision_visibility": '["DECISION_VISIBILITY_CONTENT_REMOVED"]',
-    "end_date_visibility_restriction": "2025-01-02 03:04:05",
-    "category": "STATEMENT_CATEGORY_SCAM",
-    "content_type": "not-json-token",
-    "automated_detection": "Yes",
-    "platform_uid": "175928847299117063-42-user",
-    "created_at": "2025-01-01 00:00:00",
-}
-
-
-def _csv_row(overrides: dict) -> str:
-    import csv as _csv
-
-    buf = io.StringIO()
-    _csv.writer(buf, quoting=_csv.QUOTE_ALL, lineterminator="").writerow(
-        [overrides.get(c, "") for c in CSV_COLUMNS]
-    )
-    return buf.getvalue()
+from tests.wire_dumps import FULL_ROW, stage_zip, wire_csv, zip_bytes
 
 
 def _build_fixture(tmp_path) -> str:
     """landing/dt=2025-01-01/day.zip: nested zip + plain csv + ragged csv."""
-    csv1 = HEADER + "\n" + _csv_row(_FULL_ROW) + "\n" + _csv_row({"uuid": ""}) + "\n"
     # ragged: header-subset file (missing most columns) with a short row
     csv2 = (
         "uuid,platform_uid,automated_detection\n"
         '"bbbb-1","abc-9-server","NO"\n'
         '"bbbb-2"\n'  # short row: missing cells -> '' (reference get-closure semantics)
     )
-    inner = io.BytesIO()
-    with zipfile.ZipFile(inner, "w") as zf:
-        zf.writestr("part-0.csv", csv1)
-    outer = io.BytesIO()
-    with zipfile.ZipFile(outer, "w") as zf:
-        zf.writestr("inner.zip", inner.getvalue())
-        zf.writestr("part-1.csv", csv2)
-    day_dir = tmp_path / "landing" / "dt=2025-01-01"
-    day_dir.mkdir(parents=True)
-    (day_dir / "day.zip").write_bytes(outer.getvalue())
-    return str(tmp_path / "landing")
+    inner = zip_bytes({"part-0.csv": wire_csv([FULL_ROW, {"uuid": ""}])})
+    return stage_zip(
+        tmp_path / "landing", "2025-01-01", "day.zip",
+        zip_bytes({"inner.zip": inner, "part-1.csv": csv2}),
+    )
 
 
 @pytest.fixture(scope="module")
@@ -204,29 +172,16 @@ def test_compact_partitions_merges_small_files(spark, tmp_path):
     }
 
 
-def _zip_landing(tmp_path, members: dict[str, str]) -> str:
-    """landing/dt=2025-01-01/day.zip holding the given CSV members."""
-    d = tmp_path / "landing" / "dt=2025-01-01"
-    d.mkdir(parents=True)
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        for name, text in members.items():
-            zf.writestr(name, text)
-    (d / "day.zip").write_bytes(buf.getvalue())
-    return str(tmp_path / "landing")
-
-
 def test_zip_path_matches_get_closure_semantics(spark, tmp_path):
     """Empty cell, per-member-absent column, and globally-absent column
     all surface as '' exactly like the reference's get closure."""
-    landing = _zip_landing(
-        tmp_path,
-        {
+    landing = stage_zip(
+        tmp_path / "landing", "2025-01-01", "day.zip", zip_bytes({
             "a.csv": "uuid,category,platform_uid\n"
             '"fast-1","CAT","123-9-user"\n'
             '"fast-2","",""\n',  # present-but-empty cells
             "b.csv": 'uuid\n"fast-3"\n',  # header-subset member
-        },
+        }),
     )
     rows = {r["uuid"]: r for r in read_staged_zips(spark, landing).collect()}
     assert set(rows) == {"fast-1", "fast-2", "fast-3"}
@@ -240,9 +195,9 @@ def test_ragged_first_row_keeps_uuids(spark, tmp_path):
     """A member whose FIRST data row has one extra field is legal for the
     reference's reader (FieldsPerRecord=-1): every row keeps its own
     uuid and the extra field is ignored — no column shift."""
-    landing = _zip_landing(
-        tmp_path,
-        {"r.csv": 'uuid,category\n"r-1","C1","EXTRA"\n"r-2","C2"\n'},
+    landing = stage_zip(
+        tmp_path / "landing", "2025-01-01", "day.zip",
+        zip_bytes({"r.csv": 'uuid,category\n"r-1","C1","EXTRA"\n"r-2","C2"\n'}),
     )
     rows = read_staged_zips(spark, landing).collect()
     assert sorted((r["uuid"], r["category"]) for r in rows) == [
@@ -431,24 +386,17 @@ def test_corrupt_archive_isolated_not_fatal(spark, tmp_path):
     """Reference parity (main.go:183-206): a corrupt/truncated archive is
     logged and skipped — the good archives in the same landing dir still
     extract, and the task does not fail."""
-    import io
-    import zipfile
-
-    from dsacord_spark.sources.zipsource import read_staged_zips
-
     landing = tmp_path / "landing"
     landing.mkdir()
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        zf.writestr("a.csv", 'uuid,category\n"u1","C"\n"u2","D"\n')
-    (landing / "good.zip").write_bytes(buf.getvalue())
+    good = zip_bytes({"a.csv": 'uuid,category\n"u1","C"\n"u2","D"\n'})
+    (landing / "good.zip").write_bytes(good)
     (landing / "bad.zip").write_bytes(b"PK\x03\x04 truncated garbage")
     # nested corruption: valid outer zip holding a broken inner .zip
-    outer = io.BytesIO()
-    with zipfile.ZipFile(outer, "w") as zf:
-        zf.writestr("inner.zip", b"PK\x03\x04 also garbage")
-        zf.writestr("b.csv", 'uuid,category\n"u3","E"\n')
-    (landing / "mixed.zip").write_bytes(outer.getvalue())
+    mixed = zip_bytes({
+        "inner.zip": b"PK\x03\x04 also garbage",
+        "b.csv": 'uuid,category\n"u3","E"\n',
+    })
+    (landing / "mixed.zip").write_bytes(mixed)
 
     rows = read_staged_zips(spark, str(landing)).collect()
     got = sorted(r["uuid"] for r in rows)
@@ -542,16 +490,13 @@ def test_nested_zip_larger_than_spool_spills_not_oom(monkeypatch):
     import os as _os
 
     big_csv = 'uuid,category\n"u-big","' + "x" * 100 + '"\n'
-    inner = io.BytesIO()
-    with zipfile.ZipFile(inner, "w") as zf:
-        zf.writestr("big.csv", big_csv)
-        zf.writestr("noise.bin", _os.urandom(200_000))  # incompressible bulk
-    outer = io.BytesIO()
-    with zipfile.ZipFile(outer, "w") as zf:
-        zf.writestr("inner.zip", inner.getvalue())
+    inner = zip_bytes({
+        "big.csv": big_csv,
+        "noise.bin": _os.urandom(200_000),  # incompressible bulk
+    })
 
     members = list(
-        zipsource._iter_csv_members(outer.getvalue(), "day.zip")
+        zipsource._iter_csv_members(zip_bytes({"inner.zip": inner}), "day.zip")
     )
     assert rolled, "inner archive above the spool cap must spill to disk"
     names = [m for m, _ in members]

@@ -115,31 +115,25 @@ def test_append_adds_one_file_per_touched_day(spark, tmp_path):
     assert all(after[d] == before[d] + 1 for d in touched)
 
 
-def _dump_zip(day: str, rows: int) -> bytes:
-    """One dump day of `rows` valid rows created on `day`, with ~600 B of
-    hashed text each so the write's shuffle is too big to coalesce."""
+def _day_rows(day: str, rows: int) -> list[dict]:
+    """`rows` valid rows created on `day`, with ~600 B of hashed text each
+    so the write's shuffle is too big to coalesce."""
     import hashlib
-    import io
-    import zipfile
 
-    from tests.test_ingest import HEADER, _FULL_ROW, _csv_row
+    from tests.wire_dumps import FULL_ROW
 
-    lines = [HEADER]
-    for i in range(rows):
-        row = dict(_FULL_ROW)
-        row["uuid"] = f"{day}-{i}"
-        row["created_at"] = f"{day} 12:00:00"
-        row["decision_facts"] = "".join(
-            hashlib.sha256(f"{day}/{i}/{k}".encode()).hexdigest() for k in range(10)
+    return [
+        dict(
+            FULL_ROW,
+            uuid=f"{day}-{i}",
+            created_at=f"{day} 12:00:00",
+            decision_facts="".join(
+                hashlib.sha256(f"{day}/{i}/{k}".encode()).hexdigest()
+                for k in range(10)
+            ),
         )
-        lines.append(_csv_row(row))
-    inner = io.BytesIO()
-    with zipfile.ZipFile(inner, "w") as zf:
-        zf.writestr("d.csv", "\n".join(lines) + "\n")
-    outer = io.BytesIO()
-    with zipfile.ZipFile(outer, "w") as zf:
-        zf.writestr("inner.zip", inner.getvalue())
-    return outer.getvalue()
+        for i in range(rows)
+    ]
 
 
 def test_rebuild_sizes_the_write_by_every_staged_day(spark, tmp_path):
@@ -151,9 +145,10 @@ def test_rebuild_sizes_the_write_by_every_staged_day(spark, tmp_path):
     from dsacord_spark.config import Config
     from dsacord_spark.pipeline import run_backfill
     from tests.test_pipeline import _Resp
+    from tests.wire_dumps import dump_zip
 
     days = [f"2025-01-0{d}" for d in range(1, 7)]
-    served = {day: _dump_zip(day, 1500) for day in days}
+    served = {day: dump_zip(_day_rows(day, 1500), nested=True) for day in days}
 
     def opener(url):
         return _Resp(next(z for day, z in served.items() if day in url))

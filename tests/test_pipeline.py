@@ -6,25 +6,11 @@ from __future__ import annotations
 
 import io
 import urllib.error
-import zipfile
 from datetime import date
 
 from dsacord_spark.config import Config
 from dsacord_spark.pipeline import run_backfill
-from tests.test_ingest import HEADER, _FULL_ROW, _csv_row
-
-
-def _day_zip(uuid: str) -> bytes:
-    row = dict(_FULL_ROW)
-    row["uuid"] = uuid
-    csv_data = HEADER + "\n" + _csv_row(row) + "\n" + _csv_row(row) + "\n"  # dup row
-    inner = io.BytesIO()
-    with zipfile.ZipFile(inner, "w") as zf:
-        zf.writestr("d.csv", csv_data)
-    outer = io.BytesIO()
-    with zipfile.ZipFile(outer, "w") as zf:
-        zf.writestr("inner.zip", inner.getvalue())
-    return outer.getvalue()
+from tests.wire_dumps import FULL_ROW, day_zip, dump_zip, stage_zip
 
 
 class _Resp(io.BytesIO):
@@ -39,8 +25,8 @@ class _Resp(io.BytesIO):
 
 def test_run_backfill_end_to_end(spark, tmp_path):
     served = {
-        "2025-01-01": _day_zip("day1-row"),
-        "2025-01-03": _day_zip("day3-row"),
+        "2025-01-01": day_zip("day1-row", copies=2),
+        "2025-01-03": day_zip("day3-row", copies=2),
     }
 
     def opener(url):
@@ -76,7 +62,10 @@ def test_default_sink_runs_extraction_exactly_once(spark, tmp_path, monkeypatch)
     dataflow would double it."""
     from dsacord_spark.sources import zipsource
 
-    served = {"2025-01-01": _day_zip("d1"), "2025-01-02": _day_zip("d2")}
+    served = {
+        "2025-01-01": day_zip("d1", copies=2),
+        "2025-01-02": day_zip("d2", copies=2),
+    }
 
     def opener(url):
         for dt, data in served.items():
@@ -116,7 +105,7 @@ def test_default_sink_handles_all_quarantined_empty_write(spark, tmp_path):
             date_to=date(2025, 1, 1),
             landing_dir=str(tmp_path / "landing"),
         ),
-        opener=lambda url: _Resp(_day_zip("")),  # empty uuid -> quarantined
+        opener=lambda url: _Resp(day_zip("", copies=2)),  # empty uuid -> quarantined
     )
     assert metrics.rows_written == 0
     assert metrics.rows_quarantined == 2  # the dup pair, both quarantined
@@ -141,7 +130,10 @@ def test_first_backfill_never_reads_absent_lake(spark, tmp_path, monkeypatch):
         return parquet(self, *paths, **options)
 
     monkeypatch.setattr(DataFrameReader, "parquet", spy)
-    served = {"2025-01-01": _day_zip("d1"), "2025-01-02": _day_zip("d2")}
+    served = {
+        "2025-01-01": day_zip("d1", copies=2),
+        "2025-01-02": day_zip("d2", copies=2),
+    }
     metrics = run_backfill(
         spark,
         Config(date_from=date(2025, 1, 1), date_to=date(2025, 1, 2),
@@ -153,23 +145,6 @@ def test_first_backfill_never_reads_absent_lake(spark, tmp_path, monkeypatch):
     assert absent_reads == []
     assert metrics.rows_written == 2
     assert spark.read.parquet(lake).count() == 2
-
-
-def _day_zip_at(uuid: str, created_at: str) -> bytes:
-    """_day_zip with a controllable created_at so each dump day lands in
-    its own dt= lake partition (the scoping tests below need disjoint
-    day partitions)."""
-    row = dict(_FULL_ROW)
-    row["uuid"] = uuid
-    row["created_at"] = created_at
-    csv_data = HEADER + "\n" + _csv_row(row) + "\n"
-    inner = io.BytesIO()
-    with zipfile.ZipFile(inner, "w") as zf:
-        zf.writestr("d.csv", csv_data)
-    outer = io.BytesIO()
-    with zipfile.ZipFile(outer, "w") as zf:
-        zf.writestr("inner.zip", inner.getvalue())
-    return outer.getvalue()
 
 
 def test_run_backfill_scopes_to_this_runs_days(spark, tmp_path):
@@ -185,12 +160,12 @@ def test_run_backfill_scopes_to_this_runs_days(spark, tmp_path):
 
     def opener_a(url):
         assert "2025-01-01" in url, f"run A staged unexpected url {url}"
-        return _Resp(_day_zip_at("rowA", "2025-01-01 00:00:00"))
+        return _Resp(day_zip("rowA", "2025-01-01 00:00:00"))
 
     def opener_b(url):
         assert "2025-01-02" in url, f"run B staged unexpected url {url}"
         # created_at deliberately in run A's day partition
-        return _Resp(_day_zip_at("rowB", "2025-01-01 12:00:00"))
+        return _Resp(day_zip("rowB", "2025-01-01 12:00:00"))
 
     m_a = run_backfill(
         spark,
@@ -237,8 +212,8 @@ def test_run_backfill_distributed_staging_end_to_end(spark, tmp_path):
     ships it to the Python workers BY VALUE (a test-module-level def
     pickles by reference to a module the workers cannot import)."""
     served = {
-        "2025-02-01": _day_zip("dist-day1"),
-        "2025-02-03": _day_zip("dist-day3"),
+        "2025-02-01": day_zip("dist-day1", copies=2),
+        "2025-02-03": day_zip("dist-day3", copies=2),
     }
 
     class _R(io.BytesIO):
@@ -284,19 +259,18 @@ def test_config_rejects_unknown_staging():
 # three versions of one uuid with the same created_at: only their
 # content differs, so the keep choice falls to the tie-breaks
 _CONFLICT = [
-    dict(_FULL_ROW, uuid="c-1", account_type=kind) for kind in ("b", "a", "c")
+    dict(FULL_ROW, uuid="c-1", account_type=kind) for kind in ("b", "a", "c")
 ]
 
 
-def _conflict_zip(rows: list[dict]) -> bytes:
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        zf.writestr("d.csv", HEADER + "\n" + "\n".join(map(_csv_row, rows)) + "\n")
-    return buf.getvalue()
+def _days(dumps: list[list[dict]]) -> list[str]:
+    """The dump day of each entry of `dumps`, from 2025-01-01 on."""
+    return [f"2025-01-0{i}" for i in range(1, len(dumps) + 1)]
 
 
-def _backfill_survivor(spark, tmp_path, rows: list[dict]) -> str:
+def _backfill_survivor(spark, tmp_path, dumps: list[list[dict]]) -> str:
     kept: list = []
+    served = dict(zip(_days(dumps), map(dump_zip, dumps)))
 
     def sink(df):
         kept.extend(df.select("uuid", "account_type").collect())
@@ -304,21 +278,20 @@ def _backfill_survivor(spark, tmp_path, rows: list[dict]) -> str:
 
     run_backfill(
         spark,
-        Config(date_from=date(2025, 1, 1), date_to=date(2025, 1, 1),
+        Config(date_from=date(2025, 1, 1), date_to=date(2025, 1, len(dumps)),
                landing_dir=str(tmp_path / "landing")),
         sink=sink,
-        opener=lambda url: _Resp(_conflict_zip(rows)),
+        opener=lambda url: _Resp(next(z for dt, z in served.items() if dt in url)),
     )
     assert [r["uuid"] for r in kept] == ["c-1"]
     return kept[0]["account_type"]
 
 
-def _stream_survivor(spark, tmp_path, rows: list[dict]) -> str:
+def _stream_survivor(spark, tmp_path, dumps: list[list[dict]]) -> str:
     from dsacord_spark.streaming.pipeline import start_decisions_stream
 
-    day = tmp_path / "stream" / "dt=2025-01-01"
-    day.mkdir(parents=True)
-    (day / "d.csv").write_text(HEADER + "\n" + "\n".join(map(_csv_row, rows)) + "\n")
+    for dt, rows in zip(_days(dumps), dumps):
+        stage_zip(tmp_path / "stream", dt, f"sbd-{dt}-full.zip", dump_zip(rows))
     kept: list = []
     q = start_decisions_stream(
         spark, str(tmp_path / "stream"), str(tmp_path / "ckpt"),
@@ -332,13 +305,18 @@ def _stream_survivor(spark, tmp_path, rows: list[dict]) -> str:
 def test_dedup_keep_choice_ignores_row_order(spark, tmp_path):
     """Rows that tie on uuid and created_at arrive at the dedup window in
     file order; the survivor must not depend on it (a task retry can
-    change arrival order), in the backfill and in the stream's epoch."""
-    survivors = {
-        (path.__name__, order): path(spark, tmp_path / f"{path.__name__}{order}", rows)
-        for path in (_backfill_survivor, _stream_survivor)
-        for order, rows in enumerate((_CONFLICT, _CONFLICT[::-1]))
+    change arrival order), in the backfill and in the stream's epoch.
+    A tie split across two dumps goes to the later file on both paths,
+    even where the column tie-break would pick the other row."""
+    inputs = {
+        "one dump": ([_CONFLICT], "a"),
+        "one dump, reversed": ([_CONFLICT[::-1]], "a"),
+        "two dumps": ([[_CONFLICT[1]], [dict(_CONFLICT[1], account_type="z")]], "z"),
     }
-    assert set(survivors.values()) == {"a"}, survivors
+    for path in (_backfill_survivor, _stream_survivor):
+        for i, (name, (dumps, want)) in enumerate(inputs.items()):
+            got = path(spark, tmp_path / f"{path.__name__}{i}", dumps)
+            assert got == want, (path.__name__, name, got)
 
 
 def test_dedup_keep_choice_prefers_later_source_file(spark):

@@ -636,7 +636,8 @@ def test_backfill_lake_write_shuffles_twice(spark, tmp_path, monkeypatch):
     from dsacord_spark.config import Config
     from dsacord_spark.pipeline import run_backfill
     from dsacord_spark.sinks import parquet
-    from tests.test_pipeline import _Resp, _day_zip
+    from tests.test_pipeline import _Resp
+    from tests.wire_dumps import day_zip
 
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     written = []
@@ -653,7 +654,7 @@ def test_backfill_lake_write_shuffles_twice(spark, tmp_path, monkeypatch):
         landing_dir=str(tmp_path / "landing"),
     )
     metrics = run_backfill(
-        spark, cfg, opener=lambda url: _Resp(_day_zip(url[-20:]))
+        spark, cfg, opener=lambda url: _Resp(day_zip(url[-20:], copies=2))
     )
     assert metrics.rows_written == 4
     assert len(written) == 1

@@ -276,29 +276,17 @@ class TestStreamingToLivePostgres:
         self, spark, factory, fresh_table, tmp_path
     ):
         """The COMPLETE reference job on Spark against a real server:
-        landing CSVs -> readStream -> typed transform (F1-F5) ->
+        landing dump ZIPs -> readStream -> typed transform (F1-F5) ->
         quarantine split -> epoch keep-latest dedup -> foreachBatch
         always-upsert into live Postgres — including a late re-dump of
         the same day that replays through the idempotent upsert
         (README.md:27-28,60-63 semantics)."""
-        from dsacord_spark.schema import CSV_COLUMNS
         from dsacord_spark.sinks.jdbc import write_batch
         from dsacord_spark.streaming.pipeline import start_decisions_stream
+        from tests.wire_dumps import dump_zip, stage_zip
 
-        header = ",".join(CSV_COLUMNS)
-
-        def wire_csv(rows):
-            return header + "\n" + "\n".join(
-                ",".join('"' + r.get(c, "") + '"' for c in CSV_COLUMNS)
-                for r in rows
-            )
-
-        def write_day(dt, name, rows):
-            day = tmp_path / "landing" / f"dt={dt}"
-            day.mkdir(parents=True, exist_ok=True)
-            (day / name).write_text(wire_csv(rows))
-
-        write_day("2025-01-01", "d1.csv", [
+        landing = tmp_path / "landing"
+        stage_zip(landing, "2025-01-01", "d1.zip", dump_zip([
             {"uuid": "s1", "created_at": "2025-01-01 00:00:00",
              "category": "CAT_A",
              "decision_visibility": '["DECISION_VISIBILITY_CONTENT_REMOVED"]',
@@ -308,7 +296,7 @@ class TestStreamingToLivePostgres:
             {"uuid": "", "created_at": "2025-01-01 00:00:00"},  # quarantined
             {"uuid": "s2", "created_at": "2025-01-01 00:00:00",
              "automated_detection": "No"},
-        ])
+        ]))
 
         def sink(batch_df, _epoch):
             write_batch(batch_df, factory, strategy="always-upsert",
@@ -333,11 +321,11 @@ class TestStreamingToLivePostgres:
 
         # late re-dump: the same uuid redelivered with newer data replays
         # through checkpoint resume + idempotent upsert
-        write_day("2025-01-01", "d1-redump.csv", [
+        stage_zip(landing, "2025-01-01", "d1-redump.zip", dump_zip([
             {"uuid": "s2", "created_at": "2025-01-02 00:00:00",
              "category": "CAT_LATE"},
             {"uuid": "s3", "created_at": "2025-01-02 00:00:00"},
-        ])
+        ]))
         q2 = start_decisions_stream(
             spark, str(tmp_path / "landing"), ckpt, sink, available_now=True
         )

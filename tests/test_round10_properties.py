@@ -711,26 +711,20 @@ def test_run_backfill_custom_sink_without_action_does_not_hang(
 
     from dsacord_spark.config import Config
     from dsacord_spark.pipeline import run_backfill
-    from tests.test_ingest import HEADER, _FULL_ROW, _csv_row
     from tests.test_pipeline import _Resp
-    import io
-    import zipfile
+    from tests.wire_dumps import FULL_ROW, dump_zip
 
-    row = dict(_FULL_ROW)
-    row["uuid"] = "custom-sink-row"
-    bad = dict(_FULL_ROW)
-    bad["uuid"] = ""  # quarantined (Q5)
-    csv_data = HEADER + "\n" + _csv_row(row) + "\n" + _csv_row(bad) + "\n"
-    inner = io.BytesIO()
-    with zipfile.ZipFile(inner, "w") as zf:
-        zf.writestr("d.csv", csv_data)
-    outer = io.BytesIO()
-    with zipfile.ZipFile(outer, "w") as zf:
-        zf.writestr("inner.zip", inner.getvalue())
+    dump = dump_zip(
+        [
+            dict(FULL_ROW, uuid="custom-sink-row"),
+            dict(FULL_ROW, uuid=""),  # quarantined (Q5)
+        ],
+        nested=True,
+    )
 
     def opener(url):
         if "2025-02-01" in url:
-            return _Resp(outer.getvalue())
+            return _Resp(dump)
         raise urllib.error.HTTPError(url, 403, "forbidden", None, None)
 
     cfg = Config(
@@ -765,10 +759,11 @@ def test_run_backfill_with_uuid_index_replay_exact(spark, tmp_path):
 
     from dsacord_spark.config import Config
     from dsacord_spark.pipeline import run_backfill
-    from tests.test_pipeline import _Resp, _day_zip
+    from tests.test_pipeline import _Resp
+    from tests.wire_dumps import day_zip
 
-    served = {"2025-03-01": _day_zip("uuidx-row-a"),
-              "2025-03-02": _day_zip("uuidx-row-b")}
+    served = {"2025-03-01": day_zip("uuidx-row-a", copies=2),
+              "2025-03-02": day_zip("uuidx-row-b", copies=2)}
 
     def opener(url):
         for dt, data in served.items():

@@ -133,7 +133,8 @@ def test_run_backfill_rebuild_heals_shrunken_lake_index(spark, tmp_path):
 
     from dsacord_spark.config import Config
     from dsacord_spark.pipeline import run_backfill
-    from tests.test_pipeline import _Resp, _day_zip_at
+    from tests.test_pipeline import _Resp
+    from tests.wire_dumps import day_zip
 
     landing = str(tmp_path / "landing")
     idx = "t_r11_plidx"
@@ -141,7 +142,7 @@ def test_run_backfill_rebuild_heals_shrunken_lake_index(spark, tmp_path):
     def opener(url):
         for dt in ("2025-01-01", "2025-01-02"):
             if dt in url:
-                return _Resp(_day_zip_at(f"row-{dt}", f"{dt} 00:00:00"))
+                return _Resp(day_zip(f"row-{dt}", f"{dt} 00:00:00"))
         raise AssertionError(f"unexpected url {url}")
 
     def cfg(d_from, d_to):

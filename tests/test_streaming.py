@@ -11,45 +11,27 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from dsacord_spark.schema import CSV_COLUMNS
 from dsacord_spark.streaming.pipeline import start_decisions_stream
 from tests.index_tables import (
     HAMMING_SUFFIXES,
     MINHASH_SUFFIXES,
     drop_index_tables,
 )
+from tests.wire_dumps import dump_zip, stage_zip
 
-HEADER = ",".join(CSV_COLUMNS)
 # the checkout this file belongs to, whatever its path
 _REPO = str(Path(__file__).resolve().parents[1])
-
-
-def _wire_csv(rows: list[dict]) -> str:
-    return HEADER + "\n" + "\n".join(
-        ",".join('"' + r.get(c, "") + '"' for c in CSV_COLUMNS) for r in rows
-    )
-
-
-def _write_day(landing, dt: str, name: str, rows: list[dict]) -> None:
-    day = landing / f"dt={dt}"
-    day.mkdir(parents=True, exist_ok=True)
-    (day / name).write_text(_wire_csv(rows))
 
 
 def test_streaming_backfill_dedup_and_resume(spark, tmp_path):
     landing = tmp_path / "landing"
     ckpt = str(tmp_path / "ckpt")
-    _write_day(
-        landing,
-        "2025-01-01",
-        "d1.csv",
-        [
-            {"uuid": "u1", "created_at": "2025-01-01 00:00:00", "account_type": "old"},
-            {"uuid": "u1", "created_at": "2025-01-01 12:00:00", "account_type": "new"},
-            {"uuid": "", "created_at": "2025-01-01 00:00:00"},  # quarantined
-            {"uuid": "u2", "created_at": "2025-01-01 00:00:00"},
-        ],
-    )
+    stage_zip(landing, "2025-01-01", "d1.zip", dump_zip([
+        {"uuid": "u1", "created_at": "2025-01-01 00:00:00", "account_type": "old"},
+        {"uuid": "u1", "created_at": "2025-01-01 12:00:00", "account_type": "new"},
+        {"uuid": "", "created_at": "2025-01-01 00:00:00"},  # quarantined
+        {"uuid": "u2", "created_at": "2025-01-01 00:00:00"},
+    ]))
 
     epochs: list[list] = []
 
@@ -66,18 +48,117 @@ def test_streaming_backfill_dedup_and_resume(spark, tmp_path):
 
     # late re-dump arrives: restart from checkpoint processes ONLY the new file
     epochs.clear()
-    _write_day(
-        landing,
-        "2025-01-02",
-        "d2.csv",
-        [{"uuid": "u3", "created_at": "2025-01-02 00:00:00"}],
-    )
+    stage_zip(landing, "2025-01-02", "d2.zip", dump_zip([
+        {"uuid": "u3", "created_at": "2025-01-02 00:00:00"},
+    ]))
     q2 = start_decisions_stream(
         spark, str(landing), ckpt, sink, available_now=True
     )
     q2.awaitTermination(120)
     batch2 = [r["uuid"] for e in epochs for r in e]
     assert batch2 == ["u3"]  # checkpoint: day-1 file not reprocessed
+
+
+def _lake(spark, path: str) -> tuple[list[dict], set[str]]:
+    """A lake's rows in uuid order and the set of its files' schemas."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    rows = [r.asDict() for r in spark.read.parquet(path).orderBy("uuid").collect()]
+    files = glob.glob(f"{path}/**/*.parquet", recursive=True)
+    assert files, path
+    return rows, {pq.read_schema(f).to_string() for f in files}
+
+
+def test_stream_and_daily_backfill_write_identical_lakes(spark, tmp_path):
+    """The same staged dumps through a daily run_backfill and through
+    the stream, each appending with a uuid index, give identical lakes:
+    rows, `_source_file` values and file schemas. The dumps hold a
+    nested ZIP, a ragged first data row, a blank line, a BOM, a repeated
+    header name, and a same-created_at tie across the two files."""
+    from datetime import date
+
+    from dsacord_spark.config import Config
+    from dsacord_spark.pipeline import run_backfill
+    from dsacord_spark.sinks.parquet import append_new_decisions
+    from tests.test_pipeline import _Resp
+    from tests.wire_dumps import FULL_ROW, wire_csv, zip_bytes
+
+    tie = dict(FULL_ROW, uuid="tie", created_at="2025-01-01 06:00:00")
+    served = {
+        "2025-01-01": zip_bytes({
+            "inner.zip": zip_bytes({
+                "a.csv": wire_csv([FULL_ROW, dict(tie, account_type="a")]),
+            }),
+            "ragged.csv": "\ufeffuuid,category,created_at\n"
+            '"r-1","C1","2025-01-01 01:00:00","EXTRA"\n'
+            "\n"
+            '"r-2","C2","2025-01-01 02:00:00"\n',
+            "dup.csv": "uuid,category,category,created_at\n"
+            '"h-1","first","second","2025-01-01 03:00:00"\n',
+        }),
+        "2025-01-02": dump_zip([
+            dict(tie, account_type="z"),  # the later file wins the tie
+            {"uuid": "r-1", "category": "C1-late", "created_at": "2025-01-02 00:00:00"},
+            {"uuid": "", "created_at": "2025-01-02 00:00:00"},  # quarantined
+        ]),
+    }
+    landing = str(tmp_path / "landing")
+    stream_lake = str(tmp_path / "stream-lake")
+    try:
+        m = run_backfill(
+            spark,
+            Config(date_from=date(2025, 1, 1), date_to=date(2025, 1, 2),
+                   landing_dir=landing, uuid_index_table="t_parity_batch_idx"),
+            opener=lambda url: _Resp(next(z for dt, z in served.items() if dt in url)),
+        )
+        assert m.rows_written == 5 and m.rows_quarantined == 1
+        q = start_decisions_stream(
+            spark, landing, str(tmp_path / "ckpt"),
+            lambda df, _epoch: append_new_decisions(
+                spark, df, stream_lake, uuid_index_table="t_parity_stream_idx"
+            ),
+        )
+        q.awaitTermination(120)
+        batch_rows, batch_schemas = _lake(spark, landing + "/decisions")
+        stream_rows, stream_schemas = _lake(spark, stream_lake)
+    finally:
+        for t in ("t_parity_batch_idx", "t_parity_stream_idx"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    assert stream_rows == batch_rows
+    assert stream_schemas == batch_schemas and len(batch_schemas) == 1
+    got = {r["uuid"]: r for r in batch_rows}
+    assert sorted(got) == ["aaaa-1", "h-1", "r-1", "r-2", "tie"]
+    assert got["tie"]["account_type"] == "z"
+    assert "dt=2025-01-02" in got["tie"]["_source_file"]
+    assert got["r-1"]["category"] == "C1-late"
+    assert got["h-1"]["category"] == "second"  # last-wins header map
+    assert all(r["_source_file"] for r in batch_rows)
+
+
+def test_stream_reads_only_published_dumps(spark, tmp_path):
+    """The landing dir also holds a stager attempt file and the lake's
+    own parquet under decisions/; an epoch holds only the rows of the
+    published ZIPs."""
+    landing = tmp_path / "landing"
+    stage_zip(landing, "2025-01-01", "d1.zip", dump_zip([{"uuid": "pub-1"}]))
+    stage_zip(landing, "2025-01-02", "d2.zip", dump_zip([{"uuid": "pub-2"}]))
+    # an attempt's bytes before its os.replace: a whole, valid dump
+    stage_zip(landing, "2025-01-03", "d3.zip.tmp.1.2.abcd1234",
+              dump_zip([{"uuid": "attempt"}]))
+    spark.createDataFrame([("lake",)], "uuid string").write.parquet(
+        str(landing / "decisions" / "dt=2025-01-01")
+    )
+    epochs: list[list] = []
+    q = start_decisions_stream(
+        spark, str(landing), str(tmp_path / "ckpt"),
+        lambda df, _epoch: epochs.append(df.select("uuid", "_source_file").collect()),
+    )
+    q.awaitTermination(120)
+    rows = [r for e in epochs for r in e]
+    assert sorted(r["uuid"] for r in rows) == ["pub-1", "pub-2"]
+    assert all(r["_source_file"].endswith(".zip!d.csv") for r in rows)
 
 
 def test_sessionize_bounded_splits_islands(spark):
@@ -325,16 +406,11 @@ def test_streaming_lake_rollup_stays_consistent(spark, tmp_path):
 
     sink = lake_with_rollup_sink(spark, lake, roll, daily_counts)
 
-    _write_day(
-        landing,
-        "2025-01-01",
-        "d1.csv",
-        [
-            {"uuid": "u1", "created_at": "2025-01-01 00:00:00"},
-            {"uuid": "u2", "created_at": "2025-01-01 01:00:00"},
-            {"uuid": "u3", "created_at": "2025-01-02 00:00:00"},
-        ],
-    )
+    stage_zip(landing, "2025-01-01", "d1.zip", dump_zip([
+        {"uuid": "u1", "created_at": "2025-01-01 00:00:00"},
+        {"uuid": "u2", "created_at": "2025-01-01 01:00:00"},
+        {"uuid": "u3", "created_at": "2025-01-02 00:00:00"},
+    ]))
     q = start_decisions_stream(spark, str(landing), ckpt, sink, available_now=True)
     q.awaitTermination(120)
     assert_rollup_matches()
@@ -343,15 +419,10 @@ def test_streaming_lake_rollup_stays_consistent(spark, tmp_path):
     d1_mtime = os.path.getmtime(d1_file)
 
     # second backfill: a new day plus a duplicate of u3 (lands in nothing)
-    _write_day(
-        landing,
-        "2025-01-03",
-        "d3.csv",
-        [
-            {"uuid": "u3", "created_at": "2025-01-02 00:00:00"},
-            {"uuid": "u4", "created_at": "2025-01-03 00:00:00"},
-        ],
-    )
+    stage_zip(landing, "2025-01-03", "d3.zip", dump_zip([
+        {"uuid": "u3", "created_at": "2025-01-02 00:00:00"},
+        {"uuid": "u4", "created_at": "2025-01-03 00:00:00"},
+    ]))
     q2 = start_decisions_stream(spark, str(landing), ckpt, sink, available_now=True)
     q2.awaitTermination(120)
     assert_rollup_matches()
